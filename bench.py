@@ -296,6 +296,8 @@ def run_bench(sf_dir: str, cpus: int, only: set[str] | None, n_turns: int) -> di
         # seconds spent in the probe gate before the flagship reps
         # (0 = first probe was already healthy or gating disabled)
         "gate_waited_s": gate_waited,
+        # the wait bound in effect (SPARK_GRAFT_BENCH_GATE_S)
+        "gate_s": gate_s,
     }
     spark.stop()
     return result

@@ -168,26 +168,23 @@ def extract_features(
         approx_distinct = REDUCTION_PROFILES[profile]["approx_distinct"]
         good = apply_reduction_profile(good, profile)
 
-    # Shuffle placement vs the Arrow text kernel — adaptive, because
-    # Spark's Python-eval nodes do not advertise output partitioning,
-    # so `repartition → UDF → window` plans TWO exchanges even though
-    # the rows never move between them (verified on the physical plan):
-    #
-    # - wide input (normal at scale: one task per ~128 MB split): run
-    #   the kernel at scan parallelism and let the window's
-    #   ENSURE_REQUIREMENTS exchange be the ONLY shuffle of the pass —
-    #   at 100 TB a second full-width shuffle would roughly double the
-    #   dominant cost;
-    # - narrow input (few/small files — scan coalesces to 1-2 tasks,
-    #   which would run the kernel serially; measured a hard ~16 s
-    #   floor at 1.5M rows): repartition FIRST and accept the extra
-    #   exchange — kernel parallelism dominates locally.
+    # Shuffle placement vs the Arrow text kernel. Wide input already
+    # has scan parallelism, so the kernel runs there and the window's
+    # exchange stays the only shuffle. Narrow input (1-2 scan tasks)
+    # is spread by conv_id first; that repartition carries no count,
+    # so AQE coalesces it and the Python stage gets only as many tasks
+    # as its data fills: each Python task costs a fixed slice of
+    # worker CPU whatever its row count. An explicit num_partitions
+    # pins the count instead.
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     if repartition_before_text is None:
         scan_parts = good.rdd.getNumPartitions()
         repartition_before_text = scan_parts < max(2, n_part // 2)
     if repartition_before_text:
-        good = good.repartition(n_part, "conv_id")
+        if num_partitions:
+            good = good.repartition(num_partitions, "conv_id")
+        else:
+            good = good.repartition("conv_id")
     good = add_text_features(good)
 
     good = W.with_ts_sec(good)

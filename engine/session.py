@@ -8,8 +8,10 @@
   discipline mandated by BASELINE.json input_hint).
 - UTC session timezone so parquet timestamps compare byte-identically
   with the DuckDB oracle.
-- shuffle partitions sized to cores for local mode; on a real cluster
-  this is set per-job (≈2-3× total executor cores).
+- a fixed DEFAULT_SHUFFLE_PARTITIONS (32) unless the caller or
+  SPARK_GRAFT_SHUFFLE overrides it; AQE coalesces shuffles that carry
+  no explicit count. On a real cluster set it per job (≈2-3× total
+  executor cores).
 """
 
 from __future__ import annotations

@@ -125,14 +125,20 @@ def main() -> None:
             print(json.dumps(row.asDict()))
         return
 
+    # pipeline options, shared by batch and incremental mode
+    kwargs = {}
+    if args.session_gap_s is not None:
+        kwargs["session_gap_s"] = args.session_gap_s
+    if args.roll_window_s is not None:
+        kwargs["roll_window_s"] = args.roll_window_s
+    if args.vocab is not None:
+        kwargs["vocab"] = [t for t in args.vocab.split(",") if t]
+
     if args.incremental:
         from engine.runner import run_incremental
 
         io = TableIO(args.warehouse)
         context = spark.read.parquet(args.context) if args.context else None
-        kwargs = {}
-        if args.vocab is not None:
-            kwargs["vocab"] = [t for t in args.vocab.split(",") if t]
         summary = run_incremental(
             spark, io, args.job_id, source_table=args.source_table,
             context=context, **kwargs,
@@ -154,14 +160,6 @@ def main() -> None:
             ap.error("--input or --generate required")
         transcripts = spark.read.parquet(args.input)
         context = spark.read.parquet(args.context) if args.context else None
-
-    kwargs = {}
-    if args.session_gap_s is not None:
-        kwargs["session_gap_s"] = args.session_gap_s
-    if args.roll_window_s is not None:
-        kwargs["roll_window_s"] = args.roll_window_s
-    if args.vocab is not None:
-        kwargs["vocab"] = [t for t in args.vocab.split(",") if t]
 
     io = TableIO(args.warehouse)
     summary = run_resumable(

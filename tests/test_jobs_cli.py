@@ -82,7 +82,8 @@ def test_maintenance_cli(spark, tmp_path, capsys):
 def test_job_incremental_mode(spark, tmp_path, capsys, transcripts_df, context_df):
     """--incremental consumes only newly committed source snapshots:
     first invocation processes snapshot A, second reports no new
-    snapshots, third (after snapshot B lands) processes exactly B."""
+    snapshots, third (after snapshot B lands) processes exactly B.
+    Pipeline options reach the increments as they reach batch mode."""
     from pyspark.sql import functions as F
 
     from engine.tableio import TableIO
@@ -95,17 +96,20 @@ def test_job_incremental_mode(spark, tmp_path, capsys, transcripts_df, context_d
     context_df.write.mode("overwrite").parquet(ctx)
 
     io.append(spark, t_a, "turns", "ingest-a", ts_col="ts")
+    opts = ["--session-gap-s", "600", "--roll-window-s", "120"]
     out = _run_cli(
         ["--incremental", "--warehouse", wh, "--job-id", "inc",
-         "--context", ctx],
+         "--context", ctx, *opts],
         capsys,
     )
     s1 = json.loads(out.strip().splitlines()[-1])
     assert s1["status"] == "committed" and s1["rows"] == t_a.count()
+    meta = io.read_manifest("features", s1["run_id"])["pipeline"]
+    assert meta["session_gap_s"] == 600.0 and meta["roll_window_s"] == 120.0
 
     out = _run_cli(
         ["--incremental", "--warehouse", wh, "--job-id", "inc",
-         "--context", ctx],
+         "--context", ctx, *opts],
         capsys,
     )
     assert json.loads(out.strip().splitlines()[-1])["status"] == "no_new_snapshots"
@@ -113,7 +117,7 @@ def test_job_incremental_mode(spark, tmp_path, capsys, transcripts_df, context_d
     io.append(spark, t_b, "turns", "ingest-b", ts_col="ts")
     out = _run_cli(
         ["--incremental", "--warehouse", wh, "--job-id", "inc",
-         "--context", ctx],
+         "--context", ctx, *opts],
         capsys,
     )
     s3 = json.loads(out.strip().splitlines()[-1])

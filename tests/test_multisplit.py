@@ -118,3 +118,40 @@ def test_pipeline_repartition_branch_on_multisplit(
 
     assert exchanges(f_multi) == 1, _formatted(spark, f_multi)
     assert exchanges(f_single) == exchanges(f_multi) + 1
+
+    # the pre-text repartition carries no partition count, so AQE may
+    # coalesce it: each Python task has a fixed cost, and a tiny input
+    # must not fan the text kernel out to spark.sql.shuffle.partitions
+    plan = _formatted(spark, f_single)
+    assert "REPARTITION_BY_COL" in plan, plan
+    assert "REPARTITION_BY_NUM" not in plan, plan
+    f_single.collect()
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _python_stage_tasks(f_single) < n_part, _formatted(spark, f_single)
+
+
+def _python_stage_tasks(df) -> int:
+    """Task count of the stage running ArrowEvalPython, read from the
+    final AQE plan: the partition count of the shuffle read under it."""
+    root = df._jdf.queryExecution().executedPlan().executedPlan()
+
+    def children(n):
+        if n.nodeName().endswith("QueryStage"):
+            return [n.plan()]
+        ch = n.children()
+        return [ch.apply(i) for i in range(ch.size())]
+
+    def find(n, names):
+        if n.nodeName() in names:
+            return n
+        for c in children(n):
+            hit = find(c, names)
+            if hit is not None:
+                return hit
+        return None
+
+    udf = find(root, {"ArrowEvalPython"})
+    assert udf is not None
+    read = find(udf, {"AQEShuffleRead", "ShuffleQueryStage"})
+    assert read is not None
+    return read.outputPartitioning().numPartitions()
