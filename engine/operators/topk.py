@@ -9,11 +9,11 @@ including the current turn), null/'' filtered, tie-broken
 (count desc, tool asc), padded to arity k by repeating the last
 element (W7; empty stays empty).
 
-The expanding variant is genuinely kernel-shaped (a running
-multiset-rank), so it runs as a grouped Arrow kernel via
-applyInPandas. The whole-conversation (non-expanding) variant is pure
-SQL — `top_tools_final` below — and doubles as the DuckDB-checkable
-formulation.
+The expanding rule lives in one Python step, `top_tools_step`, shared
+by the batch kernel below and the streaming state machine; for a small
+known vocabulary `add_top_tools_vocab` computes the same result in
+codegen. The whole-conversation (non-expanding) variant is pure SQL,
+`top_tools_final`, and doubles as the DuckDB-checkable formulation.
 """
 
 from __future__ import annotations
@@ -26,53 +26,31 @@ from pyspark.sql import types as T
 from engine.schema import TOP_K_TOOLS
 
 
-def top_tools_expanding_py(
-    tools: pd.Series, k: int = TOP_K_TOOLS
-) -> list[list[str]]:
-    """Running top-k over one conversation's tool sequence (already in
-    (ts, turn_idx) order). NOTE: the pandas oracle deliberately does
-    NOT share this function — engine/oracle/features.py carries its own
-    independent implementation so the differential test compares two
-    codebases, not one function with itself (a semantics change here
-    must be mirrored there CONSCIOUSLY, and the parity gate will catch
-    a one-sided edit)."""
-    counts: dict[str, int] = {}
-    out: list[list[str]] = []
-    for tool in tools:
-        if tool is not None and not pd.isna(tool) and tool != "":
-            counts[tool] = counts.get(tool, 0) + 1
-        if counts:
-            ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-            top = [t for t, _ in ranked]
-            while len(top) < k:  # W7 pad: repeat last until arity k
-                top.append(top[-1])
-        else:
-            top = []
-        out.append(top)
-    return out
+def top_tools_step(counts: dict[str, int], tool, k: int = TOP_K_TOOLS) -> list[str]:
+    """Count one turn's `tool` into its conversation's `counts` (in
+    place) and return the running top-k: (count desc, tool asc), padded
+    to arity k by repeating the last tool, [] until a tool is seen.
+    The batch kernel and the streaming state machine both call this.
+    NaN is skipped like null and '': pandas frames in streaming carry
+    it, and NaN is truthy."""
+    if tool is not None and not pd.isna(tool) and tool != "":
+        counts[tool] = counts.get(tool, 0) + 1
+    if not counts:
+        return []
+    top = sorted(counts, key=lambda t: (-counts[t], t))[:k]
+    return top + [top[-1]] * (k - len(top))
 
 
 def add_top_tools_expanding(
-    df: DataFrame,
-    k: int = TOP_K_TOOLS,
-    assume_partitioned: bool = False,
-    strategy: str = "stream",
+    df: DataFrame, k: int = TOP_K_TOOLS, assume_partitioned: bool = False
 ) -> DataFrame:
     """Append `top_tools` (array<string>), the running top-k.
 
-    strategy='stream' (default): mapInPandas over partitions locally
-    sorted by (conv_id, ts, turn_idx), carrying the per-conversation
-    count state across Arrow batch boundaries. One Python call per
-    ~64k-row batch instead of one per conversation — per-group pandas
-    overhead was the single largest cost in the whole pipeline (~25s of
-    a 40s run at 750k rows; the stream kernel removes it). With
-    `assume_partitioned` (upstream already hash-partitioned every
-    conversation into one partition, as the pipeline guarantees) only a
-    local sort is added — no shuffle.
-
-    strategy='grouped': the original groupBy.applyInPandas per-
-    conversation kernel; kept as the differential check (tests compare
-    both) and for callers without a partitioning guarantee.
+    mapInArrow over partitions locally sorted by (conv_id, ts, turn_idx),
+    carrying the count state across Arrow batches: one Python call per
+    batch, not per conversation. With `assume_partitioned` (upstream
+    already put each conversation in one partition) only a local sort
+    is added, no shuffle.
     """
     out_schema = T.StructType(
         list(df.schema.fields)
@@ -80,33 +58,18 @@ def add_top_tools_expanding(
     )
     cols = df.columns
 
-    if strategy == "grouped":
-        def kernel(g: pd.DataFrame) -> pd.DataFrame:
-            g = g.sort_values(["ts", "turn_idx"], kind="mergesort")
-            g["top_tools"] = top_tools_expanding_py(g["tool"], k)
-            return g[cols + ["top_tools"]]
-
-        return df.groupBy("conv_id").applyInPandas(kernel, schema=out_schema)
-
-    if strategy != "stream":
-        raise ValueError(f"unknown top-k strategy: {strategy}")
-
     if not assume_partitioned:
         df = df.repartition("conv_id")
     df = df.sortWithinPartitions("conv_id", "ts", "turn_idx")
 
     def gen(batches):
-        # mapInArrow, NOT mapInPandas: the kernel reads only
-        # (conv_id, tool); the other ~20 columns pass through as raw
-        # Arrow buffers with ZERO conversion. The pandas version
-        # materialized every string cell as a Python object both ways —
-        # measured +12.6 s at 1.5M wide rows for a passthrough kernel;
-        # the Arrow version is ~10× cheaper.
+        # Arrow, not pandas: only (conv_id, tool) are read, the other
+        # columns pass through as raw buffers without conversion
         import pyarrow as pa
 
         list_ty = pa.list_(pa.string())
-        # state carried across batches of ONE partition (the iterator
-        # is per-partition; conversations never span partitions)
+        # state spans the batches of ONE partition; conversations never
+        # span partitions
         cur_conv: object = object()
         counts: dict[str, int] = {}
         for batch in batches:
@@ -115,18 +78,8 @@ def add_top_tools_expanding(
             out: list[list[str]] = []
             for conv, tool in zip(convs, tools):
                 if conv != cur_conv:
-                    cur_conv = conv
-                    counts = {}
-                if tool:  # None and '' both falsy
-                    counts[tool] = counts.get(tool, 0) + 1
-                if counts:
-                    ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-                    top = [t for t, _ in ranked]
-                    while len(top) < k:
-                        top.append(top[-1])
-                else:
-                    top = []
-                out.append(top)
+                    cur_conv, counts = conv, {}
+                out.append(top_tools_step(counts, tool, k))
             yield pa.RecordBatch.from_arrays(
                 list(batch.columns) + [pa.array(out, type=list_ty)],
                 names=cols + ["top_tools"],
@@ -136,29 +89,15 @@ def add_top_tools_expanding(
 
 
 def add_top_tools_vocab(
-    df: DataFrame, k: int = TOP_K_TOOLS, vocab: list[str] | None = None
+    df: DataFrame, vocab: list[str], k: int = TOP_K_TOOLS
 ) -> DataFrame:
-    """Expanding top-k dominant tools with NO Python stage.
-
-    Tool vocabularies are small and bounded (a dozen tools per agent
-    fleet), which unlocks a pure-codegen formulation: one cumulative
-    window count per vocabulary value (all over the ONE shared conv
-    window spec — a single Window node, single sort), then a per-row
-    sort of a |V|-element struct array picks the top k with the
-    (count desc, tool asc) tie-break. Measured: removes the ~9-13 s
-    Arrow IPC round-trip of the kernel strategies at 1.5M wide rows.
-
-    `vocab` defaults to the distinct non-null tools in `df` (one tiny
-    aggregate job). Callers with |V| > ~64 should use the 'stream'
-    kernel instead — the column count grows with |V|.
+    """Expanding top-k dominant tools with no Python stage, for a small
+    known `vocab` (pipeline.discover_tool_vocab finds it): one running
+    count per tool over one shared window, then a per-row sort of a
+    |V|-element struct array picks the top k with the (count desc,
+    tool asc) tie-break. Columns grow with |V|, so callers with more
+    than MAX_VOCAB tools use add_top_tools_expanding.
     """
-    if vocab is None:
-        vocab = [
-            r["tool"]
-            for r in df.filter(
-                F.col("tool").isNotNull() & (F.col("tool") != "")
-            ).select("tool").distinct().collect()
-        ]
     # set(): a duplicated catalog-stat entry would otherwise count the
     # same tool in two _tc columns and repeat it inside top_tools
     vocab = sorted(set(vocab))

@@ -132,7 +132,6 @@ def extract_features(
     context: DataFrame | None = None,
     session_gap_s: float = SESSION_GAP_S,
     roll_window_s: float = ROLL_WINDOW_S,
-    asof_strategy: str = "jvm",
     num_partitions: int | None = None,
     repartition_before_text: bool | None = None,
     vocab: list[str] | None = None,
@@ -176,8 +175,8 @@ def extract_features(
     # as its data fills: each Python task costs a fixed slice of
     # worker CPU whatever its row count. An explicit num_partitions
     # pins the count instead.
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     if repartition_before_text is None:
+        n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
         scan_parts = good.rdd.getNumPartitions()
         repartition_before_text = scan_parts < max(2, n_part // 2)
     if repartition_before_text:
@@ -195,7 +194,7 @@ def extract_features(
     good = good.drop(W.TS_SEC)
 
     if context is not None:
-        good = asof_join(good, context, strict=False, strategy=asof_strategy)
+        good = asof_join(good, context, strict=False)
     else:
         good = good.withColumn("asof_ctx_value", F.lit(None).cast("double"))
         good = good.withColumn("asof_ctx_label", F.lit(None).cast("string"))
@@ -210,26 +209,20 @@ def extract_features(
     if len(vocab) <= MAX_VOCAB:
         good = add_top_tools_vocab(good, vocab=list(vocab))
     else:
-        # assume_partitioned only holds when the upstream plan left each
-        # conversation CONTIGUOUS in one partition: true after the jvm
-        # as-of (windows partition by conv_id), FALSE after the kernel
-        # strategy, whose cogroup keys (_ab, _ac) split a conversation
-        # across kernel_chunks partitions — running the per-partition
-        # expanding count there silently corrupts top_tools (round-3
-        # review finding)
-        conv_contiguous = context is None or asof_strategy == "jvm"
-        good = add_top_tools_expanding(good, assume_partitioned=conv_contiguous)
+        # the windows and the as-of already put each conversation in
+        # one partition (both partition by conv_id)
+        good = add_top_tools_expanding(good, assume_partitioned=True)
 
     features = good.select(*[f.name for f in FEATURE_SCHEMA.fields])
     meta = {
         "engine_version": "0.1.0",
         "session_gap_s": session_gap_s,
         "roll_window_s": roll_window_s,
-        "asof_strategy": asof_strategy,
         "profile": profile,
         "topk_strategy": "vocab" if len(vocab) <= MAX_VOCAB else "stream",
         "vocab_size": len(vocab),
-        "num_partitions": n_part,
+        # None: AQE sizes the shuffles
+        "num_partitions": num_partitions if repartition_before_text else None,
         "repartition_before_text": repartition_before_text,
         "planned_at_epoch_s": t0,
     }

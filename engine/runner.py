@@ -127,13 +127,6 @@ def run_incremental(
             "job_id": job_id, "status": "no_new_snapshots",
             "watermark": watermark, "rows": 0,
         }
-    if "vocab" not in pipeline_kwargs:
-        from engine.pipeline import discover_tool_vocab
-
-        pipeline_kwargs = {
-            **pipeline_kwargs,
-            "vocab": discover_tool_vocab(new_rows),
-        }
     run_id = f"{job_id}-seq{watermark + 1:06d}-{hi:06d}"
     features, errors, meta = extract_features(
         spark, new_rows, context, **pipeline_kwargs

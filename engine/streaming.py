@@ -22,7 +22,7 @@ the caller's. Tests drive them with a file source + `availableNow`
 trigger into a memory sink and compare against the batch engine on the
 same rows (tests/test_streaming.py).
 
-- `stream_sessionize_exact` / `stream_top_tools` (+ `_tws`): custom
+- `stream_sessionize_exact` / `stream_top_tools`: custom
   watermark-buffered state machines emitting BATCH-IDENTICAL per-turn
   session indices and expanding top-k (rows buffer until the watermark
   passes their event time, so the event-time prefix each emission sees
@@ -51,7 +51,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from engine.schema import ROLL_WINDOW_S, SESSION_GAP_S
+from engine.operators.topk import top_tools_step
+from engine.schema import ROLL_WINDOW_S, SESSION_GAP_S, TOP_K_TOOLS
 
 
 def stream_turn_features(df: DataFrame) -> DataFrame:
@@ -370,9 +371,8 @@ def _make_topk_state_fn(k: int):
         """Watermark-buffered running top-k: turns buffer until the
         watermark passes their event time (so the processed prefix is
         the true event-time prefix — arrival order never leaks into the
-        ranking), then emit in (ts, turn_idx) order with the running
-        (count desc, tool asc) top-k after each turn, padded to arity k
-        (identical semantics to operators/topk.py, shared tie-break)."""
+        ranking), then emit in (ts, turn_idx) order with the batch
+        kernel's step, operators/topk.top_tools_step."""
         conv_id = key[0]
         if state.exists:
             p_ts, p_idx, p_tool, c_tool, c_n = state.get
@@ -396,25 +396,15 @@ def _make_topk_state_fn(k: int):
         )
         pending = [p for p in pending if p[0] >= wm_us]
 
-        out_rows = []
-        for pts, pidx, ptool in emit:
-            if ptool is not None and not pd.isna(ptool) and ptool != "":
-                counts[ptool] = counts.get(ptool, 0) + 1
-            if counts:
-                ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-                top = [t for t, _ in ranked]
-                while len(top) < k:
-                    top.append(top[-1])
-            else:
-                top = []
-            out_rows.append(
-                {
-                    "conv_id": conv_id,
-                    "turn_idx": int(pidx),
-                    "ts": pd.Timestamp(pts, unit="us"),
-                    "top_tools": top,
-                }
-            )
+        out_rows = [
+            {
+                "conv_id": conv_id,
+                "turn_idx": int(pidx),
+                "ts": pd.Timestamp(pts, unit="us"),
+                "top_tools": top_tools_step(counts, ptool, k),
+            }
+            for pts, pidx, ptool in emit
+        ]
 
         if pending or counts:
             pending.sort(key=lambda p: (p[0], p[1]))
@@ -452,8 +442,6 @@ def stream_top_tools(
     watermark horizon + one bounded count map (|tools| entries)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from engine.schema import TOP_K_TOOLS
-
     return (
         df.withWatermark("ts", watermark)
         .select("conv_id", "ts", "turn_idx", "tool")
@@ -464,132 +452,6 @@ def stream_top_tools(
             stateStructType=_TOPK_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithState variant (Spark 4 arbitrary-state API)
-# ---------------------------------------------------------------------------
-
-def _tws_classes():
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class TopToolsTWS(StatefulProcessor):
-        """transformWithStateInPandas port of the expanding top-k state
-        machine — same watermark-buffered semantics as
-        `_make_topk_state_fn`, expressed over the Spark 4 typed-state
-        API: pending rows in a ListState, running counts in a
-        ValueState, re-emission driven by REGISTERED EVENT-TIME TIMERS
-        instead of the applyInPandasWithState timeout shim."""
-
-        def __init__(self, k: int):
-            self.k = k
-
-        def init(self, handle):
-            self.handle = handle
-            self.pending = handle.getListState(
-                "pending", "ts_ms long, idx long, tool string"
-            )
-            self.counts = handle.getValueState(
-                "counts", "tools array<string>, ns array<long>"
-            )
-
-        # -- shared emission core ------------------------------------------
-        def _drain(self, conv_id, new_rows, wm):
-            buf = [tuple(r) for r in self.pending.get()] + new_rows
-            cv = self.counts.get() if self.counts.exists() else None
-            counts = dict(zip(cv[0], cv[1])) if cv else {}
-
-            emit = sorted((p for p in buf if p[0] <= wm), key=lambda p: (p[0], p[1]))
-            buf = sorted(
-                (p for p in buf if p[0] > wm), key=lambda p: (p[0], p[1])
-            )
-            out = []
-            for pts, pidx, ptool in emit:
-                if ptool is not None and not pd.isna(ptool) and ptool != "":
-                    counts[ptool] = counts.get(ptool, 0) + 1
-                if counts:
-                    ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[: self.k]
-                    top = [t for t, _ in ranked]
-                    while len(top) < self.k:
-                        top.append(top[-1])
-                else:
-                    top = []
-                out.append(
-                    {
-                        "conv_id": conv_id,
-                        "turn_idx": int(pidx),
-                        "ts": pd.Timestamp(pts, unit="ms"),
-                        "top_tools": top,
-                    }
-                )
-
-            self.pending.clear()
-            if buf:
-                self.pending.put(buf)
-                self.handle.registerTimer(max(buf[0][0], wm + 1))
-            if counts:
-                items = sorted(counts.items())
-                self.counts.update(([t for t, _ in items], [n for _, n in items]))
-            if out:
-                yield pd.DataFrame(
-                    out, columns=[f.name for f in TOPK_OUT_SCHEMA.fields]
-                )
-
-        def handleInputRows(self, key, rows, timerValues):
-            new_rows = []
-            for pdf in rows:
-                new_rows.extend(
-                    zip(
-                        (pdf["ts"].astype("int64") // 1_000_000).tolist(),
-                        pdf["turn_idx"].tolist(),
-                        pdf["tool"].tolist(),
-                    )
-                )
-            yield from self._drain(
-                key[0], new_rows, timerValues.getCurrentWatermarkInMs()
-            )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            yield from self._drain(
-                key[0], [], timerValues.getCurrentWatermarkInMs()
-            )
-
-        def close(self):
-            pass
-
-    return TopToolsTWS
-
-
-def stream_top_tools_tws(
-    df: DataFrame,
-    k: int | None = None,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """`stream_top_tools` on the Spark 4 `transformWithStateInPandas`
-    API (typed ListState/ValueState + registered event-time timers) —
-    the forward-looking surface for custom stateful operators; the
-    applyInPandasWithState variant remains the differential check.
-
-    RUNTIME REQUIREMENTS (not met in this sandbox, so the test
-    env-gates): the TWS python-JVM state protocol needs `protobuf`
-    (absent here — `import google.protobuf` fails) and the RocksDB
-    state store (`spark.sql.streaming.stateStore.providerClass =
-    ...state.RocksDBStateStoreProvider`). On a real cluster both ship
-    with a standard PySpark install."""
-    from engine.schema import TOP_K_TOOLS
-
-    proc = _tws_classes()(k or TOP_K_TOOLS)
-    return (
-        df.withWatermark("ts", watermark)
-        .select("conv_id", "ts", "turn_idx", "tool")
-        .groupBy("conv_id")
-        .transformWithStateInPandas(
-            statefulProcessor=proc,
-            outputStructType=TOPK_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
         )
     )
 

@@ -86,6 +86,9 @@ def main() -> None:
                     "reclamation; keeps resume skipping them), print "
                     "the reclamation summary, exit")
     args = ap.parse_args()
+    if args.vocab is not None and not any(args.vocab.split(",")):
+        # an empty vocab would blank every top_tools row
+        ap.error("--vocab needs at least one tool")
 
     from pyspark.sql import SparkSession
 

@@ -6,11 +6,14 @@ running a job where possible."""
 from __future__ import annotations
 
 import importlib.util
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def _entry():
     spec = importlib.util.spec_from_file_location(
-        "entrymod", "/root/repo/__spark_entry__.py"
+        "entrymod", ROOT / "__spark_entry__.py"
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

@@ -1,5 +1,5 @@
-"""Results invariant to input row order, partition count, and asof
-strategy (SURVEY.md §5.4)."""
+"""Results invariant to input row order and partition count
+(SURVEY.md §5.4)."""
 
 import pandas as pd
 
@@ -30,8 +30,3 @@ def test_partition_count_invariance(spark, transcripts_pdf, context_pdf):
     b = _run(spark, transcripts_pdf, context_pdf, num_partitions=31)
     assert_frames_match(a, b)
 
-
-def test_strategy_differential(spark, transcripts_pdf, context_pdf):
-    a = _run(spark, transcripts_pdf, context_pdf, asof_strategy="jvm")
-    b = _run(spark, transcripts_pdf, context_pdf, asof_strategy="kernel")
-    assert_frames_match(a, b)

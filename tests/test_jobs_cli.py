@@ -8,6 +8,8 @@ from __future__ import annotations
 import json
 import sys
 
+import pytest
+
 
 def _run_cli(argv, capsys):
     from jobs.extract_features_job import main
@@ -77,6 +79,18 @@ def test_maintenance_cli(spark, tmp_path, capsys):
     out = _run_cli(["--warehouse", wh, "--job-id", "compact", "--lineage"], capsys)
     recs = [json.loads(line) for line in out.strip().splitlines()]
     assert recs and all(r["run_id"].startswith("compact-") for r in recs)
+
+
+@pytest.mark.parametrize("vocab", ["", ","])
+def test_job_rejects_empty_vocab(spark, tmp_path, capsys, vocab):
+    """An empty --vocab would blank every top_tools row, so the job
+    refuses it before running."""
+    with pytest.raises(SystemExit):
+        _run_cli(
+            ["--generate", "400", "--warehouse", str(tmp_path / "wh"),
+             "--job-id", "empty-vocab", "--vocab", vocab],
+            capsys,
+        )
 
 
 def test_job_incremental_mode(spark, tmp_path, capsys, transcripts_df, context_df):

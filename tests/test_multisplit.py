@@ -106,6 +106,9 @@ def test_pipeline_repartition_branch_on_multisplit(
     )
     assert m_multi["repartition_before_text"] is False
     assert m_single["repartition_before_text"] is True
+    # no count is pinned on either branch: AQE sizes the shuffles
+    assert m_multi["num_partitions"] is None
+    assert m_single["num_partitions"] is None
 
     # plan shape: the multi-split path must plan exactly ONE exchange
     # (the window's ENSURE_REQUIREMENTS shuffle — no context here, so

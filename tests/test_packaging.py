@@ -6,18 +6,21 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_engine_zip_self_contained(tmp_path):
     out = subprocess.run(
-        [sys.executable, "/root/repo/scripts/package.py"],
+        [sys.executable, str(ROOT / "scripts" / "package.py")],
         check=True, capture_output=True, text=True,
     ).stdout.strip()
     assert out.endswith("engine.zip")
 
     probe = r"""
 import sys
-sys.path = [p for p in sys.path if p not in ("", "/root/repo")]
+sys.path = [p for p in sys.path if p not in ("", %r)]
 sys.path.insert(0, %r)
 import engine
 assert engine.__file__.startswith(%r), engine.__file__
@@ -30,7 +33,7 @@ import engine.operators.quality, engine.operators.skew, engine.operators.topk
 import engine.operators.windows
 import engine.sources.transcript_source
 print("ZIP_IMPORT_OK")
-""" % (out, out)
+""" % (str(ROOT), out, out)
     r = subprocess.run(
         [sys.executable, "-c", probe],
         capture_output=True, text=True, cwd=str(tmp_path),

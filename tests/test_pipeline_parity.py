@@ -7,17 +7,7 @@ from tests.compare import assert_frames_match
 
 
 def test_full_parity_jvm_asof(spark, transcripts_df, context_df, transcripts_pdf, context_pdf):
-    features, errors, _ = extract_features(
-        spark, transcripts_df, context_df, asof_strategy="jvm"
-    )
-    exp = oracle_features(transcripts_pdf, context_pdf)
-    assert_frames_match(features.toPandas(), exp)
-
-
-def test_full_parity_kernel_asof(spark, transcripts_df, context_df, transcripts_pdf, context_pdf):
-    features, _, _ = extract_features(
-        spark, transcripts_df, context_df, asof_strategy="kernel"
-    )
+    features, errors, _ = extract_features(spark, transcripts_df, context_df)
     exp = oracle_features(transcripts_pdf, context_pdf)
     assert_frames_match(features.toPandas(), exp)
 
@@ -26,38 +16,6 @@ def test_parity_without_context(spark, transcripts_df, transcripts_pdf):
     features, _, _ = extract_features(spark, transcripts_df, None)
     exp = oracle_features(transcripts_pdf, None)
     assert_frames_match(features.toPandas(), exp)
-
-
-def test_kernel_asof_with_large_vocab_topk(spark, transcripts_df, context_df):
-    """The kernel as-of splits conversations across cogroup chunks, so
-    the large-vocab expanding top-k must NOT assume conversation-
-    contiguous partitions after it (round-3 review: assume_partitioned
-    ran per-partition counts over chunked conversations, silently
-    corrupting top_tools). Features must match the jvm strategy's."""
-    from engine.pipeline import extract_features
-
-    big_vocab = [f"tool{i:03d}" for i in range(70)] + [
-        "search", "browser", "python", "bash", "calculator", "sql",
-        "retrieval", "editor", "planner", "mailer", "scheduler", "vision",
-    ]
-    fk, _, mk = extract_features(
-        spark, transcripts_df, context_df, vocab=big_vocab,
-        asof_strategy="kernel",
-    )
-    fj, _, mj = extract_features(
-        spark, transcripts_df, context_df, vocab=big_vocab,
-        asof_strategy="jvm",
-    )
-    assert mk["topk_strategy"] == "stream" == mj["topk_strategy"]
-    key = ["conv_id", "turn_idx"]
-    a = fk.select(*key, "top_tools").toPandas().sort_values(key).reset_index(drop=True)
-    b = fj.select(*key, "top_tools").toPandas().sort_values(key).reset_index(drop=True)
-    assert len(a) == len(b)
-    bad = [
-        i for i in range(len(a))
-        if list(a["top_tools"][i]) != list(b["top_tools"][i])
-    ]
-    assert not bad, (len(bad), a.iloc[bad[:3]], b.iloc[bad[:3]])
 
 
 def test_summarize_conversations_pandas_parity(spark, transcripts_df, context_df):

@@ -68,6 +68,30 @@ def test_flagship_plan_shape(spark, transcripts_df, context_df):
     assert counts.get("MapInPandas", 0) == 0
 
 
+def test_flagship_large_vocab_topk_adds_no_exchange(spark, transcripts_df, context_df):
+    """Over MAX_VOCAB tools the top-k runs as the mapInArrow kernel. The
+    windows and the as-of already partition by conv_id, so the kernel
+    asks for no repartition (assume_partitioned=True) and the plan has
+    the vocab plan's Exchange count. Spark would also drop an equal
+    hash repartition by itself, hence the logical-plan check."""
+    from engine.generate import TOOLS
+    from engine.pipeline import MAX_VOCAB, extract_features
+
+    def plan_shape(vocab):
+        f, _e, m = extract_features(
+            spark, transcripts_df, context_df, vocab=vocab,
+            repartition_before_text=False,
+        )
+        n_exchanges = len(re.findall(r"\(\d+\) Exchange\b", _formatted(spark, f)))
+        logical = f._jdf.queryExecution().optimizedPlan().toString()
+        return m["topk_strategy"], n_exchanges, "RepartitionByExpression" in logical
+
+    big = list(TOOLS) + [f"fake_tool_{i}" for i in range(MAX_VOCAB)]
+    strategy, n_vocab, repartitioned = plan_shape(list(TOOLS))
+    assert (strategy, repartitioned) == ("vocab", False)
+    assert plan_shape(big) == ("stream", n_vocab, False)
+
+
 def test_asof_probe_filter_prunes_columns(spark):
     from engine.queries import q_asof_purchase
 

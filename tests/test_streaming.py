@@ -170,44 +170,6 @@ def test_stream_top_tools_matches_batch(spark, transcripts_df, stream_source):
     assert not bad, bad[:5]
 
 
-def test_stream_top_tools_tws_matches_batch(spark, transcripts_df, stream_source):
-    """transformWithStateInPandas variant agrees with the batch kernel
-    (and therefore with the applyInPandasWithState variant)."""
-    import pytest as _pytest
-
-    from engine.operators.topk import add_top_tools_expanding
-    from engine.streaming import stream_top_tools_tws
-
-    sdf = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(stream_source)
-    try:
-        out = stream_top_tools_tws(sdf, watermark="0 seconds")
-        q = (
-            out.writeStream.format("memory")
-            .queryName("topk_tws")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    except Exception as exc:  # pragma: no cover - env-dependent state store
-        _pytest.skip(f"transformWithState unavailable in this runtime: {exc}")
-    got = spark.sql("SELECT conv_id, turn_idx, top_tools FROM topk_tws").toPandas()
-
-    exp = (
-        add_top_tools_expanding(transcripts_df)
-        .select("conv_id", "turn_idx", "top_tools")
-        .toPandas()
-    )
-    assert len(got) > 0.9 * len(exp), (len(got), len(exp))
-    merged = got.merge(exp, on=["conv_id", "turn_idx"], suffixes=("_s", "_b"), how="left")
-    bad = [
-        (r["conv_id"], r["turn_idx"])
-        for _, r in merged.iterrows()
-        if list(r["top_tools_s"]) != list(r["top_tools_b"])
-    ]
-    assert not bad, bad[:5]
-
-
 def test_stream_sessionize_exact_matches_batch(spark, transcripts_df, stream_source):
     """Exact streaming sessionizer emits the batch engine's session
     ids and turn numbers (not just per-session aggregates)."""

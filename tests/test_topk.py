@@ -1,29 +1,37 @@
-"""Top-k dominant tools: expanding kernel semantics + whole-conv SQL
-variant (reference dominant-color contract, SURVEY.md §2.4/2.5)."""
+"""Top-k dominant tools: the expanding step's semantics, both Spark
+formulations against the pandas oracle, and the whole-conv SQL variant
+(reference dominant-color contract, SURVEY.md §2.4/2.5)."""
 
 import pandas as pd
+import pytest
 
 from pyspark.sql import functions as F
 
-from engine.operators.topk import top_tools_expanding_py, top_tools_final
+from engine.operators.topk import top_tools_step, top_tools_final
 from engine.schema import TRANSCRIPT_SCHEMA
+from tests.compare import KEYS, assert_frames_match
+
+
+def _expanding(tools, k=3):
+    counts: dict[str, int] = {}
+    return [top_tools_step(counts, t, k) for t in tools]
 
 
 def test_expanding_semantics():
-    s = pd.Series(["a", None, "b", "b", "", "a", "c", "a"])
-    out = top_tools_expanding_py(s, k=3)
+    out = _expanding(["a", None, "b", "b", "", "a", float("nan"), "c", "a"])
     assert out[0] == ["a", "a", "a"]           # pad repeats last
     assert out[1] == ["a", "a", "a"]           # null ignored
     assert out[2] == ["a", "b", "b"]           # tie 1-1 → count desc, name asc
     assert out[3] == ["b", "a", "a"]           # b=2 > a=1
     assert out[4] == ["b", "a", "a"]           # '' ignored
     assert out[5] == ["a", "b", "b"]           # tie 2-2 → name asc
-    assert out[6] == ["a", "b", "c"]
-    assert out[7] == ["a", "b", "c"]           # a=3,b=2,c=1
+    assert out[6] == ["a", "b", "b"]           # NaN ignored
+    assert out[7] == ["a", "b", "c"]
+    assert out[8] == ["a", "b", "c"]           # a=3,b=2,c=1
 
 
 def test_empty_stays_empty():
-    assert top_tools_expanding_py(pd.Series([None, ""]), k=3) == [[], []]
+    assert _expanding([None, "", float("nan")]) == [[], [], []]
 
 
 def test_final_topk_matches_pandas(spark, transcripts_df, transcripts_pdf):
@@ -49,38 +57,36 @@ def test_final_topk_matches_pandas(spark, transcripts_df, transcripts_pdf):
     )
 
 
-def test_stream_equals_grouped_strategy(spark, transcripts_df):
-    """Differential: the mapInPandas stream kernel must agree with the
-    per-group applyInPandas kernel on every row."""
-    from engine.pipeline import add_text_features
+@pytest.fixture(scope="module")
+def valid_turns(spark, transcripts_pdf):
+    """The rows the oracle ranks (quarantined rows dropped), as Spark
+    input, and the oracle's independent expanding top-k over them."""
+    from engine.oracle.features import oracle_features, oracle_quarantine_mask
+
+    valid = transcripts_pdf.loc[~oracle_quarantine_mask(transcripts_pdf)]
+    exp = oracle_features(transcripts_pdf, None)[KEYS + ["top_tools"]]
+    return spark.createDataFrame(valid, schema=TRANSCRIPT_SCHEMA), exp
+
+
+def test_stream_equals_grouped_strategy(valid_turns):
+    """Differential: the mapInArrow stream kernel agrees on every row
+    with the oracle's per-conversation loop."""
     from engine.operators.topk import add_top_tools_expanding
 
-    base = add_text_features(transcripts_df)
-    a = add_top_tools_expanding(base, strategy="stream").select(
-        "conv_id", "ts", "turn_idx", "top_tools"
-    )
-    b = add_top_tools_expanding(base, strategy="grouped").select(
-        "conv_id", "ts", "turn_idx", "top_tools"
-    )
-    pa = a.toPandas().sort_values(["conv_id", "ts", "turn_idx"]).reset_index(drop=True)
-    pb = b.toPandas().sort_values(["conv_id", "ts", "turn_idx"]).reset_index(drop=True)
-    assert pa["top_tools"].map(list).equals(pb["top_tools"].map(list))
+    df, exp = valid_turns
+    got = add_top_tools_expanding(df).select(*KEYS, "top_tools").toPandas()
+    assert_frames_match(got, exp)
 
 
-def test_vocab_equals_grouped_strategy(spark, transcripts_df):
-    """Differential: the pure-codegen vocab formulation must agree with
-    the per-group kernel on every row."""
-    from engine.pipeline import add_text_features
-    from engine.operators.topk import add_top_tools_expanding, add_top_tools_vocab
+def test_vocab_equals_grouped_strategy(valid_turns, transcripts_pdf):
+    """Differential: the pure-codegen vocab formulation agrees on every
+    row with the oracle's per-conversation loop."""
+    from engine.operators.topk import add_top_tools_vocab
 
-    base = add_text_features(transcripts_df)
-    a = add_top_tools_vocab(base).select("conv_id", "ts", "turn_idx", "top_tools")
-    b = add_top_tools_expanding(base, strategy="grouped").select(
-        "conv_id", "ts", "turn_idx", "top_tools"
-    )
-    pa_ = a.toPandas().sort_values(["conv_id", "ts", "turn_idx"]).reset_index(drop=True)
-    pb = b.toPandas().sort_values(["conv_id", "ts", "turn_idx"]).reset_index(drop=True)
-    assert pa_["top_tools"].map(list).equals(pb["top_tools"].map(list))
+    df, exp = valid_turns
+    vocab = [t for t in transcripts_pdf["tool"].dropna().unique() if t]
+    got = add_top_tools_vocab(df, vocab=vocab).select(*KEYS, "top_tools").toPandas()
+    assert_frames_match(got, exp)
 
 
 def test_rolling_approx_distinct_tolerance(spark, transcripts_df):
