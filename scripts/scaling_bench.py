@@ -20,6 +20,7 @@ import argparse
 import json
 import os
 import sys
+from pathlib import Path
 
 # Executor-memory sizing (the brief's "size partitions to fit in
 # executor memory"): the library default driver heap (8g) SPILLS on
@@ -31,7 +32,7 @@ import sys
 os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def run_once(cores: int, tpath: str, cpath: str, shuffle: int = 32,

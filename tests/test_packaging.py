@@ -4,6 +4,7 @@ root REMOVED from sys.path imports every engine module from the zip."""
 
 from __future__ import annotations
 
+import re
 import subprocess
 import sys
 from pathlib import Path
@@ -40,3 +41,16 @@ print("ZIP_IMPORT_OK")
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert "ZIP_IMPORT_OK" in r.stdout
+
+
+def test_scripts_resolve_checkout_from_file():
+    """Scripts find the engine relative to themselves, never through a
+    hard-coded checkout path: run from an exported copy, they must
+    import that copy's engine."""
+    literal_path = re.compile(r"""sys\.path\.(insert|append)\([^)]*["']/""")
+    offenders = [
+        p.name
+        for p in sorted((ROOT / "scripts").rglob("*.py"))
+        if str(ROOT) in p.read_text() or literal_path.search(p.read_text())
+    ]
+    assert not offenders, offenders

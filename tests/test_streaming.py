@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -33,6 +35,20 @@ def _run_available_now(sdf, name):
     )
     q.awaitTermination(300)
     return name
+
+
+def _run_append(sdf, name):
+    # append mode: the stateful folds emit each row once, when the
+    # watermark makes it final; returns the finished query
+    q = (
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    return q
 
 
 def test_stream_sessionize_matches_batch(spark, transcripts_df, stream_source):
@@ -100,14 +116,7 @@ def test_stream_asof_matches_batch(spark, transcripts_df, context_df, tmp_path_f
     sp = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(tpath)
     sc = spark.readStream.schema(CONTEXT_SCHEMA).parquet(cpath)
     out = stream_asof(sp, sc, watermark="0 seconds")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("asof_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    _run_append(out, "asof_stream")
     got = spark.sql(
         "SELECT conv_id, turn_idx, asof_ctx_value, asof_ctx_label FROM asof_stream"
     ).toPandas()
@@ -141,14 +150,7 @@ def test_stream_top_tools_matches_batch(spark, transcripts_df, stream_source):
 
     sdf = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(stream_source)
     out = stream_top_tools(sdf, watermark="0 seconds")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("topk_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    _run_append(out, "topk_stream")
     got = spark.sql(
         "SELECT conv_id, turn_idx, top_tools FROM topk_stream"
     ).toPandas()
@@ -178,14 +180,7 @@ def test_stream_sessionize_exact_matches_batch(spark, transcripts_df, stream_sou
 
     sdf = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(stream_source)
     out = stream_sessionize_exact(sdf, gap_s=SESSION_GAP_S, watermark="0 seconds")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sess_exact")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    _run_append(out, "sess_exact")
     got = spark.sql(
         "SELECT conv_id, turn_idx, session_id, sess_turn_no FROM sess_exact"
     ).toPandas()
@@ -219,14 +214,7 @@ def test_stream_funnel_matches_batch(spark, tmp_path_factory):
 
     sdf = spark.readStream.schema(ev.schema).parquet(path)
     out = stream_funnel_steps(sdf, gap_s=1800.0, watermark="0 seconds")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("funnel_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    _run_append(out, "funnel_stream")
     got = spark.sql("SELECT * FROM funnel_stream").toPandas()
 
     exp = (
@@ -415,3 +403,190 @@ def test_stream_funnel_state_survives_restart(spark, tmp_path):
     for col in ("n_events", "step_view", "step_view_click", "step_full"):
         same = merged[f"{col}_s"] == merged[f"{col}_b"]
         assert same.all(), merged.loc[~same].head()
+
+
+def _write_files(path, frames, schema):
+    """One parquet file per pandas frame, modification times increasing,
+    so a maxFilesPerTrigger=1 file source reads one frame per
+    micro-batch, in list order."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    os.makedirs(path, exist_ok=True)
+    arrow_schema = to_arrow_schema(schema)
+    for i, pdf in enumerate(frames):
+        f = os.path.join(path, f"part-{i:03d}.parquet")
+        table = pa.Table.from_pandas(
+            pdf[schema.fieldNames()], schema=arrow_schema, preserve_index=False
+        )
+        pq.write_table(table, f)
+        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+    return path
+
+
+def _norm(v):
+    if isinstance(v, (list, np.ndarray)):
+        return tuple(v)
+    return None if pd.isna(v) else v
+
+
+def _assert_emitted_match_batch(got, exp, key, cols, min_cov):
+    """Every emitted row equals the batch row with the same key, no key
+    is emitted twice, and at least `min_cov` of the batch rows emit."""
+    assert len(got) >= min_cov * len(exp), (len(got), len(exp))
+    assert not got.duplicated(key).any(), got[got.duplicated(key)].head()
+    merged = got.merge(exp, on=key, suffixes=("_s", "_b"), how="left")
+    assert len(merged) == len(got)
+    for col in cols:
+        same = pd.Series(
+            [_norm(s) == _norm(b) for s, b in zip(merged[f"{col}_s"], merged[f"{col}_b"])]
+        )
+        assert same.all(), merged.loc[~same, key + [f"{col}_s", f"{col}_b"]].head()
+
+
+def test_stream_folds_multi_epoch_match_batch(
+    spark, transcripts_pdf, context_pdf, transcripts_df, context_df, tmp_path
+):
+    """Event-time-sliced files (ts quartiles), rows shuffled within each,
+    one file per micro-batch: the folds' carried state (count map,
+    session counter, as-of floor) must survive between micro-batches
+    for every emitted row to equal the batch result."""
+    from engine.operators.asof import asof_join
+    from engine.operators.core import sessionize
+    from engine.operators.topk import add_top_tools_expanding
+    from engine.schema import CONTEXT_SCHEMA
+    from engine.streaming import (
+        stream_asof,
+        stream_sessionize_exact,
+        stream_top_tools,
+    )
+
+    edges = [pd.Timestamp.min, *transcripts_pdf["ts"].quantile([0.25, 0.5, 0.75]),
+             pd.Timestamp.max]
+
+    def slices(pdf, ts):
+        return [
+            pdf[(pdf[ts] > lo) & (pdf[ts] <= hi)].sample(frac=1.0, random_state=i)
+            for i, (lo, hi) in enumerate(zip(edges, edges[1:]))
+        ]
+
+    tpath = _write_files(
+        str(tmp_path / "t"), slices(transcripts_pdf, "ts"), TRANSCRIPT_SCHEMA
+    )
+    cpath = _write_files(
+        str(tmp_path / "c"), slices(context_pdf, "event_ts"), CONTEXT_SCHEMA
+    )
+
+    def read(path, schema):
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(path)
+        )
+
+    key = ["conv_id", "turn_idx"]
+    cases = {
+        "top_tools": (
+            stream_top_tools(read(tpath, TRANSCRIPT_SCHEMA), watermark="0 seconds"),
+            add_top_tools_expanding(transcripts_df),
+            ["top_tools"],
+            0.9,
+        ),
+        "sessionize_exact": (
+            stream_sessionize_exact(
+                read(tpath, TRANSCRIPT_SCHEMA), gap_s=SESSION_GAP_S,
+                watermark="0 seconds",
+            ),
+            sessionize(transcripts_df, "conv_id", "ts", "turn_idx", SESSION_GAP_S,
+                       seq_col="sess_turn_no"),
+            ["session_id", "sess_turn_no"],
+            0.9,
+        ),
+        # two streams: the watermark is the slower stream's, so more
+        # probes are withheld at the end
+        "asof": (
+            stream_asof(
+                read(tpath, TRANSCRIPT_SCHEMA), read(cpath, CONTEXT_SCHEMA),
+                watermark="0 seconds",
+            ),
+            asof_join(transcripts_df, context_df, strict=False, strategy="jvm",
+                      payload=["ctx_value", "ctx_label"]),
+            ["asof_ctx_value", "asof_ctx_label"],
+            0.7,
+        ),
+    }
+    for name, (sdf, batch, cols, min_cov) in cases.items():
+        q = _run_append(sdf, f"multi_epoch_{name}")
+        # four data micro-batches plus the final watermark-advance one
+        assert q.lastProgress["batchId"] >= 4, (name, q.lastProgress["batchId"])
+        got = spark.sql(f"SELECT * FROM {q.name}").toPandas()[key + cols]
+        exp = batch.select(*key, *cols).toPandas()
+        _assert_emitted_match_batch(got, exp, key, cols, min_cov)
+
+
+def test_stream_row_at_watermark_never_reaches_fold(spark, tmp_path):
+    """Spark's late filter drops ts <= the previous micro-batch's
+    watermark, the last one a fold saw. Conv A's turn 1 at exactly 100 s
+    arrives one batch after the watermark reached 100 s: it never
+    reaches the state function, and every emitted row equals the batch
+    result on the rows that did (turn 2, also at 100 s, came earlier)."""
+    from engine.operators.core import sessionize
+    from engine.operators.topk import add_top_tools_expanding
+    from engine.streaming import stream_sessionize_exact, stream_top_tools
+
+    t0 = pd.Timestamp("2024-01-01")
+
+    def turns(*rows):
+        return pd.DataFrame(
+            [(c, i, "user", "t", tool, t0 + pd.Timedelta(seconds=s))
+             for c, i, tool, s in rows],
+            columns=TRANSCRIPT_SCHEMA.fieldNames(),
+        )
+
+    files = [
+        turns(("A", 0, "x", 0), ("B", 0, "x", 50)),
+        turns(("A", 2, "z", 100)),
+        turns(("C", 0, "x", 100)),  # this batch's watermark: 100 s
+        turns(("A", 1, "y", 100), ("D", 0, "x", 200)),  # A turn AT it
+    ]
+    path = _write_files(str(tmp_path / "t"), files, TRANSCRIPT_SCHEMA)
+    reached = spark.createDataFrame(
+        pd.concat(files).query("not (conv_id == 'A' and turn_idx == 1)"),
+        TRANSCRIPT_SCHEMA,
+    )
+
+    key = ["conv_id", "turn_idx"]
+    cases = {
+        "top_tools": (
+            stream_top_tools, add_top_tools_expanding(reached), ["top_tools"],
+        ),
+        "sessionize_exact": (
+            stream_sessionize_exact,
+            sessionize(reached, "conv_id", "ts", "turn_idx", SESSION_GAP_S,
+                       seq_col="sess_turn_no"),
+            ["session_id", "sess_turn_no"],
+        ),
+    }
+    for name, (op, batch, cols) in cases.items():
+        sdf = (
+            spark.readStream.schema(TRANSCRIPT_SCHEMA)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(path)
+        )
+        q = _run_append(op(sdf, watermark="0 seconds"), f"at_wm_{name}")
+        dropped = sum(
+            s["numRowsDroppedByWatermark"]
+            for p in q.recentProgress
+            for s in p["stateOperators"]
+        )
+        assert dropped == 1, (name, dropped)
+        got = spark.sql(f"SELECT * FROM {q.name}").toPandas()[key + cols]
+        # D's turn at 200 s is the last event, so no watermark passes it
+        assert sorted(zip(got["conv_id"], got["turn_idx"])) == [
+            ("A", 0), ("A", 2), ("B", 0), ("C", 0)
+        ], name
+        exp = batch.select(*key, *cols).toPandas()
+        _assert_emitted_match_batch(got, exp, key, cols, min_cov=0.8)
