@@ -41,8 +41,10 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
+
+from engine.operators.core import CUM, q
 
 
 def asof_join(
@@ -93,57 +95,32 @@ def _asof_union_tag(
     prefix: str,
 ) -> DataFrame:
     # null event times are never admissible; see module docstring
-    context = context.filter(F.col(ctx_ts).isNotNull())
-    # Tag: within equal ts, context sorts BEFORE probe for <= semantics
-    # (so an exactly-coincident event is visible), AFTER it for strict <.
-    ctx_side, probe_side = (0, 1) if not strict else (1, 0)
+    ctx = context.where(f"{q(ctx_ts)} IS NOT NULL").selectExpr(
+        q(on),
+        f"{q(ctx_ts)} AS {q(probe_ts)}",
+        "0 AS _side",
+        f"CAST({q(ctx_idx)} AS BIGINT) AS _ev_idx",
+        f"struct({', '.join(map(q, payload))}) AS _ctx",
+    )
+    # each side's missing columns become typed nulls: a probe row is the
+    # one with a null _side
+    unioned = ctx.unionByName(probe, allowMissingColumns=True)
 
-    probe_cols = probe.columns
-    payload_struct = T.StructType(
-        [T.StructField(c, context.schema[c].dataType) for c in payload]
-    )
-    ctx = context.select(
-        F.col(on),
-        F.col(ctx_ts).alias(probe_ts),
-        F.lit(ctx_side).alias("_side"),
-        F.col(ctx_idx).cast("long").alias("_ev_idx"),
-        F.struct(*payload).alias("_ctx"),
-        *[
-            F.lit(None).cast(probe.schema[c].dataType).alias(c)
-            for c in probe_cols
-            if c not in (on, probe_ts)
-        ],
-    )
-    prb = probe.select(
-        on,
-        probe_ts,
-        F.lit(probe_side).alias("_side"),
-        F.lit(None).cast("long").alias("_ev_idx"),
-        F.lit(None).cast(payload_struct).alias("_ctx"),
-        *[c for c in probe_cols if c not in (on, probe_ts)],
-    )
-    unioned = ctx.unionByName(prb)
-
-    # Total order: (ts, side, ctx_idx). Context rows carry a non-null
+    # Total order: (ts, side, ctx_idx). Within equal ts, context sorts
+    # BEFORE probe for <= semantics (so an exactly-coincident event is
+    # visible), AFTER it for strict <. Context rows carry a non-null
     # _ctx struct; the cumulative last(_ctx, ignorenulls) is therefore the
     # latest admissible context row AS A WHOLE (struct-ffill — per-column
     # ffill would wrongly resurrect an older row's non-null payload).
     w = (
-        Window.partitionBy(on)
-        .orderBy(
-            F.col(probe_ts).asc(),
-            F.col("_side").asc(),
-            F.col("_ev_idx").asc_nulls_last(),
-        )
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        f"OVER (PARTITION BY {q(on)} ORDER BY {q(probe_ts)}, "
+        f"_side NULLS {'FIRST' if strict else 'LAST'}, _ev_idx ASC NULLS LAST {CUM})"
     )
-    matched = F.last("_ctx", ignorenulls=True).over(w)
     return (
-        unioned.withColumn("_m", matched)
-        .filter(F.col("_side") == probe_side)
-        .select(
-            *probe_cols,
-            *[F.col(f"_m.{c}").alias(prefix + c) for c in payload],
+        unioned.selectExpr("*", f"last(_ctx, true) {w} AS _m")
+        .where("_side IS NULL")
+        .selectExpr(
+            *map(q, probe.columns), *[f"_m.{q(c)} AS {q(prefix + c)}" for c in payload]
         )
     )
 

@@ -4,11 +4,77 @@ The transcript pipeline binds these to (conv_id, ts, turn_idx); the
 driver-table queries bind them to (user_id, ts, event_id). One
 implementation, two surfaces — every operator shuffles once on the
 entity key and computes inside whole-stage codegen.
+
+The window operators are declared as SQL expression text in *layers*
+(`Layer`: output column → expression; a later layer may read an
+earlier one's columns) and applied with one `selectExpr` per layer
+(`with_layers`). A caller that needs several families zips them by
+depth (`merge_layers`) so Catalyst puts every window of one spec into
+one Window operator, and the plan is built in a few analysed calls
+instead of one per column. Only code-side identifiers and constants
+become SQL text; values from the data go in as Column literals (Spark
+substitutes `${...}` even inside SQL string literals).
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+Layer = dict[str, str]
+
+CUM = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+NEW_SESS = "_new_sess"  # 1 on a session's first row, else 0
+
+
+def q(name: str) -> str:
+    """Backtick-quoted identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def num(x) -> str:
+    """SQL literal of a code-side number, typed as F.lit types it
+    (a bare `0.5` would parse as DECIMAL)."""
+    if isinstance(x, float):
+        return f"{float(x)!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+    return str(int(x))
+
+
+def over(entity: str, ts: str, idx: str, frame: str = "") -> str:
+    """OVER clause of the one (entity) × (ts, idx) order every
+    operator shares."""
+    return f"OVER (PARTITION BY {q(entity)} ORDER BY {q(ts)}, {q(idx)} {frame})"
+
+
+def with_layers(df: DataFrame, layers: list[Layer], drop: list[str] = ()) -> DataFrame:
+    """Apply `layers` in order, one selectExpr each, with withColumn's
+    replace-in-place-else-append rule. The last layer also drops
+    `drop` and the `_`-prefixed columns the earlier layers introduced."""
+    cols = df.columns
+    temps = {c for layer in layers[:-1] for c in layer if c.startswith("_") and c not in cols}
+    for i, layer in enumerate(layers):
+        gone = set(drop) | temps if i == len(layers) - 1 else set()
+        keep = [c for c in cols if c not in gone or c in layer]
+        new = [c for c in layer if c not in cols]
+        exprs = [f"{layer[c]} AS {q(c)}" for c in new]
+        if len(keep) < len(cols) or len(new) < len(layer):
+            # a drop or a replacement names every column (each name is
+            # a py4j round trip, so "*" where it can)
+            exprs = [f"{layer[c]} AS {q(c)}" if c in layer else q(c) for c in keep] + exprs
+        else:
+            exprs.insert(0, "*")
+        df = df.selectExpr(*exprs)
+        cols = keep + new
+    return df
+
+
+def merge_layers(*families: list[Layer]) -> list[Layer]:
+    """Zip families by dependency depth into one layer per depth."""
+    return [
+        {k: v for fam in families if i < len(fam) for k, v in fam[i].items()}
+        for i in range(max(map(len, families)))
+    ]
 
 
 def order_cols(ts: str, idx: str) -> list[Column]:
@@ -19,13 +85,7 @@ def entity_window(entity: str, ts: str, idx: str) -> Window:
     return Window.partitionBy(entity).orderBy(*order_cols(ts, idx))
 
 
-def cum_frame(entity: str, ts: str, idx: str):
-    return entity_window(entity, ts, idx).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-
-
-def ts_seconds(ts: str) -> Column:
+def ts_seconds_sql(ts: str) -> str:
     """Timestamp → epoch seconds as double (µs-exact).
 
     TIMESTAMP_NTZ (how Spark 4 reads naive parquet timestamps) cannot
@@ -33,13 +93,35 @@ def ts_seconds(ts: str) -> Column:
     engine's pinned UTC session timezone this interprets naive values
     as UTC instants, matching DuckDB's epoch_us().
     """
-    return F.col(ts).cast("timestamp").cast("double")
+    return f"CAST(CAST({q(ts)} AS TIMESTAMP) AS DOUBLE)"
 
 
-def add_gap_prev(df: DataFrame, entity: str, ts: str, idx: str, out: str = "gap_prev_s") -> DataFrame:
-    w = entity_window(entity, ts, idx)
-    sec = ts_seconds(ts)
-    return df.withColumn(out, sec - F.lag(sec).over(w))
+def ts_seconds(ts: str) -> Column:
+    return F.expr(ts_seconds_sql(ts))
+
+
+def sessionize_layers(
+    entity: str,
+    ts: str,
+    idx: str,
+    gap_s: float,
+    session_col: str = "session_id",
+    seq_col: str | None = "sess_seq",
+    strict_boundary: bool = False,
+) -> list[Layer]:
+    """Layers of `sessionize`; the first also holds NEW_SESS (and the
+    row number `_rn` when `seq_col` is asked for)."""
+    w, cum = over(entity, ts, idx), over(entity, ts, idx, CUM)
+    sec = ts_seconds_sql(ts)
+    gap = f"({sec} - lag({sec}) {w})"
+    breaks = f"{gap} {'>=' if strict_boundary else '>'} {num(gap_s)}"
+    first = {NEW_SESS: f"CASE WHEN {gap} IS NULL OR {breaks} THEN 1 ELSE 0 END"}
+    second = {session_col: f"CAST(sum({NEW_SESS}) {cum} - 1 AS INT)"}
+    if seq_col:
+        first["_rn"] = f"row_number() {w}"
+        start_rn = f"last(CASE WHEN {NEW_SESS} = 1 THEN _rn END, true) {cum}"
+        second[seq_col] = f"CAST(_rn - {start_rn} + 1 AS INT)"
+    return [first, second]
 
 
 def sessionize(
@@ -64,40 +146,23 @@ def sessionize(
     row_number − row_number-at-session-start + 1 instead of a
     row_number over (entity, session), which would force a second sort
     per partition (measurably expensive at scale)."""
-    w = entity_window(entity, ts, idx)
-    cum = cum_frame(entity, ts, idx)
-    sec = ts_seconds(ts)
-    gap = sec - F.lag(sec).over(w)
-    breaks = (gap >= gap_s) if strict_boundary else (gap > gap_s)
-    df = df.withColumn(
-        "_new_sess",
-        F.when(gap.isNull() | breaks, 1).otherwise(0),
+    return with_layers(
+        df,
+        sessionize_layers(entity, ts, idx, gap_s, session_col, seq_col, strict_boundary),
     )
-    df = df.withColumn(
-        session_col, (F.sum("_new_sess").over(cum) - F.lit(1)).cast("int")
-    )
-    if seq_col:
-        df = df.withColumn("_rn", F.row_number().over(w))
-        start_rn = F.last(
-            F.when(F.col("_new_sess") == 1, F.col("_rn")), ignorenulls=True
-        ).over(cum)
-        df = df.withColumn(seq_col, (F.col("_rn") - start_rn + 1).cast("int")).drop(
-            "_rn"
-        )
-    return df.drop("_new_sess")
 
 
-def ffill(
-    df: DataFrame, entity: str, ts: str, idx: str, src: Column | str, out: str
-) -> DataFrame:
-    """Forward-fill: last non-null value of `src` at or before this row."""
-    cum = cum_frame(entity, ts, idx)
-    return df.withColumn(out, F.last(src, ignorenulls=True).over(cum))
+def ffill_expr(entity: str, ts: str, idx: str, src: str) -> str:
+    """Last non-null value of SQL expression `src` at or before this row."""
+    return f"last({src}, true) {over(entity, ts, idx, CUM)}"
 
 
-def bfill(
-    df: DataFrame, entity: str, ts: str, idx: str, src: Column | str, out: str
-) -> DataFrame:
+def ffill(df: DataFrame, entity: str, ts: str, idx: str, src: str, out: str) -> DataFrame:
+    """Forward-fill of `src` (SQL expression text; a column name is one)."""
+    return with_layers(df, [{out: ffill_expr(entity, ts, idx, src)}])
+
+
+def bfill(df: DataFrame, entity: str, ts: str, idx: str, src: str, out: str) -> DataFrame:
     """Backfill: first non-null value of `src` at or after this row.
 
     NOTE on leakage: unlike ffill, a backfilled column looks FORWARD in
@@ -105,19 +170,40 @@ def bfill(
     'backfill of tool and role context'), never a feature for the row's
     own timestamp. Callers own that discipline; the operator shares the
     one (entity)×(ts, idx) window spec (reversed frame, same sort)."""
-    fut = entity_window(entity, ts, idx).rowsBetween(
-        Window.currentRow, Window.unboundedFollowing
-    )
-    return df.withColumn(out, F.first(src, ignorenulls=True).over(fut))
+    fut = over(entity, ts, idx, "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING")
+    return with_layers(df, [{out: f"first({src}, true) {fut}"}])
 
 
-def lag_lead(
-    df: DataFrame, entity: str, ts: str, idx: str, src: str, n: int = 1
-) -> DataFrame:
-    w = entity_window(entity, ts, idx)
-    return df.withColumn(f"lag_{src}", F.lag(src, n).over(w)).withColumn(
-        f"lead_{src}", F.lead(src, n).over(w)
+def _range_frame(ts: str, window_s: float, order_col: str | None) -> tuple[str, int]:
+    """(order key SQL, integral bound) of the RANGE frame [ts - window_s, ts].
+
+    Fractional `window_s` is honored at millisecond precision by
+    ordering over a ms-scaled long key (rangeBetween bounds are
+    integral) — it used to truncate to whole seconds silently
+    (round-3 review finding)."""
+    order = q(order_col) if order_col else ts_seconds_sql(ts)
+    if float(window_s) == int(window_s):
+        return order, int(window_s)
+    # floor(x*1000 + 0.5): ONE explicit rounding rule shared with the
+    # oracle mirror (engine/oracle/features.py). HALF_UP round vs
+    # np.round (half-to-even) disagree on exact half-millisecond
+    # boundaries, which would flip window membership between engine
+    # and oracle. Epoch seconds are nonnegative, so floor(x+0.5)
+    # == HALF_UP here.
+    return f"CAST(floor({order} * 1000 + 0.5D) AS BIGINT)", int(round(float(window_s) * 1000))
+
+
+def rolling_range_layer(
+    entity: str, ts: str, window_s: float, aggs: dict[str, str], order_col: str | None = None
+) -> Layer:
+    """Layer of `rolling_range`: every aggregate over ONE window spec,
+    so Catalyst evaluates them in one Window operator."""
+    okey, bound = _range_frame(ts, window_s, order_col)
+    w = (
+        f"OVER (PARTITION BY {q(entity)} ORDER BY {okey} "
+        f"RANGE BETWEEN {bound} PRECEDING AND CURRENT ROW)"
     )
+    return {out: f"{agg} {w}" for out, agg in aggs.items()}
 
 
 def rolling_range(
@@ -125,46 +211,21 @@ def rolling_range(
     entity: str,
     ts: str,
     window_s: float,
-    aggs: dict[str, Column],
+    aggs: dict[str, str | Column],
     order_col: str | None = None,
 ) -> DataFrame:
     """Event-time RANGE frame [ts - window_s, ts] (inclusive, with
     ts-peers — the `ts' <= ts` leakage rule). `aggs` maps output column
-    name → aggregate expression.
-
-    All aggregates are evaluated over ONE window spec in ONE select:
-    adding them via separate withColumn calls creates per-agg copies of
-    the order expression, which Catalyst cannot unify — the plan then
-    carries one Sort per aggregate (measured: 3 extra per-partition
-    sorts in the flagship pipeline). Pass `order_col` when the epoch-
-    seconds column is already materialized upstream.
-
-    Fractional `window_s` is honored at millisecond precision by
-    ordering over a ms-scaled long key (rangeBetween bounds are
-    integral) — it used to truncate to whole seconds silently
-    (round-3 review finding)."""
-    order = F.col(order_col) if order_col else ts_seconds(ts)
-    if float(window_s) == int(window_s):
-        bound, okey = int(window_s), order
-    else:
-        bound = int(round(float(window_s) * 1000))
-        # floor(x*1000 + 0.5): ONE explicit rounding rule shared with the
-        # oracle mirror (engine/oracle/features.py). F.round (HALF_UP) vs
-        # np.round (half-to-even) disagree on exact half-millisecond
-        # boundaries, which would flip window membership between engine
-        # and oracle. Epoch seconds are nonnegative, so floor(x+0.5)
-        # == HALF_UP here.
-        okey = F.floor(order * 1000 + F.lit(0.5)).cast("long")
-    wr = (
-        Window.partitionBy(entity)
-        .orderBy(okey)
-        .rangeBetween(-bound, Window.currentRow)
-    )
-    # withColumn-style replace-on-collision: pre-existing columns whose
-    # names collide with aggs keys are dropped, not duplicated
+    name → SQL aggregate text (or an aggregate Column). Pass `order_col`
+    when the epoch-seconds column is already materialized upstream."""
+    if all(isinstance(a, str) for a in aggs.values()):
+        return with_layers(df, [rolling_range_layer(entity, ts, window_s, aggs, order_col)])
+    okey, bound = _range_frame(ts, window_s, order_col)
+    w = Window.partitionBy(entity).orderBy(F.expr(okey)).rangeBetween(-bound, Window.currentRow)
     keep = [c for c in df.columns if c not in aggs]
     return df.select(
-        *keep, *[expr.over(wr).alias(out) for out, expr in aggs.items()]
+        *keep,
+        *[(F.expr(a) if isinstance(a, str) else a).over(w).alias(o) for o, a in aggs.items()],
     )
 
 

@@ -10,51 +10,40 @@ severity); good rows proceed untouched. Codes per FIXTURES.md §4.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
+from engine.operators.core import num
 from engine.schema import MAX_TEXT_LEN, ROLE_DOMAIN
+
+
+def _s(text: str) -> str:
+    """SQL string literal of a code-side constant."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
 
 # (code, predicate-of-failure, message) — first failing gate wins,
 # mirroring the reference's sequential validator ordering.
-def _gates():
-    return [
-        (
-            "MISSING_KEY",
-            F.col("conv_id").isNull() | F.col("ts").isNull(),
-            "null conv_id or ts",
-        ),
-        (
-            "INVALID_ENUM",
-            F.col("role").isNotNull() & ~F.col("role").isin(*ROLE_DOMAIN),
-            "role outside domain whitelist",
-        ),
-        (
-            "ROW_TOO_LARGE",
-            F.length(F.col("text")) > MAX_TEXT_LEN,
-            f"text longer than {MAX_TEXT_LEN}",
-        ),
-        (
-            "BAD_TURN_INDEX",
-            F.col("turn_idx").isNull() | (F.col("turn_idx") < 0),
-            "negative or null turn_idx",
-        ),
-    ]
+GATES = [
+    ("MISSING_KEY", "conv_id IS NULL OR ts IS NULL", "null conv_id or ts"),
+    (
+        "INVALID_ENUM",
+        f"role IS NOT NULL AND NOT role IN ({', '.join(map(_s, ROLE_DOMAIN))})",
+        "role outside domain whitelist",
+    ),
+    ("ROW_TOO_LARGE", f"length(text) > {num(MAX_TEXT_LEN)}", f"text longer than {MAX_TEXT_LEN}"),
+    ("BAD_TURN_INDEX", "turn_idx IS NULL OR turn_idx < 0", "negative or null turn_idx"),
+]
 
 
 def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Return (good, errors). `errors` has ERROR_SCHEMA columns."""
-    code = F.lit(None).cast("string")
-    msg = F.lit(None).cast("string")
-    for c, pred, m in reversed(_gates()):
-        code = F.when(pred, F.lit(c)).otherwise(code)
-        msg = F.when(pred, F.lit(m)).otherwise(msg)
-    tagged = df.withColumn("_err_code", code).withColumn("_err_msg", msg)
-    good = tagged.filter(F.col("_err_code").isNull()).drop("_err_code", "_err_msg")
-    errors = tagged.filter(F.col("_err_code").isNotNull()).select(
-        F.col("conv_id"),
-        F.col("turn_idx"),
-        F.col("_err_code").alias("code"),
-        F.col("_err_msg").alias("message"),
-        F.lit("error").alias("severity"),
+    code = "CASE " + " ".join(f"WHEN {p} THEN {_s(c)}" for c, p, _m in GATES) + " END"
+    msg = "CASE " + " ".join(f"WHEN {p} THEN {_s(m)}" for _c, p, m in GATES) + " END"
+    good = df.where(f"{code} IS NULL")
+    # filtering on the materialized code column types it NOT NULL
+    errors = (
+        df.selectExpr("conv_id", "turn_idx", f"{code} AS code", f"{msg} AS message")
+        .where("code IS NOT NULL")
+        .selectExpr("*", "'error' AS severity")
     )
     return good, errors

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
+from engine.operators import core
 from engine.schema import TOP_K_TOOLS
 
 
@@ -88,54 +89,56 @@ def add_top_tools_expanding(
     return df.mapInArrow(gen, schema=out_schema)
 
 
+VOCAB = "_vocab"  # array<string> literal column of the sorted vocabulary
+
+
+def top_tools_vocab_layers(n_vocab: int, k: int = TOP_K_TOOLS) -> list[core.Layer]:
+    """Layers of `add_top_tools_vocab` over a VOCAB column of `n_vocab`
+    tools: one running count per tool over the shared conv window, then
+    a per-row sort of the |V|-element struct array picks the top k with
+    the (count desc, tool asc) tie-break. The tool names are read from
+    VOCAB, never written into the SQL text."""
+    if not n_vocab:
+        # no tools anywhere (empty input / all-null tool column): the
+        # expanding top-k is [] for every row — and array() of zero
+        # structs would type as array<void> and break the lambda below
+        return [{"top_tools": "CAST(array() AS ARRAY<STRING>)"}]
+    cum = core.over("conv_id", "ts", "turn_idx", core.CUM)
+    counts = {
+        f"_tc{j}": f"sum(CASE WHEN tool = {VOCAB}[{j}] THEN 1 ELSE 0 END) {cum}"
+        for j in range(n_vocab)
+    }
+    entries = ", ".join(
+        f"named_struct('negc', CAST(-_tc{j} AS BIGINT), 't', {VOCAB}[{j}])"
+        for j in range(n_vocab)
+    )
+    # struct array sorts lexicographically by field order: (-count, tool)
+    top = f"transform(slice(filter(array_sort(array({entries})), e -> e.negc < 0), 1, {k}), e -> e.t)"
+    padded = (
+        f"CASE WHEN size({top}) = 0 THEN {top} ELSE "
+        f"slice(concat({top}, array_repeat(element_at({top}, -1), {k})), 1, {k}) END"
+    )
+    return [counts, {"top_tools": padded}]
+
+
+def with_vocab(df: DataFrame, vocab: list[str]) -> tuple[DataFrame, int]:
+    """Append the VOCAB literal column (sorted, deduplicated: a repeated
+    catalog-stat entry would otherwise be counted twice and repeat
+    inside top_tools); returns the frame and the vocabulary size."""
+    vocab = sorted(set(vocab))
+    return df.select("*", F.array(*map(F.lit, vocab)).alias(VOCAB)), len(vocab)
+
+
 def add_top_tools_vocab(
     df: DataFrame, vocab: list[str], k: int = TOP_K_TOOLS
 ) -> DataFrame:
     """Expanding top-k dominant tools with no Python stage, for a small
-    known `vocab` (pipeline.discover_tool_vocab finds it): one running
-    count per tool over one shared window, then a per-row sort of a
-    |V|-element struct array picks the top k with the (count desc,
-    tool asc) tie-break. Columns grow with |V|, so callers with more
-    than MAX_VOCAB tools use add_top_tools_expanding.
+    known `vocab` (pipeline.discover_tool_vocab finds it). Columns grow
+    with |V|, so callers with more than MAX_VOCAB tools use
+    add_top_tools_expanding.
     """
-    # set(): a duplicated catalog-stat entry would otherwise count the
-    # same tool in two _tc columns and repeat it inside top_tools
-    vocab = sorted(set(vocab))
-    if not vocab:
-        # no tools anywhere (empty input / all-null tool column): the
-        # expanding top-k is [] for every row — and F.array() of zero
-        # structs would type as array<void> and break the lambda below
-        return df.withColumn("top_tools", F.array().cast("array<string>"))
-
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cnt_cols = [
-        F.sum(F.when(F.col("tool") == t, 1).otherwise(0)).over(w).alias(f"_tc{j}")
-        for j, t in enumerate(vocab)
-    ]
-    df = df.select("*", *cnt_cols)
-
-    entries = F.array(
-        *[
-            F.struct(
-                (-F.col(f"_tc{j}")).cast("long").alias("negc"),
-                F.lit(t).alias("t"),
-            )
-            for j, t in enumerate(vocab)
-        ]
-    )
-    # struct array sorts lexicographically by field order: (-count, tool)
-    ranked = F.slice(
-        F.filter(F.array_sort(entries), lambda e: e.negc < 0), 1, k
-    )
-    top = F.transform(ranked, lambda e: e.t)
-    padded = F.when(F.size(top) == 0, top).otherwise(
-        F.slice(F.concat(top, F.array_repeat(F.element_at(top, -1), k)), 1, k)
-    )
-    return df.withColumn("top_tools", padded).drop(
-        *[f"_tc{j}" for j in range(len(vocab))]
-    )
+    df, n = with_vocab(df, vocab)
+    return core.with_layers(df, top_tools_vocab_layers(n, k), drop=[VOCAB])
 
 
 def top_tools_final(df: DataFrame, k: int = TOP_K_TOOLS) -> DataFrame:

@@ -14,11 +14,15 @@ order by (ts, turn_idx) — (reference analog: sort lines by bbox y then
 assemble, text_extractor.py:177-193). A single hash repartition on
 conv_id is reused by every window below, so the family costs exactly
 one shuffle.
+
+Each family is declared once as `*_layers()` (core.Layer lists);
+`extract_features` zips them into shared layers, the `add_*` functions
+apply one family alone.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame
 
 from engine.operators import core
 from engine.schema import ROLL_WINDOW_S, SESSION_GAP_S
@@ -27,84 +31,69 @@ ENTITY, TS, IDX = "conv_id", "ts", "turn_idx"
 TS_SEC = "_ts_sec"  # internal epoch-seconds double column
 
 
-def turn_order():
-    return core.order_cols(TS, IDX)
+def _over(frame: str = "") -> str:
+    return core.over(ENTITY, TS, IDX, frame)
 
 
-def conv_window() -> Window:
-    return core.entity_window(ENTITY, TS, IDX)
-
-
-def with_ts_sec(df: DataFrame) -> DataFrame:
+def ts_sec_layers() -> list[core.Layer]:
     # timestamp → epoch seconds as double (µs-exact for ms-precision data;
     # identical to pandas int64-µs/1e6 under IEEE correctly-rounded division)
-    return df.withColumn(TS_SEC, core.ts_seconds(TS))
+    return [{TS_SEC: core.ts_seconds_sql(TS)}]
 
 
-def add_lag_lead(df: DataFrame) -> DataFrame:
+def lag_lead_layers() -> list[core.Layer]:
     """lag/lead turn features + inter-turn gaps (seconds, double)."""
-    w = conv_window()
-    return (
-        df.withColumn("lag_text_len", F.lag("txt_len").over(w))
-        .withColumn("lead_text_len", F.lead("txt_len").over(w))
-        .withColumn("gap_prev_s", F.col(TS_SEC) - F.lag(TS_SEC).over(w))
-        .withColumn("gap_next_s", F.lead(TS_SEC).over(w) - F.col(TS_SEC))
-    )
+    w = _over()
+    return [{
+        "lag_text_len": f"lag(txt_len) {w}",
+        "lead_text_len": f"lead(txt_len) {w}",
+        "gap_prev_s": f"{TS_SEC} - lag({TS_SEC}) {w}",
+        "gap_next_s": f"lead({TS_SEC}) {w} - {TS_SEC}",
+    }]
 
 
-def add_sessionization(df: DataFrame, gap_s: float = SESSION_GAP_S) -> DataFrame:
+def sessionization_layers(gap_s: float = SESSION_GAP_S) -> list[core.Layer]:
     """ts-gap sessionization within conv_id (W4).
 
     New session iff gap_prev_s > gap_s (strict). session_id is 0-based
     per conversation; sess_turn_no is 1-based within session;
     sess_len_so_far is the running sum of txt_len within the session
-    (inclusive of the current turn).
+    (inclusive of the current turn), cumulative-minus-base over the
+    SAME conv window — a window over (conv, session) would force a
+    second per-partition sort.
     """
-    df = core.sessionize(
-        df, ENTITY, TS, IDX, gap_s, session_col="session_id", seq_col="sess_turn_no"
+    first, second = core.sessionize_layers(
+        ENTITY, TS, IDX, gap_s, session_col="session_id", seq_col="sess_turn_no"
     )
-    # Running text length within session, derived over the SAME conv
-    # window (cumulative-minus-base) — a window over (conv, session)
-    # would force a second per-partition sort.
-    cum = core.cum_frame(ENTITY, TS, IDX)
-    len0 = F.coalesce(F.col("txt_len"), F.lit(0)).cast("long")
-    cum_len = F.sum(len0).over(cum)
-    df = df.withColumn("_cum_len", cum_len)
-    base = F.last(
-        F.when(F.col("sess_turn_no") == 1, F.col("_cum_len") - len0),
-        ignorenulls=True,
-    ).over(cum)
-    return df.withColumn("sess_len_so_far", F.col("_cum_len") - base).drop(
-        "_cum_len"
-    )
+    cum = _over(core.CUM)
+    len0 = "CAST(coalesce(txt_len, 0) AS BIGINT)"
+    first["_cum_len"] = f"sum({len0}) {cum}"
+    base = f"last(CASE WHEN {core.NEW_SESS} = 1 THEN _cum_len - {len0} END, true) {cum}"
+    second["sess_len_so_far"] = f"_cum_len - {base}"
+    return [first, second]
 
 
-def add_context_ffill(df: DataFrame) -> DataFrame:
-    """Forward-fill of tool / last-user-text context (backfill family).
-
-    `last(col, ignorenulls=True)` over an unbounded-preceding frame —
-    the canonical Spark ffill; inclusive of the current turn (the
-    current row is not the future, so this is leakage-free).
-    """
-    df = core.ffill(df, ENTITY, TS, IDX, "tool", "ctx_last_tool")
-    return core.ffill(
-        df,
-        ENTITY,
-        TS,
-        IDX,
-        F.when(F.col("role") == "user", F.col("text")),
-        "ctx_last_user_text",
-    )
+def context_ffill_layers() -> list[core.Layer]:
+    """Forward-fill of tool / last-user-text context (backfill family),
+    inclusive of the current turn (the current row is not the future,
+    so this is leakage-free)."""
+    return [{
+        "ctx_last_tool": core.ffill_expr(ENTITY, TS, IDX, "tool"),
+        "ctx_last_user_text": core.ffill_expr(
+            ENTITY, TS, IDX, "CASE WHEN role = 'user' THEN text END"
+        ),
+    }]
 
 
-def add_rolling(
-    df: DataFrame, window_s: float = ROLL_WINDOW_S, approx_distinct: bool = False
-) -> DataFrame:
+def rolling_layers(
+    window_s: float = ROLL_WINDOW_S, approx_distinct: bool = False
+) -> list[core.Layer]:
     """Event-time rolling stats over the past `window_s` seconds.
 
     RANGE frame [ts - window_s, ts] — inclusive of both boundaries and
     of all peers of the current timestamp (rows with equal ts), which
-    is exactly the `ts' <= ts` leakage rule.
+    is exactly the `ts' <= ts` leakage rule. Ordered by the
+    materialized TS_SEC column.
 
     Distinct-tool count is exact (collect_list → array_distinct) for
     test parity; at benchmark scale `approx_distinct=True` switches the
@@ -112,30 +101,38 @@ def add_rolling(
     columns (SURVEY.md §7.4).
     """
     aggs = {
-        "roll_cnt_5m": F.count(F.lit(1)),
-        "roll_avg_len_5m": F.avg("txt_len"),
+        "roll_cnt_5m": "count(1)",
+        "roll_avg_len_5m": "avg(txt_len)",
         # window aggregates only — size/array_distinct applied after
-        "_roll_tools": (
-            F.approx_count_distinct("tool")
-            if approx_distinct
-            else F.collect_list("tool")
-        ),
+        "_roll_tools": "approx_count_distinct(tool)" if approx_distinct else "collect_list(tool)",
     }
-    # order by the already-materialized epoch-seconds column so the
-    # rolling window's sort key unifies with one Sort node
-    df = core.rolling_range(df, ENTITY, TS, window_s, aggs, order_col=TS_SEC)
-    distinct = (
-        F.col("_roll_tools")
-        if approx_distinct
-        else F.size(F.array_distinct(F.col("_roll_tools")))
-    )
-    # P8 neighborhood-relative value: txt_len vs the trailing-window
-    # mean it is part of — derived from the materialized aggregate, so
-    # it costs zero extra window evaluation
-    df = df.withColumn(
-        "roll_rel_len_5m",
-        F.col("txt_len").cast("double") - F.col("roll_avg_len_5m"),
-    )
-    return df.withColumn("roll_tools_distinct_5m", distinct.cast("int")).drop(
-        "_roll_tools"
-    )
+    first = core.rolling_range_layer(ENTITY, TS, window_s, aggs, order_col=TS_SEC)
+    distinct = "_roll_tools" if approx_distinct else "size(array_distinct(_roll_tools))"
+    return [first, {
+        # P8 neighborhood-relative value: txt_len vs the trailing-window
+        # mean it is part of — zero extra window evaluation
+        "roll_rel_len_5m": "CAST(txt_len AS DOUBLE) - roll_avg_len_5m",
+        "roll_tools_distinct_5m": f"CAST({distinct} AS INT)",
+    }]
+
+
+def with_ts_sec(df: DataFrame) -> DataFrame:
+    return core.with_layers(df, ts_sec_layers())
+
+
+def add_lag_lead(df: DataFrame) -> DataFrame:
+    return core.with_layers(df, lag_lead_layers())
+
+
+def add_sessionization(df: DataFrame, gap_s: float = SESSION_GAP_S) -> DataFrame:
+    return core.with_layers(df, sessionization_layers(gap_s))
+
+
+def add_context_ffill(df: DataFrame) -> DataFrame:
+    return core.with_layers(df, context_ffill_layers())
+
+
+def add_rolling(
+    df: DataFrame, window_s: float = ROLL_WINDOW_S, approx_distinct: bool = False
+) -> DataFrame:
+    return core.with_layers(df, rolling_layers(window_s, approx_distinct))

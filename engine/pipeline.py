@@ -8,11 +8,13 @@ error sidecar + metadata), re-planned for Spark:
   read → quarantine split → per-turn text kernel (Arrow scalar UDF) →
   ONE hash repartition on conv_id → every window family over the same
   (ts, turn_idx) total order → as-of join vs context → expanding
-  top-k kernel → wide feature row per (conv_id, ts, turn_idx).
+  top-k → wide feature row per (conv_id, ts, turn_idx).
 
 All feature families are computed over one shuffled-once layout,
 mirroring the reference's "all three extractors consume the same
-preprocessed array" discipline (SURVEY.md §7.2).
+preprocessed array" discipline (SURVEY.md §7.2). The plan is built as
+a few SQL-expression layers by dependency depth (operators/core.py),
+since a batch job rebuilds it for every hash batch and increment.
 """
 
 from __future__ import annotations
@@ -30,9 +32,15 @@ from engine.functions.text import (
     txt_len_series,
     txt_words_series,
 )
+from engine.operators import core
 from engine.operators.asof import asof_join
 from engine.operators.quality import split_quarantine
-from engine.operators.topk import add_top_tools_expanding, add_top_tools_vocab
+from engine.operators.topk import (
+    VOCAB,
+    add_top_tools_expanding,
+    top_tools_vocab_layers,
+    with_vocab,
+)
 from engine.operators import windows as W
 from engine.schema import FEATURE_SCHEMA, ROLL_WINDOW_S, SESSION_GAP_S
 
@@ -64,16 +72,15 @@ def _text_features(text: pd.Series) -> pd.DataFrame:
 
 
 def add_text_features(df: DataFrame) -> DataFrame:
-    df = df.withColumn("_txt", _text_features(F.col("text")))
-    df = df.select("*", "_txt.clean_text", "_txt.txt_len", "_txt.txt_words").drop(
-        "_txt"
-    )
+    df = df.select("*", _text_features(F.col("text")).alias("_txt"))
     # 3-way threshold binning (P11 analog) — the ONE Spark-side
     # implementation lives in operators/core.bin_threshold; the oracle
     # twin is functions/text.len_class_py (same 250/190 thresholds)
-    from engine.operators.core import bin_threshold
-
-    return df.withColumn("len_class", bin_threshold(F.col("txt_len"), 250, 190))
+    return df.select(
+        *[c for c in df.columns if c != "_txt"],
+        "_txt.clean_text", "_txt.txt_len", "_txt.txt_words",
+        core.bin_threshold(F.col("_txt.txt_len"), 250, 190).alias("len_class"),
+    )
 
 
 MAX_VOCAB = 64
@@ -139,42 +146,30 @@ def extract_features(
 ) -> tuple[DataFrame, DataFrame, dict]:
     """Return (features, errors, run_meta).
 
-    `profile`: optional P9 data-reduction profile (REDUCTION_PROFILES:
-    'high_quality' / 'auto' / 'performance') — caps text length ahead
-    of the text kernel and, for 'performance', switches the rolling
-    distinct to the HLL++ sketch. None = no reduction (exact).
+    `profile`: optional REDUCTION_PROFILES entry (text-length cap ahead
+    of the text kernel; 'performance' also makes the rolling distinct
+    an HLL++ sketch). None = exact.
 
-    `vocab`: the tool vocabulary for the pure-codegen expanding-top-k
-    formulation. Pass it explicitly (catalog stat / platform config) to
-    build the ENTIRE feature plan without a single pre-pass job; when
-    None it is discovered from the raw input (one narrow one-column
-    scan; see discover_tool_vocab). A vocabulary larger than MAX_VOCAB
-    (either passed or discovered) switches to the streaming Arrow
-    kernel, which needs no vocabulary at all.
+    `vocab`: the tool vocabulary of the codegen top-k. Passed, the plan
+    is built without a single job; None discovers it from the raw input
+    (discover_tool_vocab). Over MAX_VOCAB tools the top-k runs as the
+    Arrow kernel, which needs none.
 
-    `run_meta` carries static plan facts; row/byte/watermark metrics are
-    computed at write time by TableIO (engine/tableio.py) so the lazy
-    plan is only executed once.
+    `run_meta` holds static plan facts; row and byte counts come from
+    the write pass (engine/tableio.py), so the plan executes once.
     """
     t0 = time.time()
     good, errors = split_quarantine(transcripts)
-    # P9 reduction runs AFTER validation (reference order: validate →
-    # resize → extract, image_validator before utils.resize) so the
-    # ROW_TOO_LARGE gate still sees the original length — and BEFORE
-    # the expensive text kernel, which is the point of the profile.
+    # P9 reduction after validation (ROW_TOO_LARGE sees the original
+    # length) and before the text kernel it exists to cheapen
     approx_distinct = False
     if profile is not None:
         approx_distinct = REDUCTION_PROFILES[profile]["approx_distinct"]
         good = apply_reduction_profile(good, profile)
 
-    # Shuffle placement vs the Arrow text kernel. Wide input already
-    # has scan parallelism, so the kernel runs there and the window's
-    # exchange stays the only shuffle. Narrow input (1-2 scan tasks)
-    # is spread by conv_id first; that repartition carries no count,
-    # so AQE coalesces it and the Python stage gets only as many tasks
-    # as its data fills: each Python task costs a fixed slice of
-    # worker CPU whatever its row count. An explicit num_partitions
-    # pins the count instead.
+    # Wide input runs the text kernel at scan parallelism; narrow input
+    # is first spread by conv_id, count-free so AQE sizes the Python
+    # stage by its data (num_partitions pins the count instead).
     if repartition_before_text is None:
         n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
         scan_parts = good.rdd.getNumPartitions()
@@ -186,34 +181,44 @@ def extract_features(
             good = good.repartition("conv_id")
     good = add_text_features(good)
 
-    good = W.with_ts_sec(good)
-    good = W.add_lag_lead(good)
-    good = W.add_sessionization(good, gap_s=session_gap_s)
-    good = W.add_context_ffill(good)
-    good = W.add_rolling(good, window_s=roll_window_s, approx_distinct=approx_distinct)
-    good = good.drop(W.TS_SEC)
+    # Layers by dependency depth: TS_SEC; every window aggregate (two
+    # specs: the (ts, turn_idx) rows frames and the rolling RANGE
+    # frame); what is derived from them (session ids and lengths,
+    # rolling ratios, top-k); then the as-of. A vocabulary over
+    # MAX_VOCAB takes the streaming Arrow kernel after the as-of.
+    if vocab is None:
+        vocab = discover_tool_vocab(transcripts)
+    families = [
+        W.lag_lead_layers(),
+        W.sessionization_layers(session_gap_s),
+        W.context_ffill_layers(),
+        W.rolling_layers(roll_window_s, approx_distinct),
+    ]
+    if len(vocab) <= MAX_VOCAB:
+        good, n_vocab = with_vocab(good, vocab)
+        families.append(top_tools_vocab_layers(n_vocab))
+    layers = W.ts_sec_layers() + core.merge_layers(*families)
+    good = core.with_layers(good, layers, drop=[W.TS_SEC, VOCAB])
 
     if context is not None:
         good = asof_join(good, context, strict=False)
     else:
-        good = good.withColumn("asof_ctx_value", F.lit(None).cast("double"))
-        good = good.withColumn("asof_ctx_label", F.lit(None).cast("string"))
-
-    # expanding top-k: pure-codegen vocab formulation when the tool
-    # vocabulary is small (the normal case — agent toolsets are bounded;
-    # saves the ~9-13 s Arrow IPC round-trip of the wide rows);
-    # streaming Arrow kernel otherwise. Discovery (when no vocab was
-    # passed) scans the RAW one-column input, not the feature plan.
-    if vocab is None:
-        vocab = discover_tool_vocab(transcripts)
-    if len(vocab) <= MAX_VOCAB:
-        good = add_top_tools_vocab(good, vocab=list(vocab))
-    else:
+        good = good.selectExpr(
+            "*",
+            "CAST(NULL AS DOUBLE) AS asof_ctx_value",
+            "CAST(NULL AS STRING) AS asof_ctx_label",
+        )
+    if len(vocab) > MAX_VOCAB:
         # the windows and the as-of already put each conversation in
         # one partition (both partition by conv_id)
         good = add_top_tools_expanding(good, assume_partitioned=True)
 
-    features = good.select(*[f.name for f in FEATURE_SCHEMA.fields])
+    out = {f.name: core.q(f.name) for f in FEATURE_SCHEMA.fields}
+    if len(vocab) <= MAX_VOCAB:
+        # the as-of's union types its probe columns nullable; a turn's
+        # top_tools is never null, and the schema keeps saying so
+        out["top_tools"] = "coalesce(top_tools, CAST(array() AS ARRAY<STRING>)) AS top_tools"
+    features = good.selectExpr(*out.values())
     meta = {
         "engine_version": "0.1.0",
         "session_gap_s": session_gap_s,

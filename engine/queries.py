@@ -156,7 +156,7 @@ def q_ffill(spark, sf_dir):
     or after it (bfill, imputation/label direction). Both fills share
     the one (user)×(ts, event_id) sort."""
     ev = _t(spark, sf_dir, "events")
-    purchase = F.when(F.col("event_type") == "purchase", F.col("value"))
+    purchase = "CASE WHEN event_type = 'purchase' THEN value END"
     out = core.ffill(ev, "user_id", "ts", "event_id", purchase, "last_purchase_value")
     out = core.bfill(out, "user_id", "ts", "event_id", purchase, "next_purchase_value")
     return out.select(
@@ -189,7 +189,7 @@ def q_rolling(spark, sf_dir):
         "user_id",
         "ts",
         ROLL_S,
-        {"roll_cnt": F.count(F.lit(1)), "_avg": F.avg("value")},
+        {"roll_cnt": "count(1)", "_avg": "avg(value)"},
     )
     return out.select(
         "user_id",
@@ -803,7 +803,7 @@ def q_rolling_approx(spark, sf_dir):
         "user_id",
         "ts",
         ROLL_S,
-        {"roll_types_approx": F.approx_count_distinct("event_type")},
+        {"roll_types_approx": "approx_count_distinct(event_type)"},
     )
     return out.select(
         "user_id", "event_id", F.col("roll_types_approx").cast("int").alias("roll_types_approx")

@@ -8,6 +8,7 @@ Usage: python scripts/check_queries.py [sf_dir] [name ...]
 
 from __future__ import annotations
 
+import argparse
 import sys
 from pathlib import Path
 
@@ -60,8 +61,12 @@ def compare(name: str, got: pd.DataFrame, exp: pd.DataFrame) -> list[str]:
 
 
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01",
+                    help="directory of the <table>.parquet inputs")
+    ap.add_argument("names", nargs="*", help="queries to check (default: all)")
+    args = ap.parse_args()
+    sf_dir, only = args.sf_dir, set(args.names)
 
     import __spark_entry__ as entry
 

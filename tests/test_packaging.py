@@ -54,3 +54,27 @@ def test_scripts_resolve_checkout_from_file():
         if str(ROOT) in p.read_text() or literal_path.search(p.read_text())
     ]
     assert not offenders, offenders
+
+
+def test_check_queries_help_starts_no_jvm():
+    """`scripts/check_queries.py --help` prints usage and exits 0 before
+    any Spark session (it used to take `--help` as the sf_dir)."""
+    import time
+
+    probe = r"""
+import runpy, sys
+sys.argv = [%r, "--help"]
+try:
+    runpy.run_path(sys.argv[0], run_name="__main__")
+    code = None
+except SystemExit as e:
+    code = e.code
+from pyspark import SparkContext
+print("EXIT", code, "JVM", SparkContext._gateway is not None)
+""" % str(ROOT / "scripts" / "check_queries.py")
+    t0 = time.perf_counter()
+    r = subprocess.run([sys.executable, "-c", probe], capture_output=True, text=True, timeout=120)
+    elapsed = time.perf_counter() - t0
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "usage:" in r.stdout and "EXIT 0 JVM False" in r.stdout, r.stdout[-2000:]
+    assert elapsed < 10, elapsed

@@ -49,23 +49,56 @@ def test_broadcast_join_for_small_dims(spark):
 def test_flagship_plan_shape(spark, transcripts_df, context_df):
     from engine.pipeline import extract_features
 
-    f, _e, _m = extract_features(
-        spark, transcripts_df, context_df, repartition_before_text=False
-    )
-    plan = _formatted(spark, f)
-    nodes = re.findall(
-        r"\(\d+\) (Exchange|Sort|ArrowEvalPython|MapInPandas)\b", plan
-    )
-    counts = {k: nodes.count(k) for k in set(nodes)}
-    # single-shuffle path: window exchange + as-of union exchange only
-    assert counts.get("Exchange", 0) <= 2, counts
-    # one sort per distinct ordering: window chain, rolling (ts_sec),
-    # as-of union tag, and the final output ordering
-    assert counts.get("Sort", 0) <= 4, counts
-    # exactly ONE Python stage (the text kernel): the expanding top-k
-    # runs as the pure-codegen vocab formulation, no kernel at all
-    assert counts.get("ArrowEvalPython", 0) == 1
-    assert counts.get("MapInPandas", 0) == 0
+    for narrow in (False, True):
+        f, _e, _m = extract_features(
+            spark, transcripts_df, context_df, repartition_before_text=narrow
+        )
+        plan = _formatted(spark, f)
+        nodes = re.findall(
+            r"\(\d+\) (Exchange|Sort|Window|ArrowEvalPython|MapInPandas)\b", plan
+        )
+        counts = {k: nodes.count(k) for k in set(nodes)}
+        # single-shuffle path: window exchange + as-of union exchange
+        # only (narrow input adds its conv_id repartition before text)
+        assert counts.get("Exchange", 0) <= 2 + narrow, counts
+        # one sort per distinct ordering: window chain, rolling (ts_sec),
+        # session layer, and the as-of union tag
+        assert counts.get("Sort", 0) <= 4, counts
+        # the window families share Window operators by spec: the (ts,
+        # turn_idx) rows frames, the rolling RANGE frame, the layer
+        # derived from them, and the as-of
+        assert counts.get("Window", 0) <= 4, counts
+        # exactly ONE Python stage (the text kernel): the expanding top-k
+        # runs as the pure-codegen vocab formulation, no kernel at all
+        assert counts.get("ArrowEvalPython", 0) == 1
+        assert counts.get("MapInPandas", 0) == 0
+
+
+def test_flagship_plan_build_py4j_commands(spark, transcripts_df, context_df):
+    """Building the flagship plan with `vocab` passed stays a few SQL-
+    expression layers: every Column-API call costs py4j round trips
+    (call-site origin set and cleared around each), every DataFrame
+    call a re-analysis, and a batch job rebuilds the plan per batch.
+    Counted by wrapping the gateway client's send_command."""
+    from engine.generate import TOOLS
+    from engine.pipeline import extract_features
+
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def counting(*args, **kwargs):
+        sent.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        extract_features(
+            spark, transcripts_df, context_df, vocab=list(TOOLS),
+            repartition_before_text=False,
+        )
+    finally:
+        client.send_command = send
+    assert len(sent) <= 2000, len(sent)
 
 
 def test_flagship_large_vocab_topk_adds_no_exchange(spark, transcripts_df, context_df):

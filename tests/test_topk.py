@@ -131,3 +131,23 @@ def test_vocab_duplicates_deduped(spark, transcripts_df):
     from pyspark.sql import functions as F
 
     assert merged.filter(F.col("top_tools") != F.col("tt2")).count() == 0
+
+
+def test_vocab_tool_names_never_become_sql(spark, transcripts_pdf):
+    """Tool names come from the data and reach the vocab top-k as Column
+    literals: quotes, backslashes, `${...}` (which Spark substitutes even
+    inside SQL string literals), SQL fragments and non-ASCII names rank
+    exactly as the oracle ranks them."""
+    from engine.oracle.features import oracle_features
+    from engine.pipeline import extract_features
+
+    names = ["'", "\\", "${spark.app.name}", "') OR true --", "ツール", "outil_é", "a`b\"c"]
+    known = sorted(t for t in transcripts_pdf["tool"].dropna().unique() if t)
+    rename = {t: names[i % len(names)] for i, t in enumerate(known)}
+    pdf = transcripts_pdf.assign(tool=transcripts_pdf["tool"].map(rename))
+    feats, _e, meta = extract_features(
+        spark, spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA), None
+    )
+    assert meta["topk_strategy"] == "vocab" and meta["vocab_size"] == len(names)
+    exp = oracle_features(pdf, None)[KEYS + ["top_tools"]]
+    assert_frames_match(feats.select(*KEYS, "top_tools").toPandas(), exp)
