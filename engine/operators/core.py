@@ -211,22 +211,14 @@ def rolling_range(
     entity: str,
     ts: str,
     window_s: float,
-    aggs: dict[str, str | Column],
+    aggs: dict[str, str],
     order_col: str | None = None,
 ) -> DataFrame:
     """Event-time RANGE frame [ts - window_s, ts] (inclusive, with
     ts-peers — the `ts' <= ts` leakage rule). `aggs` maps output column
-    name → SQL aggregate text (or an aggregate Column). Pass `order_col`
-    when the epoch-seconds column is already materialized upstream."""
-    if all(isinstance(a, str) for a in aggs.values()):
-        return with_layers(df, [rolling_range_layer(entity, ts, window_s, aggs, order_col)])
-    okey, bound = _range_frame(ts, window_s, order_col)
-    w = Window.partitionBy(entity).orderBy(F.expr(okey)).rangeBetween(-bound, Window.currentRow)
-    keep = [c for c in df.columns if c not in aggs]
-    return df.select(
-        *keep,
-        *[(F.expr(a) if isinstance(a, str) else a).over(w).alias(o) for o, a in aggs.items()],
-    )
+    name → SQL aggregate text. Pass `order_col` when the epoch-seconds
+    column is already materialized upstream."""
+    return with_layers(df, [rolling_range_layer(entity, ts, window_s, aggs, order_col)])
 
 
 def dedup_first(df: DataFrame, keys: list[str], ts: str, idx: str) -> DataFrame:

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from engine.operators import core
@@ -42,16 +42,13 @@ def top_tools_step(counts: dict[str, int], tool, k: int = TOP_K_TOOLS) -> list[s
     return top + [top[-1]] * (k - len(top))
 
 
-def add_top_tools_expanding(
-    df: DataFrame, k: int = TOP_K_TOOLS, assume_partitioned: bool = False
-) -> DataFrame:
+def add_top_tools_expanding(df: DataFrame, k: int = TOP_K_TOOLS) -> DataFrame:
     """Append `top_tools` (array<string>), the running top-k.
 
     mapInArrow over partitions locally sorted by (conv_id, ts, turn_idx),
     carrying the count state across Arrow batches: one Python call per
-    batch, not per conversation. With `assume_partitioned` (upstream
-    already put each conversation in one partition) only a local sort
-    is added, no shuffle.
+    batch, not per conversation. Input already partitioned by conv_id
+    (the pipeline's windows) plans no further shuffle.
     """
     out_schema = T.StructType(
         list(df.schema.fields)
@@ -59,9 +56,7 @@ def add_top_tools_expanding(
     )
     cols = df.columns
 
-    if not assume_partitioned:
-        df = df.repartition("conv_id")
-    df = df.sortWithinPartitions("conv_id", "ts", "turn_idx")
+    df = df.repartition("conv_id").sortWithinPartitions("conv_id", "ts", "turn_idx")
 
     def gen(batches):
         # Arrow, not pandas: only (conv_id, tool) are read, the other
@@ -142,18 +137,8 @@ def add_top_tools_vocab(
 
 
 def top_tools_final(df: DataFrame, k: int = TOP_K_TOOLS) -> DataFrame:
-    """Whole-conversation top-k dominant tools, pure built-ins:
-    hash-agg count (map-side partial combine) → windowed rank ≤ k.
-    Returns (conv_id, tool, tool_count, rank). SQL-oracle-checkable."""
-    counts = (
-        df.filter(F.col("tool").isNotNull() & (F.col("tool") != ""))
-        .groupBy("conv_id", "tool")
-        .agg(F.count(F.lit(1)).alias("tool_count"))
-    )
-    w = Window.partitionBy("conv_id").orderBy(
-        F.col("tool_count").desc(), F.col("tool").asc()
-    )
-    return (
-        counts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    """Whole-conversation top-k dominant tools: null/'' tools dropped,
+    then the frequency top-k. Returns (conv_id, tool, tool_count, rank).
+    SQL-oracle-checkable."""
+    tools = df.filter(F.col("tool").isNotNull() & (F.col("tool") != ""))
+    return core.topk_by_count(tools, "conv_id", "tool", k, count_col="tool_count")

@@ -139,8 +139,6 @@ def extract_features(
     context: DataFrame | None = None,
     session_gap_s: float = SESSION_GAP_S,
     roll_window_s: float = ROLL_WINDOW_S,
-    num_partitions: int | None = None,
-    repartition_before_text: bool | None = None,
     vocab: list[str] | None = None,
     profile: str | None = None,
 ) -> tuple[DataFrame, DataFrame, dict]:
@@ -167,18 +165,9 @@ def extract_features(
         approx_distinct = REDUCTION_PROFILES[profile]["approx_distinct"]
         good = apply_reduction_profile(good, profile)
 
-    # Wide input runs the text kernel at scan parallelism; narrow input
-    # is first spread by conv_id, count-free so AQE sizes the Python
-    # stage by its data (num_partitions pins the count instead).
-    if repartition_before_text is None:
-        n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        scan_parts = good.rdd.getNumPartitions()
-        repartition_before_text = scan_parts < max(2, n_part // 2)
-    if repartition_before_text:
-        if num_partitions:
-            good = good.repartition(num_partitions, "conv_id")
-        else:
-            good = good.repartition("conv_id")
+    # The text kernel runs where the scan put the rows: the Python stage
+    # does not pass on its input's partitioning, so a conv_id shuffle
+    # ahead of it would be repeated by the windows'.
     good = add_text_features(good)
 
     # Layers by dependency depth: TS_SEC; every window aggregate (two
@@ -209,9 +198,9 @@ def extract_features(
             "CAST(NULL AS STRING) AS asof_ctx_label",
         )
     if len(vocab) > MAX_VOCAB:
-        # the windows and the as-of already put each conversation in
-        # one partition (both partition by conv_id)
-        good = add_top_tools_expanding(good, assume_partitioned=True)
+        # the windows and the as-of already partition by conv_id, so
+        # Spark drops the kernel's own repartition
+        good = add_top_tools_expanding(good)
 
     out = {f.name: core.q(f.name) for f in FEATURE_SCHEMA.fields}
     if len(vocab) <= MAX_VOCAB:
@@ -226,9 +215,6 @@ def extract_features(
         "profile": profile,
         "topk_strategy": "vocab" if len(vocab) <= MAX_VOCAB else "stream",
         "vocab_size": len(vocab),
-        # None: AQE sizes the shuffles
-        "num_partitions": num_partitions if repartition_before_text else None,
-        "repartition_before_text": repartition_before_text,
         "planned_at_epoch_s": t0,
     }
     return features, errors, meta

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from engine.operators import core
 from engine.operators.asof import asof_join
-from engine.operators.topk import top_tools_final  # noqa: F401 (re-export)
 from engine.schema import TOP_K_TOOLS
 
 SESSION_GAP_S = 1800

@@ -61,12 +61,9 @@ def run_once(cores: int, tpath: str, cpath: str, shuffle: int = 32,
     best = float("inf")
     times = []
     for _ in range(reps):
-        # repartition-first plan: both Python stages run at exactly
-        # shuffle-partition parallelism at EITHER core count, so the
-        # N-vs-4N comparison isolates CPU scaling from scan-layout
-        # artifacts (the adaptive default optimizes absolute speed,
-        # not scaling symmetry; BENCH.md reports both)
-        f, _, _ = extract_features(spark, t, c, repartition_before_text=True, vocab=list(TOOLS))
+        # the text kernel runs at scan parallelism: the input is written
+        # as many files, so both legs have at least as many tasks as cores
+        f, _, _ = extract_features(spark, t, c, vocab=list(TOOLS))
         t0 = time.time()
         f.write.format("noop").mode("overwrite").save()
         dt = time.time() - t0

@@ -26,7 +26,20 @@ def test_row_order_invariance(spark, transcripts_pdf, context_pdf):
 
 
 def test_partition_count_invariance(spark, transcripts_pdf, context_pdf):
-    a = _run(spark, transcripts_pdf, context_pdf, num_partitions=2)
-    b = _run(spark, transcripts_pdf, context_pdf, num_partitions=31)
-    assert_frames_match(a, b)
-
+    """Input partitions and shuffle partitions (2 vs 31) leave the
+    features unchanged."""
+    conf = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(conf)
+    tdf = spark.createDataFrame(transcripts_pdf, schema=TRANSCRIPT_SCHEMA)
+    cdf = spark.createDataFrame(context_pdf, schema=CONTEXT_SCHEMA)
+    out = []
+    try:
+        for n in (2, 31):
+            spark.conf.set(conf, str(n))
+            f, _, _ = extract_features(spark, tdf.repartition(n), cdf)
+            out.append(
+                f.toPandas().sort_values(KEYS, kind="mergesort").reset_index(drop=True)
+            )
+    finally:
+        spark.conf.set(conf, saved)
+    assert_frames_match(out[0], out[1])

@@ -46,21 +46,25 @@ def test_broadcast_join_for_small_dims(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_flagship_plan_shape(spark, transcripts_df, context_df):
+def test_flagship_plan_shape(spark, transcripts_df, context_df, tmp_path_factory):
+    """One plan on every input layout: a 1-file and a 32-split parquet
+    input plan the same shuffles (the text kernel runs where the scan
+    put the rows; the windows' shuffle is the first)."""
     from engine.pipeline import extract_features
 
-    for narrow in (False, True):
-        f, _e, _m = extract_features(
-            spark, transcripts_df, context_df, repartition_before_text=narrow
-        )
+    base = tmp_path_factory.mktemp("flagship_layouts")
+    for n_files in (1, 32):
+        path = str(base / f"t{n_files}")
+        transcripts_df.repartition(n_files).write.parquet(path)
+        f, _e, _m = extract_features(spark, spark.read.parquet(path), context_df)
         plan = _formatted(spark, f)
         nodes = re.findall(
             r"\(\d+\) (Exchange|Sort|Window|ArrowEvalPython|MapInPandas)\b", plan
         )
         counts = {k: nodes.count(k) for k in set(nodes)}
-        # single-shuffle path: window exchange + as-of union exchange
-        # only (narrow input adds its conv_id repartition before text)
-        assert counts.get("Exchange", 0) <= 2 + narrow, counts
+        # window exchange + as-of union exchange only
+        assert counts.get("Exchange", 0) <= 2, (n_files, counts)
+        assert "REPARTITION_BY_COL" not in plan, n_files
         # one sort per distinct ordering: window chain, rolling (ts_sec),
         # session layer, and the as-of union tag
         assert counts.get("Sort", 0) <= 4, counts
@@ -93,8 +97,7 @@ def test_flagship_plan_build_py4j_commands(spark, transcripts_df, context_df):
     client.send_command = counting
     try:
         extract_features(
-            spark, transcripts_df, context_df, vocab=list(TOOLS),
-            repartition_before_text=False,
+            spark, transcripts_df, context_df, vocab=list(TOOLS)
         )
     finally:
         client.send_command = send
@@ -103,26 +106,30 @@ def test_flagship_plan_build_py4j_commands(spark, transcripts_df, context_df):
 
 def test_flagship_large_vocab_topk_adds_no_exchange(spark, transcripts_df, context_df):
     """Over MAX_VOCAB tools the top-k runs as the mapInArrow kernel. The
-    windows and the as-of already partition by conv_id, so the kernel
-    asks for no repartition (assume_partitioned=True) and the plan has
-    the vocab plan's Exchange count. Spark would also drop an equal
-    hash repartition by itself, hence the logical-plan check."""
+    windows and the as-of already partition by conv_id, so Spark drops
+    the kernel's conv_id repartition: the physical plan has the vocab
+    plan's Exchange count and at most one more Sort (the kernel's local
+    sort, elided when the last window already orders by (conv_id, ts,
+    turn_idx)), with and without context."""
     from engine.generate import TOOLS
     from engine.pipeline import MAX_VOCAB, extract_features
 
-    def plan_shape(vocab):
-        f, _e, m = extract_features(
-            spark, transcripts_df, context_df, vocab=vocab,
-            repartition_before_text=False,
+    def plan_shape(ctx, vocab):
+        f, _e, m = extract_features(spark, transcripts_df, ctx, vocab=vocab)
+        plan = _formatted(spark, f)
+        return (
+            m["topk_strategy"],
+            len(re.findall(r"\(\d+\) Exchange\b", plan)),
+            len(re.findall(r"\(\d+\) Sort\b", plan)),
         )
-        n_exchanges = len(re.findall(r"\(\d+\) Exchange\b", _formatted(spark, f)))
-        logical = f._jdf.queryExecution().optimizedPlan().toString()
-        return m["topk_strategy"], n_exchanges, "RepartitionByExpression" in logical
 
     big = list(TOOLS) + [f"fake_tool_{i}" for i in range(MAX_VOCAB)]
-    strategy, n_vocab, repartitioned = plan_shape(list(TOOLS))
-    assert (strategy, repartitioned) == ("vocab", False)
-    assert plan_shape(big) == ("stream", n_vocab, False)
+    for ctx in (context_df, None):
+        strategy, n_exchanges, n_sorts = plan_shape(ctx, list(TOOLS))
+        assert strategy == "vocab"
+        strategy, n_stream_exchanges, n_stream_sorts = plan_shape(ctx, big)
+        assert (strategy, n_stream_exchanges) == ("stream", n_exchanges)
+        assert n_sorts <= n_stream_sorts <= n_sorts + 1
 
 
 def test_asof_probe_filter_prunes_columns(spark):
@@ -148,16 +155,13 @@ def test_flagship_no_prepass_with_explicit_vocab(spark, transcripts_df, context_
 
     before = _n_jobs(spark)
     f, _e, _m = extract_features(
-        spark, transcripts_df, context_df, vocab=list(TOOLS),
-        repartition_before_text=False,
+        spark, transcripts_df, context_df, vocab=list(TOOLS)
     )
     assert _n_jobs(spark) == before, "plan construction must launch no jobs"
     assert _m["topk_strategy"] == "vocab"
 
     before = _n_jobs(spark)
-    f, _e, _m = extract_features(
-        spark, transcripts_df, context_df, repartition_before_text=False
-    )
+    f, _e, _m = extract_features(spark, transcripts_df, context_df)
     # one discovery QUERY (AQE may stage it as >1 job); bounded small
     assert 1 <= _n_jobs(spark) - before <= 3, "vocab=None costs one bounded discovery query"
 

@@ -10,8 +10,6 @@ import datetime as dt
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from pyspark.sql import functions as F
-
 BASE = dt.datetime(2024, 1, 1)
 GAP_S = 100.0
 
@@ -81,7 +79,7 @@ def test_sessionize_and_rolling_match_reference(spark_global, data):
 
     got_r = rolling_range(
         df, "ent", "ts", 100,
-        {"cnt": F.count(F.lit(1)), "tot": F.sum("val")},
+        {"cnt": "count(1)", "tot": "sum(val)"},
     )
     ref_r = _ref_rolling(data)
     for r in got_r.collect():
@@ -101,7 +99,6 @@ def test_fractional_rolling_window(spark):
     from datetime import datetime, timedelta
 
     from engine.operators.core import rolling_range
-    from pyspark.sql import functions as F
 
     t0 = datetime(2024, 1, 1)
     rows = [
@@ -111,10 +108,10 @@ def test_fractional_rolling_window(spark):
     ]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts timestamp")
     out = rolling_range(
-        df, "conv_id", "ts", 0.5, {"n": F.count(F.lit(1))}
+        df, "conv_id", "ts", 0.5, {"n": "count(1)"}
     )
     got = {r["turn_idx"]: r["n"] for r in out.collect()}
     assert got == {0: 1, 1: 2, 2: 1}
     # integral windows keep the original exact-seconds path
-    out2 = rolling_range(df, "conv_id", "ts", 2, {"n": F.count(F.lit(1))})
+    out2 = rolling_range(df, "conv_id", "ts", 2, {"n": "count(1)"})
     assert {r["turn_idx"]: r["n"] for r in out2.collect()} == {0: 1, 1: 2, 2: 3}
