@@ -246,8 +246,8 @@ def q_doc_pii_redact(spark, sf_dir):
     Presidio-style regex recognizers): per-doc match counts plus the
     redacted text with typed placeholders.
 
-    The synthetic corpus contains no natural PII, so (round-3
-    vacuity lesson) the query PLANTS it deterministically in BOTH
+    The synthetic corpus contains no natural PII, so (a 0-vs-0 row
+    check proves nothing) the query PLANTS it deterministically in BOTH
     engines: docs with doc_id % 11 == 0 get an email appended,
     % 13 == 0 a phone, % 17 == 0 an IP — all derived from doc_id
     alone, byte-identical in Spark and the oracle, and overlapping
@@ -605,25 +605,14 @@ WHERE len(list_intersect(sa.shingles, sb.shingles))
 
 def q_dedup_clusters(spark, sf_dir):
     """Near-duplicate CLUSTERS: MinHash-LSH verified pairs → connected
-    components (iterative min-label propagation to a fixpoint). The
-    oracle unrolls 4 propagation rounds in SQL — the sf0.01 pair graph
-    is tiny cliques (diameter 1, measured), so 4 rounds is a 4x margin;
-    the Spark side iterates to the true fixpoint regardless."""
+    components (large-star/small-star contraction to a fixpoint). The
+    oracle unrolls 4 min-label propagation rounds in SQL — the sf0.01
+    pair graph is tiny cliques (diameter 1, measured), so 4 rounds is a
+    4x margin; the Spark side iterates to the true fixpoint regardless."""
     d = _heavy(spark, sf_dir, "documents")
-    # NOTE for bench readers: the component loop runs actions (per-round
-    # convergence counts + localCheckpoint), so the work executes when
-    # this function is CALLED; the returned frame is the checkpointed
-    # result and its write is ~free.
+    # the component loop runs actions (per-round fixpoint checks +
+    # localCheckpoint), so the work executes when this is CALLED
     return DD.near_dup_clusters(d, threshold=0.2)
-
-
-def q_dedup_clusters_star(spark, sf_dir):
-    """Same clusters via large-star/small-star contraction (the
-    O(log²)-round, diameter-independent CC algorithm for adversarial
-    graphs) — oracle-checked against the SAME SQL as dedup_clusters,
-    since both must produce identical min-id components."""
-    d = _heavy(spark, sf_dir, "documents")
-    return DD.near_dup_clusters(d, threshold=0.2, algorithm="star")
 
 
 def _cc_step(k: int) -> str:
@@ -683,8 +672,8 @@ def q_dedup_incremental_keep(spark, sf_dir):
     min-id representatives — so the driver row verifies the
     incremental engine's exact batch-parity claim on the real corpus,
     not just on crafted unit fixtures. One DETERMINISTIC scratch dir,
-    cleared on entry (round-4 advice #3: a fresh mkdtemp per invocation
-    leaked a full corpus copy into /tmp on every gate/bench rerun); it
+    cleared on entry (a fresh mkdtemp per invocation would leak a full
+    corpus copy into /tmp on every gate/bench rerun); it
     cannot be removed on exit because the returned keep-list plan reads
     from it lazily. (The epoch ingests run at plan-BUILD time — the
     timed materialization is the keep-list read.)"""
@@ -1351,8 +1340,7 @@ def q_doc_contamination(spark, sf_dir):
     n_shared_ngrams) per contaminated pair.
 
     The synthetic corpus has no natural cross-doc 8-gram overlap, so a
-    bare run returns 0 rows — a vacuous check (the round-3 lesson from
-    dedup_embedding). The query therefore PLANTS contamination
+    bare run returns 0 rows — a vacuous check. The query therefore PLANTS contamination
     deterministically: every benchmark doc's text is cloned into the
     corpus as doc_id + 500000 (500000 % 97 = 62, so clones are never
     benchmark members), guaranteeing each ≥8-token benchmark doc one
@@ -1375,8 +1363,7 @@ def _contamination_pairs(
     (doc_id % bench_mod == 0) at doc_id + clone_offset, hash word
     n-grams, and join corpus→broadcast(benchmark) on (hash only).
 
-    Round-6 (guide §2.3 narrower types / §1.2 per-task work): grams are
-    matched by xxhash64 instead of md5 — the hash is purely an internal
+    Grams are matched by xxhash64 instead of md5 — the hash is purely an internal
     join key (the output is pair COUNTS; no hash ever leaves the
     query), xxhash64 is codegen-native with no 32-char hex
     materialization, and the exchange/broadcast rows shrink from
@@ -1393,7 +1380,7 @@ def _contamination_pairs(
     # INLINE (not a named column) matters: exploding a named column
     # plants the full gram expression a second time in the inferred
     # size()>0 generator filter — measured 2.5 s vs 0.3 s at sf0.1 for
-    # the gram stage alone (round-6; guide §7.2 duplicated subtrees).
+    # the gram stage alone.
     gram_expr = (
         f"CASE WHEN size(_toks) >= {n} THEN "
         f"array_distinct(transform(sequence(1, size(_toks) - {n - 1}), "
@@ -1417,8 +1404,8 @@ def _contamination_pairs_chunked(
     d, n: int, bench_mod: int, clone_offset: int, n_part: int,
     chunk_tokens: int = 4096,
 ):
-    """Scale-safe n-gram-collision core for LONG documents (round-6
-    optimization; guide §2.5 input skew + §2.4 duplicated subtrees).
+    """Scale-safe n-gram-collision core for LONG documents (input skew
+    and duplicated subtrees).
 
     The per-doc core (`_contamination_pairs`) collapses when the corpus
     is a handful of huge docs: AQE coalesces the byte-tiny-but-CPU-heavy
@@ -1519,9 +1506,9 @@ def q_doc_contamination13(spark, sf_dir):
     clones at +1000). Proves the claimed n-parametricity of the
     operator, not just n=8.
 
-    Round-6: uses _contamination_pairs_chunked — the 50-huge-doc shape
-    defeated AQE's byte-based coalescing (the gram stage ran on ~2
-    tasks, 202 s at sf0.1 in the round-5 driver bench); chunking the
+    Uses _contamination_pairs_chunked: the 50-huge-doc shape defeats
+    AQE's byte-based coalescing (the gram stage ran on ~2 tasks, 202 s
+    at sf0.1); chunking the
     token arrays restores full-width parallelism with identical
     results."""
     d = _heavy(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1608,70 +1595,3 @@ FROM g c JOIN g b USING (gram_h)
 WHERE b.doc_id % 7 = 0 AND c.doc_id % 7 <> 0
 GROUP BY c.doc_id, b.doc_id
 """
-
-
-QUERIES = {
-    "doc_repetition": q_doc_repetition,
-    "doc_contamination": q_doc_contamination,
-    "doc_contamination13": q_doc_contamination13,
-    "dedup_incremental_keep": q_dedup_incremental_keep,
-    "doc_token_stats": q_doc_token_stats,
-    "doc_quality": q_doc_quality,
-    "doc_langid": q_doc_langid,
-    "doc_fingerprint": q_doc_fingerprint,
-    "doc_regex_extract": q_doc_regex_extract,
-    "doc_pii_redact": q_doc_pii_redact,
-    "doc_tfidf_topk": q_doc_tfidf_topk,
-    "doc_enrich_join": q_doc_enrich_join,
-    "doc_split_assign": q_doc_split_assign,
-    "topk_padded": q_topk_padded,
-    "dedup_exact": q_dedup_exact,
-    "dedup_minhash_sig": q_dedup_minhash_sig,
-    "dedup_near_pairs": q_dedup_near_pairs,
-    "dedup_clusters": q_dedup_clusters,
-    "dedup_clusters_star": q_dedup_clusters_star,
-    "dedup_apply": q_dedup_apply,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_simhash_pairs": q_dedup_simhash_pairs,
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "ann_ivf_incremental": q_ann_ivf_incremental,
-    "embed_label_stats": q_embed_label_stats,
-    "dedup_embedding": q_dedup_embedding,
-    "dedup_embedding_banded": q_dedup_embedding_banded,
-    "multimodal_meta": q_multimodal_meta,
-}
-
-ORACLES = {
-    "doc_repetition": SQL_DOC_REPETITION,
-    "doc_contamination": SQL_DOC_CONTAMINATION,
-    "doc_contamination13": SQL_DOC_CONTAMINATION13,
-    "dedup_incremental_keep": SQL_DEDUP_INCREMENTAL_KEEP,
-    "doc_token_stats": SQL_DOC_TOKEN_STATS,
-    "doc_quality": SQL_DOC_QUALITY,
-    "doc_langid": SQL_DOC_LANGID,
-    "doc_fingerprint": SQL_DOC_FINGERPRINT,
-    "doc_regex_extract": SQL_DOC_REGEX_EXTRACT,
-    "doc_pii_redact": SQL_DOC_PII_REDACT,
-    "doc_tfidf_topk": SQL_DOC_TFIDF_TOPK,
-    "doc_enrich_join": SQL_DOC_ENRICH_JOIN,
-    "doc_split_assign": SQL_DOC_SPLIT_ASSIGN,
-    "topk_padded": SQL_TOPK_PADDED,
-    "dedup_exact": SQL_DEDUP_EXACT,
-    "dedup_minhash_sig": SQL_DEDUP_MINHASH_SIG,
-    "dedup_near_pairs": SQL_DEDUP_NEAR_PAIRS,
-    "dedup_clusters": SQL_DEDUP_CLUSTERS,
-    "dedup_clusters_star": SQL_DEDUP_CLUSTERS,
-    "dedup_apply": SQL_DEDUP_APPLY,
-    "dedup_simhash": SQL_DEDUP_SIMHASH,
-    "dedup_simhash_pairs": SQL_DEDUP_SIMHASH_PAIRS,
-    "ann_cosine_topk": SQL_ANN_COSINE_TOPK,
-    "ann_lsh_topk": SQL_ANN_LSH_TOPK,
-    "ann_ivf_topk": SQL_ANN_IVF_TOPK,
-    "ann_ivf_incremental": SQL_ANN_IVF_INCREMENTAL,
-    "embed_label_stats": SQL_EMBED_LABEL_STATS,
-    "dedup_embedding": SQL_DEDUP_EMBEDDING,
-    "dedup_embedding_banded": SQL_DEDUP_EMBEDDING_BANDED,
-    "multimodal_meta": SQL_MULTIMODAL_META,
-}

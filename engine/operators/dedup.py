@@ -34,22 +34,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 # Shingling
 # ---------------------------------------------------------------------------
 
-def word_shingles(col_name: str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of the whitespace-tokenized text
-    column `col_name`. Empty array when fewer than n tokens.
-
-    NOTE: inlines the tokenization into the per-shingle lambda — fine
-    for tests/small inputs; hot paths use `with_shingles` (tokens
-    materialized once per row, not once per shingle)."""
-    return F.expr(
-        f"CASE WHEN size(split(trim({col_name}), '\\\\s+')) >= {n} THEN "
-        f"array_distinct(transform("
-        f"  sequence(1, size(split(trim({col_name}), '\\\\s+')) - {n - 1}),"
-        f"  i -> array_join(slice(split(trim({col_name}), '\\\\s+'), i, {n}), ' ')))"
-        f" ELSE array() END"
-    )
-
-
 def with_shingles(
     df: DataFrame, text_col: str = "text", n: int = 3, out: str = "shingles"
 ) -> DataFrame:
@@ -107,24 +91,11 @@ def minhash_signature(
     md5(shingle || '#' || h). Hex-string min == numeric min (fixed
     width). Docs with zero shingles are dropped (nothing to hash).
 
-    Round-6 shape (guide §1.2 per-task work, measured 2.7 s → 0.4 s at
-    sf0.1): EXPLODE the shingles to rows and compute the 8 md5s as
-    flat whole-stage-codegen columns feeding a partial-aggregated
-    `groupBy(id).agg(min(...))`. The previous per-doc form ran the 8
-    md5 transforms as interpreted HOF lambdas (HOFs never enter
-    codegen) and paid the shingle-array build twice more in the
-    inferred size()>0 filter. min over the exploded multiset equals
-    min over the distinct shingle set, so the signatures are
-    bit-identical; the added exchange carries only the partially
-    aggregated (id, 8×32-char) rows — one narrow row per doc per map
-    task, not the shingle stream.
-
-    PERF NOTE (measured, round 3 — still binding for per-doc-array
-    shapes): deriving 4×32-bit hashes per md5 made this SLOWER (no
-    subexpression elimination across HOF consumers), as did folding
-    the mins into one `aggregate` with a zip_with merge. If this ever
-    reverts to a per-doc-array form, eight independent flat transforms
-    of one md5 each was the fastest such shape (4.2 s)."""
+    Shingles are EXPLODED to rows so the 8 md5s run as flat
+    whole-stage-codegen columns into a partially aggregated
+    `groupBy(id).agg(min(...))`: HOF lambdas over a per-doc shingle
+    array never enter codegen (measured 2.7 s → 0.4 s at sf0.1). min
+    over the exploded multiset equals min over the distinct set."""
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
     t = df.select(F.col(id_col), toks.alias("_toks"))
     sh_expr = (
@@ -184,14 +155,11 @@ def lsh_candidate_pairs(
     """LSH banding candidates: docs sharing any band key. Returns
     distinct (id_a < id_b) pairs.
 
-    Round-6 shape (guide §2.4 remove shuffles / duplicated subtrees):
-    one hash aggregation per (band_idx, band_key) bucket collecting the
-    member ids, then in-bucket pair expansion from the sorted id array
-    — the signature subplan is referenced ONCE instead of twice (the
-    old self-join evaluated the full shingle+minhash pipeline on both
-    sides), and the exchange carries (band_idx, band_key, id) exactly
-    once. Bucket sizes are O(1) w.h.p. so the in-bucket expansion is
-    bounded; degenerate buckets expand quadratically in either shape."""
+    One hash aggregation per (band_idx, band_key) bucket, then
+    in-bucket pair expansion from the sorted id array, so the signature
+    subplan is evaluated once rather than on both sides of a self-join.
+    Bucket sizes are O(1) w.h.p.; degenerate buckets expand
+    quadratically in any banding shape."""
     bands_df = lsh_band_rows(sigs, id_col, num_hashes, bands)
     buckets = (
         bands_df.groupBy("band_idx", "band_key")
@@ -227,15 +195,10 @@ def verified_near_dups(
     candidate pairs → exact n-gram Jaccard on the candidates only →
     keep pairs with jaccard >= threshold.
 
-    Scale shape (round-6 restructure, guide §2.4/§3.1): the expensive
-    exact Jaccard runs ONLY on the candidate set (|candidates| <<
-    |docs|²). The candidate pair list is unpivoted to (pair, id) rows
-    and BROADCAST against the raw docs, so shingles are recomputed for
-    exactly the candidate docs — the old shape re-joined the full
-    corpus-wide shingle subplan twice (two more evaluations of the
-    tokenize+shingle pipeline); this one evaluates the signature
-    subplan once and re-shingles only candidates. Per-pair shingle
-    arrays then meet in one tiny hash aggregation keyed by the pair."""
+    The exact Jaccard runs ONLY on the candidate set: the pair list is
+    unpivoted to (pair, id) rows and BROADCAST against the raw docs, so
+    only candidate docs are re-shingled, and per-pair shingle arrays
+    meet in one small hash aggregation keyed by the pair."""
     sigs = minhash_signature(df, id_col, text_col, num_hashes, shingle_n)
     pairs = lsh_candidate_pairs(sigs, id_col, num_hashes, bands)
     cand_long = pairs.select(
@@ -281,74 +244,14 @@ def connected_components(
     vertices: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components by iterative min-label propagation:
-    label(v) ← min(label(v), min over neighbors of label(n)), repeated
-    until a fixpoint. Returns (id_col, cluster_id) where cluster_id is
-    the minimum vertex id of the component; vertices with no pairs are
-    singletons labeled by their own id.
-
-    `pairs` must carry (id_a, id_b). Each round costs one shuffle join
-    of labels against the (sparse) edge list + one aggregate; rounds =
-    graph diameter. Near-dup graphs are forests of tiny cliques, so
-    this converges in a handful of rounds; for adversarial long-chain
-    graphs (diameter > max_iter) use `connected_components_star`
-    (large-star/small-star contraction, O(log²) rounds). Raises
-    RuntimeError instead of silently returning truncated labels when
-    max_iter is exhausted before the fixpoint.
-    Labels are localCheckpoint()ed every round to truncate lineage."""
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    )
-    labels = vertices.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("lab")
-    ).localCheckpoint()
-    for _ in range(max_iter):
-        neigh = (
-            edges.join(labels.withColumnRenamed("id", "dst"), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.min("lab").alias("_nmin"))
-        )
-        new = (
-            labels.join(neigh, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("lab"), F.coalesce(F.col("_nmin"), F.col("lab"))
-                ).alias("lab"),
-                F.col("lab").alias("_old"),
-            )
-        ).localCheckpoint()
-        changed = new.filter(F.col("lab") != F.col("_old")).count()
-        labels = new.drop("_old")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing): the graph diameter exceeds "
-            f"max_iter — use connected_components_star (O(log²) rounds) or "
-            f"raise max_iter"
-        )
-    return labels.select(F.col("id").alias(id_col), F.col("lab").alias("cluster_id"))
-
-
-def connected_components_star(
-    vertices: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
     max_iter: int = 40,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components by alternating large-star/small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the scale path for adversarial graphs whose
-    diameter exceeds what per-round label propagation can afford:
-    converges in O(log² n) rounds independent of diameter, where
-    `connected_components` needs diameter-many rounds.
+    Beyond", SoCC'14): converges in O(log² n) rounds independent of the
+    graph diameter, so adversarial long chains cost no more than the
+    near-dup graph's tiny cliques. `pairs` must carry (id_a, id_b).
 
     Per round (both halves are one groupBy-shuffle over the edge list;
     vertex payloads are two ids — text/vectors never enter):
@@ -361,10 +264,12 @@ def connected_components_star(
       minimum — flattens partial stars.
 
     Fixpoint when the edge multiset is unchanged (checked with a
-    count + xxhash64-XOR fingerprint: one cheap action per round, same
-    driver-coordination shape as the propagation variant but only
-    O(log²) of them). Returns (id_col, cluster_id), cluster_id = the
-    component's minimum vertex id; singletons label themselves.
+    count + xxhash64-XOR fingerprint: one cheap action per round).
+    Raises RuntimeError rather than return truncated labels if
+    `max_iter` runs out first. Returns (id_col, cluster_id),
+    cluster_id = the component's minimum vertex id; singletons label
+    themselves. Edges are localCheckpoint()ed every round to truncate
+    lineage.
     """
     edges = (
         pairs.select(
@@ -432,7 +337,7 @@ def connected_components_star(
         fp = new_fp
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
+            f"connected_components did not converge in {max_iter} rounds"
         )
     # at the fixpoint every edge is (center=lo, member=hi)
     labels = edges.select(
@@ -456,20 +361,14 @@ def near_dup_clusters(
     bands: int = 4,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    algorithm: str = "label",
 ) -> DataFrame:
     """End-to-end near-duplicate clustering: MinHash-LSH verified pairs
     → connected components → (doc_id, cluster_id). The dedup decision a
-    training pipeline actually executes: keep min-id per cluster.
-
-    `algorithm`: 'label' (min-label propagation; rounds = diameter,
-    right for near-dup clique forests) or 'star' (large-star/small-star
-    contraction; O(log²) rounds, right for adversarial chains)."""
+    training pipeline actually executes: keep min-id per cluster."""
     pairs = verified_near_dups(
         df, id_col, text_col, num_hashes, bands, shingle_n, threshold
     ).select("id_a", "id_b")
-    cc = connected_components_star if algorithm == "star" else connected_components
-    return cc(df.select(id_col), pairs, id_col)
+    return connected_components(df.select(id_col), pairs, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -497,12 +396,10 @@ def simhash16(
             F.conv(F.substring(F.md5("tok"), 1, 4), 16, 10).cast("long"),
         ),
     )
-    # Round-6 (guide §1.2): PACKED bit counters — two bit positions per
-    # 64-bit sum (32-bit fields, overflow-safe to 2^32 distinct tokens
-    # per doc) halve the aggregation buffer count; bit j of the simhash
-    # is then set iff 2*count_set(j) > n_tok, identical to the old
-    # sum-of-±1 > 0 rule. The fewer generated aggregate expressions
-    # also compile ~3x faster, which a one-shot bench run pays in full.
+    # PACKED bit counters, two bit positions per 64-bit sum (32-bit
+    # fields, overflow-safe to 2^32 distinct tokens per doc): half the
+    # aggregation buffers, which also compile ~3x faster. Bit j is set
+    # iff 2*count_set(j) > n_tok, the sum-of-±1 > 0 rule.
     packed_sums = [
         F.sum(
             F.when(
@@ -582,13 +479,9 @@ def simhash64(
                 ).cast("long"),
             ),
         )
-    # Round-6 (guide §1.2): PACKED bit counters, two positions per
-    # 64-bit sum (32-bit fields) — num_chunks*chunk_bits/2 aggregation
-    # buffers instead of num_chunks*chunk_bits. Bit j is set iff
-    # 2*count_set(j) > n_tok, identical to the old sum-of-±1 > 0 rule
-    # (sum = 2*cnt - n_tok). Measured at sf0.1: 3.5 s → 1.1 s for the
-    # one-shot run (codegen compilation of 64 independent aggregate
-    # expressions dominated), 0.6 s both warm.
+    # PACKED bit counters, as in simhash16: bit j is set iff
+    # 2*count_set(j) > n_tok (measured 3.5 s → 1.1 s one-shot at sf0.1,
+    # where codegen of 64 separate aggregates dominated).
     packed_sums = [
         F.sum(
             F.when(
@@ -619,43 +512,6 @@ def simhash64(
     return agg.select(*out_cols)
 
 
-def _chunk_candidate_pairs(
-    sims: DataFrame, id_col: str, num_chunks: int
-) -> DataFrame:
-    """Distinct (id_a < id_b) pairs agreeing on >= 1 simhash chunk —
-    the blocking stage of `simhash_near_pairs`, exposed so tests can
-    measure the candidate ENVELOPE independently of verification.
-
-    Round-6 measured note: this self-join is NOT a duplicated-subtree
-    problem — the two sides are canonically identical, so ReuseExchange
-    computes the chunk exchange once. A bucket-aggregate rewrite
-    (collect_list + in-bucket expansion, as in `lsh_candidate_pairs`)
-    measured SLOWER here (3.5 s vs 2.1 s at sf0.1): it traded the
-    reused exchange for an ObjectHashAggregate + struct sort."""
-    chunk_structs = F.array(
-        *[
-            F.struct(F.lit(c).alias("chunk_idx"), F.col(f"sim_{c}").alias("cv"))
-            for c in range(num_chunks)
-        ]
-    )
-    chunks = sims.select(
-        F.col(id_col), F.explode(chunk_structs).alias("ch")
-    ).select(id_col, "ch.chunk_idx", "ch.cv")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-
-
 def simhash_near_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -684,17 +540,15 @@ def simhash_near_pairs(
     budget) or shard the join by a cheap doc-class prefix. The
     verified output is unaffected; only the intermediate grows.
 
-    Scale shape (round-6 restructure, measured 2.0 s → warm sub-second
-    at sf0.1): the chunk self-join carries the full signature on both
-    sides (num_chunks extra ints per bucket row), so the exact Hamming
-    check runs INSIDE the join stage and candidates failing it die
-    before any further exchange. The old shape piped ~2M raw candidate
-    pairs (this corpus's chunk values form large cliques) through a
-    distinct exchange and two verification joins; now only verified
-    pairs reach the final distinct. The two join sides are canonically
-    identical, so ReuseExchange computes the bucket exchange once.
-    Chunk buckets are O(n/2^chunk_bits) for random hashes; degenerate
-    value cliques still expand in-join, as in any banding scheme.
+    Scale shape: the chunk self-join carries the full signature on
+    both sides (num_chunks extra ints per bucket row), so the exact
+    Hamming check runs INSIDE the join stage and only verified pairs
+    reach the final distinct. The two join sides are canonically
+    identical, so ReuseExchange computes the bucket exchange once (a
+    collect_list bucket rewrite, as in `lsh_candidate_pairs`, measured
+    slower here: 3.5 s vs 2.1 s at sf0.1). Chunk buckets are
+    O(n/2^chunk_bits) for random hashes; degenerate value cliques still
+    expand in-join, as in any banding scheme.
     """
     sims = simhash64(df, id_col, text_col, num_chunks, chunk_bits).filter(
         F.col("sim_0").isNotNull()

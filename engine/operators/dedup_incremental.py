@@ -1,12 +1,12 @@
 """Incremental MinHash near-dup dedup for streaming ingest.
 
-The realistic training-data flow (round-3 verdict item #5): documents
-arrive in batches/epochs; each new batch's MinHash signatures are
-checked against the COMMITTED signature state, so dedup cost per epoch
-is O(new docs × bucket collisions), never a full-corpus re-run — while
-the resulting keep-list stays EXACTLY equal to what the batch
-`near_dup_clusters` operator would produce over everything ingested so
-far (batch-parity is test-pinned).
+The realistic training-data flow: documents arrive in batches/epochs;
+each new batch's MinHash signatures are checked against the COMMITTED
+signature state, so dedup cost per epoch is O(new docs × bucket
+collisions), never a full-corpus re-run — while the resulting keep-list
+stays EXACTLY equal to what the batch `near_dup_clusters` operator
+would produce over everything ingested so far (batch-parity is
+test-pinned).
 
 State (three TableIO tables in one warehouse):
 - `docs`      (doc_id, text)                 — the ingested corpus.
@@ -26,10 +26,10 @@ re-examined. Connected components are then maintained EXACTLY: an
 epoch recomputes labels only on the AFFECTED subgraph (the new docs,
 every doc they touch, and all members of those docs' current clusters,
 connected by the new verified edges plus the doc→rep star edges that
-encode the old equivalences). Min-label propagation on that subgraph
-merges clusters transitively across epochs, including retroactive
-merges (a new doc bridging two old clusters re-labels BOTH to the
-global min) — the part first-seen-wins heuristics get wrong.
+encode the old equivalences). Connected components (min-id labels)
+on that subgraph merge clusters transitively across epochs, including
+retroactive merges (a new doc bridging two old clusters re-labels BOTH
+to the global min) — the part first-seen-wins heuristics get wrong.
 
 Scale shape at 100 TB: per epoch, the only full-state relations
 touched are `doc_sigs` (band join against the new docs' bands — a
@@ -120,7 +120,7 @@ def ingest_dedup_increment(
     # otherwise leaves sigs committed but doc_rep empty, and a
     # latest_rep() read keyed on the sigs table would raise on every
     # retry — wedging the pipeline in exactly the crash window the
-    # commit protocol promises to absorb (round-4 review finding #1).
+    # commit protocol promises to absorb.
     # Sigs without rep rows are also CORRECT to read here: those docs'
     # cluster state is exactly what the retried epoch recomputes. The
     # committed side anti-joins away the new doc ids (broadcast-sized)
@@ -140,9 +140,9 @@ def ingest_dedup_increment(
     if io.committed_runs(REP_TABLE):
         rep_old = latest_rep(spark, io)
     else:
-        # doc_id type follows the caller's corpus (round-4 advice #4: a
-        # hardcoded `long` broke the first epoch of string-keyed corpora
-        # with a unionByName/join type mismatch); rep_id is always the
+        # doc_id type follows the caller's corpus (a hardcoded `long`
+        # breaks the first epoch of a string-keyed corpus with a
+        # unionByName/join type mismatch); rep_id is always the
         # same type as doc_id (it IS a doc_id — the cluster min).
         id_t = new_docs.schema["doc_id"].dataType.simpleString()
         rep_old = spark.createDataFrame([], f"doc_id {id_t}, rep_id {id_t}")
@@ -166,15 +166,12 @@ def ingest_dedup_increment(
         .distinct()
     )
     # Exact Jaccard verification on candidates only; text re-read just
-    # for the bounded candidate id set. Round-6 (same restructure as
-    # batch verified_near_dups, measured 25 s → ~3 s at a 20k-doc
-    # epoch): the old two-sided shingle rejoin replanted the candidate
-    # band join THREE times (cand + once per side via cand_ids) and the
-    # shingle projection twice; unpivoting the pair list to (pair, id)
-    # rows, broadcasting it against the corpus, and meeting the two
-    # shingle arrays in one per-pair aggregation references every
-    # subplan exactly once. The broadcast is of candidate PAIRS — the
-    # same bounded set the old cand_ids broadcast-side carried.
+    # for the bounded candidate id set. As in batch verified_near_dups,
+    # the pair list is unpivoted to (pair, id) rows, broadcast against
+    # the corpus, and the two shingle arrays meet in one per-pair
+    # aggregation, so every subplan is referenced once (a two-sided
+    # shingle rejoin replans the band join three times: 25 s vs ~3 s
+    # at a 20k-doc epoch).
     cand_long = cand.select(
         F.struct("id_a", "id_b").alias("_p"),
         F.explode(F.array("id_a", "id_b")).alias("doc_id"),

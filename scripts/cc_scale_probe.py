@@ -1,8 +1,8 @@
-"""Scale probe for connected_components_star (round-4 verdict item
-#9): one measured datapoint on a planted >=10^6-edge graph backing the
-O(log^2) rounds claim with evidence — rounds to fixpoint, wall clock,
-and peak/total shuffle bytes from the Spark REST stage metrics
-(weather-independent, per the round-4 spill lesson).
+"""Scale probe for connected_components (large-star/small-star): one
+measured datapoint on a planted >=10^6-edge graph backing the O(log^2)
+rounds claim with evidence — rounds to fixpoint, wall clock, and
+peak/total shuffle bytes from the Spark REST stage metrics (bytes do
+not depend on host weather).
 
 Graph: C chains of length L (distributed spark.range generation — no
 driver-side edge list). Chains are the ADVERSARIAL case: diameter
@@ -34,7 +34,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from bench import _cpu_probe
-    from engine.operators.dedup import connected_components_star
+    from engine.operators.dedup import connected_components
     from engine.session import build_session
 
     spark = build_session(
@@ -58,7 +58,7 @@ def main() -> None:
     probe_before = _cpu_probe(args.cpus)
     stats: dict = {}
     t0 = time.time()
-    labels = connected_components_star(
+    labels = connected_components(
         verts, edges, "doc_id", max_iter=40, stats=stats
     )
     agg = labels.agg(

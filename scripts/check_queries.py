@@ -72,6 +72,9 @@ def main():
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        ap.error(f"unknown queries: {', '.join(unknown)}")
 
     from engine.session import build_session
 

@@ -14,12 +14,29 @@ from engine.operators.dedup import (
     minhash_signature,
     simhash16,
     verified_near_dups,
-    word_shingles,
+    with_shingles,
 )
 
 BASE = "the quick brown fox jumps over the lazy dog near the old river bank today"
 NEAR = "the quick brown fox jumps over the lazy dog near the old river bank tonight"
 OTHER = "completely different text with no overlap whatsoever in any shingle at all"
+
+
+def union_find(n, edges):
+    """Single-process connected-components oracle: min-id labels."""
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in range(n)}
 
 
 @pytest.fixture(scope="module")
@@ -88,14 +105,14 @@ def test_simhash_identical_and_bounded(docs):
 
 def test_word_shingles_edge_cases(spark):
     df = spark.createDataFrame(
-        [(1, "a b c d"), (2, "a b"), (3, "   ")], "doc_id long, text string"
+        [(1, "a b c d"), (2, "a b"), (3, "   "), (4, None)],
+        "doc_id long, text string",
     )
-    got = {r["doc_id"]: r["sh"] for r in df.select(
-        "doc_id", word_shingles("text").alias("sh")
-    ).collect()}
+    got = {r["doc_id"]: r["sh"] for r in with_shingles(df, out="sh").collect()}
     assert got[1] == ["a b c", "b c d"]
     assert got[2] == []
     assert got[3] == []
+    assert got[4] == []
 
 
 def test_simhash_near_pairs_complete_vs_bruteforce(docs, spark):
@@ -134,8 +151,8 @@ def test_simhash64_chunks_bounded(docs):
 
 
 def test_connected_components_chain_and_singletons(spark):
-    """Min-label propagation converges past multi-hop chains (diameter
-    3 here — deeper than any sf0.01 cluster) and leaves singletons
+    """Connected components converge past multi-hop chains (diameter
+    3 here — deeper than any sf0.01 cluster) and leave singletons
     labeled by their own id."""
     from engine.operators.dedup import connected_components
 
@@ -158,11 +175,7 @@ def test_simhash_candidate_envelope(spark):
     verification never promotes a random collision to a near-dup."""
     import random
 
-    from engine.operators.dedup import (
-        _chunk_candidate_pairs,
-        simhash64,
-        simhash_near_pairs,
-    )
+    from engine.operators.dedup import simhash_near_pairs
 
     rng = random.Random(99)
     n = 1500
@@ -173,8 +186,10 @@ def test_simhash_candidate_envelope(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     def n_candidates(chunk_bits):
-        sims = simhash64(docs, num_chunks=4, chunk_bits=chunk_bits)
-        return _chunk_candidate_pairs(sims, "doc_id", 4).count()
+        # every candidate passes a Hamming bound of all 4*chunk_bits bits
+        return simhash_near_pairs(
+            docs, max_hamming=4 * chunk_bits, num_chunks=4, chunk_bits=chunk_bits
+        ).count()
 
     expected16 = 4 * n * (n - 1) / 2 / 2**16  # ≈ 69 at n=1500
     c16 = n_candidates(16)
@@ -187,47 +202,32 @@ def test_simhash_candidate_envelope(spark):
 
 
 def test_connected_components_star_differential(spark):
-    """Large-star/small-star contraction agrees with min-label
-    propagation on a mixed graph: cliques, a chain, singletons."""
-    from engine.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """Large-star/small-star contraction agrees with the union-find
+    oracle on a mixed graph: cliques, a chain, singletons."""
+    from engine.operators.dedup import connected_components
 
+    edges = [
+        (1, 4), (4, 6), (6, 7), (2, 3),          # chain + pair
+        (10, 11), (11, 12), (10, 12),            # triangle
+        (15, 18), (18, 16), (16, 19), (19, 15),  # cycle
+    ]
     vertices = spark.createDataFrame([(i,) for i in range(20)], "doc_id long")
-    pairs = spark.createDataFrame(
-        [
-            (1, 4), (4, 6), (6, 7), (2, 3),          # chain + pair
-            (10, 11), (11, 12), (10, 12),            # triangle
-            (15, 18), (18, 16), (16, 19), (19, 15),  # cycle
-        ],
-        "id_a long, id_b long",
-    )
-    lab = {
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    star = {
         r["doc_id"]: r["cluster_id"]
         for r in connected_components(vertices, pairs).collect()
     }
-    star = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components_star(vertices, pairs).collect()
-    }
-    assert star == lab
+    assert star == union_find(20, edges)
     assert star[15] == star[16] == star[18] == star[19] == 15
     assert star[0] == 0 and star[5] == 5  # singletons
 
 
 def test_connected_components_star_long_chain(spark):
-    """The adversarial case the propagation variant cannot afford: a
-    path graph of diameter 119. Star contraction converges in O(log²)
-    rounds (asserted <= 12 here); min-label propagation at its default
-    25-round cap now RAISES instead of silently returning truncated
-    labels (ADVICE r2)."""
-    import pytest
-
-    from engine.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """The adversarial case for per-round label propagation: a path
+    graph of diameter 119. Star contraction converges in O(log²)
+    rounds (asserted <= 12 here), and RAISES rather than return
+    truncated labels when its round cap runs out first."""
+    from engine.operators.dedup import connected_components
 
     n = 120
     vertices = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
@@ -236,39 +236,21 @@ def test_connected_components_star_long_chain(spark):
     )
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in connected_components_star(vertices, pairs, max_iter=12).collect()
+        for r in connected_components(vertices, pairs, max_iter=12).collect()
     }
     assert got == {i: 0 for i in range(n)}
 
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(vertices, pairs)
+        connected_components(vertices, pairs, max_iter=1)
 
 
 def test_connected_components_random_graphs_vs_union_find(spark):
-    """Property check over random graphs: BOTH distributed CC
-    algorithms reproduce a single-process union-find oracle (min-id
-    labels), across densities from forest-sparse to near-complete."""
+    """Property check over random graphs: the distributed CC operator
+    reproduces the single-process union-find oracle (min-id labels),
+    across densities from forest-sparse to near-complete."""
     import random
 
-    from engine.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    def union_find(n, edges):
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        return {i: find(i) for i in range(n)}
+    from engine.operators.dedup import connected_components
 
     rng = random.Random(17)
     for n_edges in (5, 25, 80):
@@ -280,11 +262,11 @@ def test_connected_components_random_graphs_vs_union_find(spark):
         vertices = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
         exp = union_find(n, edges)
-        for cc in (connected_components, connected_components_star):
-            got = {
-                r["doc_id"]: r["cluster_id"] for r in cc(vertices, pairs).collect()
-            }
-            assert got == exp, (cc.__name__, n_edges)
+        got = {
+            r["doc_id"]: r["cluster_id"]
+            for r in connected_components(vertices, pairs).collect()
+        }
+        assert got == exp, n_edges
 
 
 def test_near_dup_clusters_planted(docs):

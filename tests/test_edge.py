@@ -131,16 +131,15 @@ def test_round3_operators_on_empty_input(spark):
 
 
 def test_empty_graph_connected_components(spark):
-    from engine.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from engine.operators.dedup import connected_components
 
     vertices = spark.createDataFrame([(1,), (2,)], "doc_id long")
     no_pairs = spark.createDataFrame([], "id_a long, id_b long")
-    for cc in (connected_components, connected_components_star):
-        got = {r["doc_id"]: r["cluster_id"] for r in cc(vertices, no_pairs).collect()}
-        assert got == {1: 1, 2: 2}, cc.__name__
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in connected_components(vertices, no_pairs).collect()
+    }
+    assert got == {1: 1, 2: 2}
 
 
 def test_datasource_zero_convs(spark):

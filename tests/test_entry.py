@@ -6,6 +6,8 @@ running a job where possible."""
 from __future__ import annotations
 
 import importlib.util
+import subprocess
+import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -29,6 +31,33 @@ def test_oracle_keys_align():
     o = set(m.oracle_sql())
     assert o <= q, f"oracles without queries: {o - q}"
     assert q - o == ROWS_ONLY, f"unexpected rows-only entries: {q - o}"
+
+
+def test_every_builder_and_oracle_is_registered():
+    """A q_* builder or SQL_* oracle that was written but never put in
+    the registry is dead code the driver never checks."""
+    from engine import doc_queries, queries
+
+    m = _entry()
+    builders = list(m.queries().values())
+    oracles = set(m.oracle_sql().values())
+    for mod in (queries, doc_queries):
+        for attr, val in vars(mod).items():
+            if attr.startswith("q_"):
+                assert any(val is b for b in builders), f"{mod.__name__}.{attr}"
+            elif attr.startswith("SQL_"):
+                assert val in oracles, f"{mod.__name__}.{attr}"
+
+
+def test_check_queries_rejects_unknown_names():
+    """A typo must not check nothing and report FAILURES: 0."""
+    proc = subprocess.run(
+        [sys.executable, str(ROOT / "scripts" / "check_queries.py"),
+         "unused_sf_dir", "no_such_query"],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 2, proc.stdout + proc.stderr
+    assert "no_such_query" in proc.stderr
 
 
 def test_oracles_are_nonempty_sql():

@@ -231,17 +231,16 @@ def _exchanges(plan: str) -> list[tuple[str, str]]:
 @pytest.mark.parametrize("name", ["dedup_near_pairs", "dedup_simhash_pairs"])
 def test_dedup_pair_join_plan_shape(spark, name):
     """The dedup family's candidate generation must stay BUCKETED at
-    any scale (round-3 verdict pin request): the banded/chunked
-    self-join may never plan a BroadcastNestedLoopJoin or
-    CartesianProduct (all-pairs), the scan must prune to doc_id+text
-    only, and every HASH-partitioned exchange (a join/agg shuffle)
+    any scale: the banded/chunked self-join may never plan a
+    BroadcastNestedLoopJoin or CartesianProduct (all-pairs), the scan
+    must prune to doc_id+text only, and every HASH-partitioned exchange (a join/agg shuffle)
     must carry only ids and hashes — document text may move only in
     the adaptive round-robin scan-spread repartition (sandbox-only:
     single-file inputs; at real scale the scan has many splits and
     that repartition is skipped, engine/doc_queries._heavy)."""
-    from engine.doc_queries import QUERIES
+    import __spark_entry__ as entry
 
-    plan = _formatted(spark, QUERIES[name](spark, SF))
+    plan = _formatted(spark, entry.queries()[name](spark, SF))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     # column pruning at the source
