@@ -15,21 +15,16 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from engine.functions import docs as D
 from engine.operators import dedup as DD
 from engine.operators import similarity as SIM
+from engine.queries import _t
 
 _BPE_SQL = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 _NORM_SQL = r"lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"
 _TOKS_SQL = r"string_split_regex(trim(text), '\s+')"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def _heavy(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read for compute-heavy per-row queries, repartitioning ONLY when
-    the scan is under-parallel (same adaptive doctrine as the flagship
-    pipeline, engine/pipeline.py): the test tables are single parquet
+    the scan is under-parallel: the test tables are single parquet
     files — one scan task would run all the per-row md5/regex work
     serially — but at real scale the input has many splits and a blind
     repartition would add a full extra shuffle of the text for
@@ -707,7 +702,8 @@ SELECT doc_id FROM cc WHERE doc_id = cluster_id
 
 def q_dedup_simhash(spark, sf_dir):
     d = _heavy(spark, sf_dir, "documents")
-    return DD.simhash16(d)
+    sims = DD.simhash64(d, num_chunks=1, chunk_bits=16)
+    return sims.select("doc_id", F.col("sim_0").alias("simhash"))
 
 
 _BITSUMS_SQL = ", ".join(
@@ -813,6 +809,24 @@ FROM r WHERE rank <= 3
 """
 
 
+def _label_mean_centroids(e: DataFrame) -> DataFrame:
+    """(cell_id, centroid): the per-label mean embedding, components
+    rounded to 6dp — the deterministic, oracle-exact IVF quantizer of
+    the ann gate queries."""
+    flat = e.select(
+        "label", F.posexplode(F.col("embedding")).alias("pos", "v")
+    ).withColumn("v", F.col("v").cast("double"))
+    cmean = flat.groupBy("label", "pos").agg(F.round(F.avg("v"), 6).alias("m"))
+    return (
+        cmean.groupBy("label")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("_pm"))
+        .select(
+            F.col("label").alias("cell_id"),
+            F.transform("_pm", lambda x: x.m).alias("centroid"),
+        )
+    )
+
+
 def q_ann_ivf_topk(spark, sf_dir):
     """IVF ANN top-3 at nprobe=2: the trained-coarse-quantizer scale
     path, searching each probe's two nearest cells (the standard IVF
@@ -823,25 +837,11 @@ def q_ann_ivf_topk(spark, sf_dir):
     centers — the plan is identical). Centroid components are rounded
     to 6dp in BOTH engines BEFORE the distance argmin so partial-
     aggregation summation order cannot flip an assignment."""
-    from pyspark.sql import Window
-
     e = _t(spark, sf_dir, "embeddings")
-    flat = e.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos", "v")
-    ).withColumn("v", F.col("v").cast("double"))
-    cmean = flat.groupBy("label", "pos").agg(F.round(F.avg("v"), 6).alias("m"))
-    cent = (
-        cmean.groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("_pm"))
-        .select(
-            F.col("label").alias("cell_id"),
-            F.transform("_pm", lambda x: x.m).alias("centroid"),
-        )
-    )
     probes = e.filter(F.col("vec_id") < _N_PROBES).select(
         F.col("vec_id").alias("probe_id"), "embedding"
     )
-    return SIM.ivf_topk(e, probes, cent, k=3, nprobe=2)
+    return SIM.ivf_topk(e, probes, _label_mean_centroids(e), k=3, nprobe=2)
 
 
 _D2_SQL = (
@@ -932,24 +932,7 @@ def q_ann_ivf_incremental(spark, sf_dir):
         # oracle-exact (the trainer is caller-pluggable by contract;
         # the k-means path is differentially tested in
         # tests/test_ann_incremental.py)
-        flat = (
-            e.filter(F.col("vec_id") % 2 == 0)
-            .select("label", F.posexplode("embedding").alias("pos", "v"))
-            .withColumn("v", F.col("v").cast("double"))
-        )
-        cmean = flat.groupBy("label", "pos").agg(
-            F.round(F.avg("v"), 6).alias("m")
-        )
-        return (
-            cmean.groupBy("label")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("_pm")
-            )
-            .select(
-                F.col("label").alias("cell_id"),
-                F.transform("_pm", lambda x: x.m).alias("centroid"),
-            )
-        )
+        return _label_mean_centroids(e.filter(F.col("vec_id") % 2 == 0))
 
     scratch = os.path.join(tempfile.gettempdir(), "ann_inc_gate_scratch")
     shutil.rmtree(scratch, ignore_errors=True)
@@ -1080,9 +1063,9 @@ FROM p
 
 
 def q_dedup_embedding(spark, sf_dir):
-    """Embedding-cosine near-dup pairs (single sign-LSH code block,
-    cos >= 0.9) — the oracle-simple small-scale variant; the banded
-    query below is the 100 TB blocking scheme.
+    """Embedding-cosine near-dup pairs blocked by ONE 8-bit sign code
+    (the banded operator at bands=1, cos >= 0.9) — the oracle-simple
+    small-scale setting; the banded query below is the 100 TB one.
 
     The test corpus has no natural near-dups (max pairwise cos ~0.51),
     so — like the banded query — this plants them deterministically:
@@ -1106,7 +1089,9 @@ def q_dedup_embedding(spark, sf_dir):
             ),
         ).alias("embedding"),
     )
-    return SIM.cosine_near_dups(base.unionByName(pert), threshold=0.9)
+    return SIM.cosine_near_dups_banded(
+        base.unionByName(pert), threshold=0.9, bands=1, bits_per_band=8
+    )
 
 
 def q_dedup_simhash_pairs(spark, sf_dir):

@@ -4,8 +4,9 @@ Round-4 verdict item #7: dedup is incremental
 (engine/operators/dedup_incremental.py) but IVF was batch-only. This
 module mirrors the same pattern for the ANN index: vectors arrive in
 batches/epochs; each epoch is ASSIGNED against the COMMITTED coarse-
-quantizer snapshot (a per-row broadcast-argmin projection — the corpus
-never shuffles, exactly the `ivf_topk` assignment shape), so index
+quantizer snapshot (`similarity.assign_cells`, the per-row
+broadcast-argmin projection `ivf_topk` assigns with — the corpus
+never shuffles), so index
 maintenance cost per epoch is O(new vectors), never a full re-train —
 until measured drift says the quantizer no longer fits the data, at
 which point the epoch retrains on the full corpus and re-assigns
@@ -49,12 +50,13 @@ ingest.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from engine.operators.core import argmax_by
 from engine.operators.similarity import (
-    _cell_scores,
-    _to_double,
-    cosine,
+    assign_cells,
+    probe_cells,
+    rank_topk,
     train_centroids,
 )
 from engine.tableio import TableIO
@@ -62,45 +64,6 @@ from engine.tableio import TableIO
 VECS_TABLE = "ann_vecs"
 CENTROIDS_TABLE = "ann_centroids"
 ASSIGN_TABLE = "ann_assign"
-
-
-def _cent_arr(centroids: DataFrame):
-    """One-row broadcast (cid, cvec) struct-array of the centroid
-    table — the shape `_cell_scores` consumes."""
-    return F.broadcast(
-        centroids.agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("cell_id").alias("cid"),
-                        _to_double(F.col("centroid")).alias("cvec"),
-                    )
-                )
-            ).alias("_cents")
-        )
-    )
-
-def assign_cells(
-    vecs: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, vec, cell_id, d2): argmin squared-L2 assignment of every
-    vector against the (tiny) centroid table — a pure projection over
-    a one-row broadcast, identical semantics to `ivf_topk`'s corpus
-    side (shared `_cell_scores`; ties break to the smaller cell_id)."""
-    best = F.array_min(_cell_scores(_to_double(F.col(vec_col)), "cell_id"))
-    return (
-        vecs.select(id_col, vec_col)
-        .crossJoin(_cent_arr(centroids))
-        .select(
-            F.col(id_col),
-            F.col(vec_col),
-            best["cell_id"].alias("cell_id"),
-            best["_d2"].alias("d2"),
-        )
-    )
 
 
 def latest_centroids(spark: SparkSession, io: TableIO) -> DataFrame:
@@ -114,14 +77,11 @@ def latest_centroids(spark: SparkSession, io: TableIO) -> DataFrame:
 
 
 def latest_assignment(spark: SparkSession, io: TableIO) -> DataFrame:
-    """Current (vec_id, cell_id, d2): latest upd_seq wins per vector."""
-    a = io.read(spark, ASSIGN_TABLE)
-    w = Window.partitionBy("vec_id").orderBy(F.col("upd_seq").desc())
-    return (
-        a.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("vec_id", "cell_id", "d2")
-    )
+    """Current (vec_id, cell_id, d2): latest upd_seq wins per vector
+    (a vector gets at most one row per epoch)."""
+    return argmax_by(
+        io.read(spark, ASSIGN_TABLE), "vec_id", "upd_seq", "cell_id"
+    ).select("vec_id", "cell_id", "d2")
 
 
 def ingest_ann_increment(
@@ -234,44 +194,20 @@ def ann_query(
 ) -> DataFrame:
     """IVF search over the maintained index, using the STORED inverted
     file (the committed assignment) instead of re-deriving it — the
-    payoff of incremental maintenance. Probe cells are computed against
-    the committed centroid snapshot with the same broadcast expression;
-    candidates are the stored members of the probe's `nprobe` nearest
-    cells; exact cosine re-ranks. Plan: one hash join on cell_id + one
-    per-probe top-k — the corpus never shuffles for assignment."""
-    cents = latest_centroids(spark, io)
+    payoff of incremental maintenance. The probe cells and the re-rank
+    are `ivf_topk`'s own steps (`probe_cells` against the committed
+    centroid snapshot, `rank_topk`); candidates are the stored members
+    of the probe's `nprobe` nearest cells. Plan: one hash join on
+    cell_id + one per-probe top-k — the corpus never shuffles."""
     corpus = (
         io.read(spark, VECS_TABLE)
         .select("vec_id", "embedding")
         .join(latest_assignment(spark, io).select("vec_id", "cell_id"),
               "vec_id")
     )
-    p_cells = F.broadcast(
-        probes.select(probe_id, F.col(vec_col).alias("_pv"))
-        .crossJoin(_cent_arr(cents))
-        .select(
-            F.col(probe_id),
-            F.col("_pv"),
-            F.explode(
-                F.slice(
-                    F.array_sort(
-                        _cell_scores(_to_double(F.col("_pv")), "cell_id")
-                    ),
-                    1, nprobe,
-                )
-            ).alias("_pc"),
-        )
-        .select(probe_id, "_pv", F.col("_pc")["cell_id"].alias("cell_id"))
+    p_cells = probe_cells(
+        probes, latest_centroids(spark, io), nprobe, probe_id, vec_col
     )
-    pairs = corpus.join(p_cells, "cell_id").filter(
-        F.col("vec_id") != F.col(probe_id)
-    )
-    pairs = pairs.withColumn("cos", cosine(F.col("embedding"), F.col("_pv")))
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(probe_id, "vec_id", F.round("cos", 6).alias("cos"), "rank")
+    return rank_topk(
+        corpus.join(p_cells, "cell_id"), k, "vec_id", "embedding", probe_id
     )

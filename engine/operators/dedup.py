@@ -15,10 +15,11 @@ full family, so these are built Spark-first:
                     rejoined only for the tiny candidate set. Bucket
                     sizes are bounded w.h.p.; AQE skew-join splits any
                     pathological bucket.
-- SimHash:          64 bits are overkill for an oracle-checkable demo;
-                    we emit a 16-bit simhash from token hashes via one
-                    explode + hash-agg (both shuffles are on doc_id —
-                    partial-aggregated map-side).
+- SimHash:          `num_chunks` x `chunk_bits`-bit chunks from token
+                    hashes via one explode + hash-agg (the shuffle is
+                    on doc_id, partial-aggregated map-side); one chunk
+                    of 16 bits is the plain 16-bit simhash, 4x16 feeds
+                    the banded Hamming pair join.
 
 Every hash is md5-based (hex strings; fixed-width lowercase hex makes
 lexicographic MIN == numeric MIN), so DuckDB oracles reproduce values
@@ -27,7 +28,7 @@ bit-exactly — no engine-specific hash functions anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 # ---------------------------------------------------------------------------
@@ -182,30 +183,28 @@ def lsh_candidate_pairs(
     )
 
 
-def verified_near_dups(
-    df: DataFrame,
+def verify_jaccard(
+    docs: DataFrame,
+    pairs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 8,
-    bands: int = 4,
     shingle_n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: signatures → band buckets →
-    candidate pairs → exact n-gram Jaccard on the candidates only →
-    keep pairs with jaccard >= threshold.
+    """Exact n-gram Jaccard of candidate (id_a, id_b) pairs over `docs`:
+    (id_a, id_b, jaccard) with jaccard >= threshold. A pair whose doc
+    is missing or has no shingles is dropped.
 
-    The exact Jaccard runs ONLY on the candidate set: the pair list is
-    unpivoted to (pair, id) rows and BROADCAST against the raw docs, so
-    only candidate docs are re-shingled, and per-pair shingle arrays
-    meet in one small hash aggregation keyed by the pair."""
-    sigs = minhash_signature(df, id_col, text_col, num_hashes, shingle_n)
-    pairs = lsh_candidate_pairs(sigs, id_col, num_hashes, bands)
+    Only candidate docs are re-shingled: the pair list is unpivoted to
+    (pair, id) rows and BROADCAST against the docs, and the two shingle
+    arrays meet in one per-pair hash aggregation, so each input subplan
+    is referenced once (a two-sided shingle rejoin replans the
+    candidate join three times: 25 s vs ~3 s at a 20k-doc epoch)."""
     cand_long = pairs.select(
         F.struct("id_a", "id_b").alias("_p"),
         F.explode(F.array("id_a", "id_b")).alias(id_col),
     )
-    cand_docs = df.select(F.col(id_col), F.col(text_col)).join(
+    cand_docs = docs.select(F.col(id_col), F.col(text_col)).join(
         F.broadcast(cand_long), id_col
     )
     cand_sh = with_shingles(cand_docs, text_col, shingle_n).select(
@@ -221,8 +220,11 @@ def verified_near_dups(
             ignorenulls=True,
         ).alias("sh_b"),
     )
+    # after the aggregation: a filter on `shingles` would be pushed
+    # below the broadcast join and re-shingle every doc of `docs`
     return (
-        both.withColumn(
+        both.filter((F.size("sh_a") > 0) & (F.size("sh_b") > 0))
+        .withColumn(
             "jaccard",
             F.size(F.array_intersect("sh_a", "sh_b"))
             / F.size(F.array_union("sh_a", "sh_b")),
@@ -234,6 +236,23 @@ def verified_near_dups(
             F.round("jaccard", 6).alias("jaccard"),
         )
     )
+
+
+def verified_near_dups(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 8,
+    bands: int = 4,
+    shingle_n: int = 3,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """Full MinHash-LSH near-dup pipeline: signatures → band buckets →
+    candidate pairs → exact n-gram Jaccard on the candidates only
+    (`verify_jaccard`) → keep pairs with jaccard >= threshold."""
+    sigs = minhash_signature(df, id_col, text_col, num_hashes, shingle_n)
+    pairs = lsh_candidate_pairs(sigs, id_col, num_hashes, bands)
+    return verify_jaccard(df, pairs, id_col, text_col, shingle_n, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -375,73 +394,6 @@ def near_dup_clusters(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash16(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """16-bit SimHash over distinct whitespace tokens. Token hash =
-    first 4 hex chars of md5(token) as an integer; bit j of the simhash
-    is set iff the sum over tokens of ±1 (by bit j of the token hash)
-    is positive. One explode + one hash-agg keyed on id (partial
-    map-side combine keeps the shuffle small). Docs with no tokens get
-    simhash NULL."""
-    toks = df.select(
-        F.col(id_col),
-        F.explode_outer(
-            F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+"))
-        ).alias("tok"),
-    ).withColumn(
-        "h",
-        F.when(
-            F.col("tok").isNotNull() & (F.col("tok") != ""),
-            F.conv(F.substring(F.md5("tok"), 1, 4), 16, 10).cast("long"),
-        ),
-    )
-    # PACKED bit counters, two bit positions per 64-bit sum (32-bit
-    # fields, overflow-safe to 2^32 distinct tokens per doc): half the
-    # aggregation buffers, which also compile ~3x faster. Bit j is set
-    # iff 2*count_set(j) > n_tok, the sum-of-±1 > 0 rule.
-    packed_sums = [
-        F.sum(
-            F.when(
-                F.col("h").isNull(), F.lit(0).cast("long")
-            ).otherwise(
-                F.shiftright(F.col("h"), g).bitwiseAND(1)
-                + F.shiftleft(
-                    F.shiftright(F.col("h"), g + 1).bitwiseAND(1), 32
-                )
-            )
-        ).alias(f"p{g}")
-        for g in range(0, 16, 2)
-    ]
-    agg = toks.groupBy(id_col).agg(
-        *packed_sums, F.count("h").alias("_n_tok")
-    )
-    sim = None
-    for j in range(16):
-        cnt = F.shiftright(F.col(f"p{j - j % 2}"), 32 * (j % 2)).bitwiseAND(
-            0xFFFFFFFF
-        )
-        term = F.when(cnt * 2 > F.col("_n_tok"), F.lit(1 << j)).otherwise(0)
-        sim = term if sim is None else sim + term
-    return agg.select(
-        F.col(id_col),
-        F.when(F.col("_n_tok") > 0, sim).cast("int").alias("simhash"),
-    )
-
-
-def _exploded_distinct_tokens(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """(id, tok) rows, one per distinct whitespace token; blank docs
-    keep a NULL tok row so every doc survives the aggregation."""
-    return df.select(
-        F.col(id_col),
-        F.explode_outer(
-            F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+"))
-        ).alias("tok"),
-    )
-
-
 def simhash64(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -459,15 +411,24 @@ def simhash64(
     candidates at large corpus sizes — see `simhash_near_pairs` for the
     envelope arithmetic.
 
-    One explode + one hash-agg keyed on id, partial map-side combine —
-    same scale shape as `simhash16`. Docs with no tokens → NULL chunks.
+    Bit j of a chunk is set iff the sum over distinct tokens of ±1 (by
+    bit j of the token hash) is positive; (1, 16) is the 16-bit simhash
+    of `dedup_simhash`. One explode + one hash-agg keyed on id, partial
+    map-side combine. Docs with no tokens → NULL chunks.
     """
     if chunk_bits % 4 or not 4 <= chunk_bits <= 28:
         raise ValueError("chunk_bits must be a multiple of 4 in [4, 28]")
     if num_chunks * chunk_bits > 128:
         raise ValueError("md5 provides 128 bits: num_chunks*chunk_bits <= 128")
     hexlen = chunk_bits // 4
-    toks = _exploded_distinct_tokens(df, id_col, text_col)
+    # one row per distinct whitespace token; blank docs keep a NULL tok
+    # row so every doc survives the aggregation
+    toks = df.select(
+        F.col(id_col),
+        F.explode_outer(
+            F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+"))
+        ).alias("tok"),
+    )
     nonblank = F.col("tok").isNotNull() & (F.col("tok") != "")
     for c in range(num_chunks):
         toks = toks.withColumn(
@@ -479,8 +440,10 @@ def simhash64(
                 ).cast("long"),
             ),
         )
-    # PACKED bit counters, as in simhash16: bit j is set iff
-    # 2*count_set(j) > n_tok (measured 3.5 s → 1.1 s one-shot at sf0.1,
+    # PACKED bit counters, two bit positions per 64-bit sum (32-bit
+    # fields, overflow-safe to 2^32 distinct tokens per doc): bit j is
+    # set iff 2*count_set(j) > n_tok, the sum-of-±1 > 0 rule. Half the
+    # aggregation buffers (measured 3.5 s → 1.1 s one-shot at sf0.1,
     # where codegen of 64 separate aggregates dominated).
     packed_sums = [
         F.sum(

@@ -49,13 +49,14 @@ no-ops on their committed run_id and `doc_rep` commits once.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from engine.operators.core import argmax_by
 from engine.operators.dedup import (
     connected_components,
     lsh_band_rows,
     minhash_signature,
-    with_shingles,
+    verify_jaccard,
 )
 from engine.tableio import TableIO
 
@@ -77,14 +78,11 @@ def _band_rows(
 
 
 def latest_rep(spark: SparkSession, io: TableIO) -> DataFrame:
-    """Current (doc_id, rep_id) mapping: latest upd_seq wins per doc."""
-    rep = io.read(spark, REP_TABLE)
-    w = Window.partitionBy("doc_id").orderBy(F.col("upd_seq").desc())
-    return (
-        rep.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("doc_id", "rep_id")
-    )
+    """Current (doc_id, rep_id) mapping: latest upd_seq wins per doc
+    (a doc gets at most one row per epoch)."""
+    return argmax_by(
+        io.read(spark, REP_TABLE), "doc_id", "upd_seq", "rep_id"
+    ).select("doc_id", "rep_id")
 
 
 def dedup_keep_list(spark: SparkSession, io: TableIO) -> DataFrame:
@@ -165,45 +163,13 @@ def ingest_dedup_increment(
         )
         .distinct()
     )
-    # Exact Jaccard verification on candidates only; text re-read just
-    # for the bounded candidate id set. As in batch verified_near_dups,
-    # the pair list is unpivoted to (pair, id) rows, broadcast against
-    # the corpus, and the two shingle arrays meet in one per-pair
-    # aggregation, so every subplan is referenced once (a two-sided
-    # shingle rejoin replans the band join three times: 25 s vs ~3 s
-    # at a 20k-doc epoch).
-    cand_long = cand.select(
-        F.struct("id_a", "id_b").alias("_p"),
-        F.explode(F.array("id_a", "id_b")).alias("doc_id"),
-    )
-    cand_sh = (
-        with_shingles(
-            docs_all.join(F.broadcast(cand_long), "doc_id"), "text", shingle_n
-        )
-        .filter(F.size("shingles") > 0)
-        .select("_p", "doc_id", "shingles")
-    )
-    both = cand_sh.groupBy("_p").agg(
-        F.first(
-            F.when(F.col("doc_id") == F.col("_p.id_a"), F.col("shingles")),
-            ignorenulls=True,
-        ).alias("sh_a"),
-        F.first(
-            F.when(F.col("doc_id") == F.col("_p.id_b"), F.col("shingles")),
-            ignorenulls=True,
-        ).alias("sh_b"),
-    )
+    # Exact Jaccard verification, the batch operator's step: text is
+    # re-read just for the candidate ids.
     edges = (
-        both.filter(F.col("sh_a").isNotNull() & F.col("sh_b").isNotNull())
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select(F.col("_p.id_a").alias("id_a"), F.col("_p.id_b").alias("id_b"))
+        verify_jaccard(docs_all, cand, "doc_id", "text", shingle_n, threshold)
+        .select("id_a", "id_b")
+        .localCheckpoint()  # the fixpoint below iterates over it
     )
-    edges = edges.localCheckpoint()  # the fixpoint below iterates over it
 
     # Affected subgraph: new docs + every old cluster a new edge
     # touches (ALL its members — a merge must re-label the whole

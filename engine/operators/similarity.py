@@ -1,21 +1,17 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, per the standard ANN playbook:
+Three candidate generators share one exact cosine re-rank
+(`rank_topk`: self-matches dropped, per-probe top-k tie-broken by
+(cos desc, id asc)):
 
-- brute_force_topk: exact cosine top-k. The probe set is broadcast
-  (small by construction); the corpus scans once; per-pair math is
-  pure `zip_with`/`aggregate` column expressions inside whole-stage
-  codegen (no Python). At 100 TB this is the right plan whenever
-  |probes| is small — one broadcast, no shuffle of the corpus, and
-  the windowed top-k is a partial TakeOrderedAndProject per probe.
-
-- lsh_topk: sign-LSH bucketing — an 8-bit code from the signs of the
-  first 8 dimensions (axis-aligned hyperplanes; deterministic and
-  oracle-expressible). Probes only join their own bucket, cutting the
-  candidate set ~256× on centered data; exact cosine re-ranks inside
-  the bucket. The bucket join is a hash join on the code; for IVF-at-
-  scale swap the code for a trained coarse-quantizer cell id — the
-  plan shape is identical.
+- brute_force_topk: every corpus vector against the broadcast probe
+  set — exact, one broadcast, no corpus shuffle while |probes| is
+  small.
+- lsh_topk: candidates share the probe's sign code (`sign_code`,
+  axis-aligned hyperplanes; deterministic and oracle-expressible).
+- ivf_topk: candidates live in the probe's `nprobe` nearest cells of
+  a trained coarse quantizer (`assign_cells` + `probe_cells`);
+  ann_incremental.ann_query runs the same steps over a stored index.
 
 All arithmetic casts float→double BEFORE multiplying, and accumulates
 left-to-right, matching the DuckDB oracle (`embedding::DOUBLE[]` +
@@ -47,13 +43,54 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def sign_code(arr: Column, bits: int = 8) -> Column:
-    """Sign-LSH bucket code: bit i set iff element i+1 > 0."""
+def _sign_bits(arr: Column, first: int, bits: int) -> Column:
+    """Int whose bit i is set iff element first+i (1-based) > 0. Indexes
+    the array in place: a slice per band is re-evaluated for every
+    element inside the explode (measured 1.4 s → 2.1 s at sf0.1)."""
     code = None
     for i in range(bits):
-        term = F.when(F.element_at(arr, i + 1) > 0, F.lit(1 << i)).otherwise(0)
+        term = F.when(F.element_at(arr, first + i) > 0, F.lit(1 << i)).otherwise(0)
         code = term if code is None else code + term
     return code.cast("int")
+
+
+def sign_code(arr: Column, bits: int = 8) -> Column:
+    """Sign-LSH bucket code: bit i set iff element i+1 > 0."""
+    return _sign_bits(arr, 1, bits)
+
+
+def band_sign_codes(arr: Column, bands: int = 4, bits_per_band: int = 16) -> Column:
+    """Array of (band_idx, code) structs: band b's code is the
+    `sign_code` of dimensions [b*bits_per_band+1, (b+1)*bits_per_band].
+    Requires dim(arr) >= bands * bits_per_band."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band_idx"),
+                _sign_bits(arr, b * bits_per_band + 1, bits_per_band).alias("code"),
+            )
+            for b in range(bands)
+        ]
+    )
+
+
+def rank_topk(
+    pairs: DataFrame, k: int, id_col: str, vec_col: str, probe_id: str
+) -> DataFrame:
+    """Exact cosine re-rank of candidate pairs (id_col, vec_col,
+    probe_id, _pv): self-matches (same id) dropped, top-k per probe,
+    fully tie-broken (cosine desc, id asc) for determinism."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    pairs = pairs.filter(F.col(id_col) != F.col(probe_id)).withColumn(
+        "cos", cosine(F.col(vec_col), F.col("_pv"))
+    )
+    w = Window.partitionBy(probe_id).orderBy(F.col("cos").desc(), F.col(id_col).asc())
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(probe_id, id_col, F.round("cos", 6).alias("cos"), "rank")
+    )
 
 
 def brute_force_topk(
@@ -65,19 +102,10 @@ def brute_force_topk(
     probe_id: str = "probe_id",
 ) -> DataFrame:
     """Exact cosine top-k of `corpus` for each probe row. `probes` must
-    carry (probe_id, vec_col); self-matches (same id) are excluded.
-    Ranking is fully tie-broken (cosine desc, id asc) for determinism."""
+    carry (probe_id, vec_col); self-matches (same id) are excluded."""
     p = F.broadcast(probes.select(F.col(probe_id), F.col(vec_col).alias("_pv")))
     pairs = corpus.select(F.col(id_col), F.col(vec_col)).crossJoin(p)
-    pairs = pairs.filter(F.col(id_col) != F.col(probe_id)).withColumn(
-        "cos", cosine(F.col(vec_col), F.col("_pv"))
-    )
-    w = Window.partitionBy(probe_id).orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(probe_id, id_col, F.round("cos", 6).alias("cos"), "rank")
-    )
+    return rank_topk(pairs, k, id_col, vec_col, probe_id)
 
 
 def lsh_topk(
@@ -92,62 +120,12 @@ def lsh_topk(
     """Sign-LSH bucketed ANN: candidates share the probe's sign code;
     exact cosine re-ranks within the bucket. Recall < 1 by design (the
     scale path); `brute_force_topk` is the exactness baseline."""
-    c = corpus.select(
-        F.col(id_col), F.col(vec_col), sign_code(F.col(vec_col), bits).alias("_code")
-    )
+    code = sign_code(F.col(vec_col), bits).alias("_code")
+    c = corpus.select(F.col(id_col), F.col(vec_col), code)
     p = F.broadcast(
-        probes.select(
-            F.col(probe_id),
-            F.col(vec_col).alias("_pv"),
-            sign_code(F.col(vec_col), bits).alias("_code"),
-        )
+        probes.select(F.col(probe_id), F.col(vec_col).alias("_pv"), code)
     )
-    pairs = c.join(p, "_code").filter(F.col(id_col) != F.col(probe_id))
-    pairs = pairs.withColumn("cos", cosine(F.col(vec_col), F.col("_pv")))
-    w = Window.partitionBy(probe_id).orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(probe_id, id_col, F.round("cos", 6).alias("cos"), "rank")
-    )
-
-
-def band_sign_codes(arr: Column, bands: int = 4, bits_per_band: int = 16) -> Column:
-    """Array of (band_idx, code) structs: band b's code packs the sign
-    bits of dimensions [b*bits_per_band+1, (b+1)*bits_per_band].
-    Requires dim(arr) >= bands * bits_per_band."""
-    out = []
-    for b in range(bands):
-        code = None
-        for i in range(bits_per_band):
-            term = F.when(
-                F.element_at(arr, b * bits_per_band + i + 1) > 0, F.lit(1 << i)
-            ).otherwise(0)
-            code = term if code is None else code + term
-        out.append(
-            F.struct(F.lit(b).alias("band_idx"), code.cast("int").alias("code"))
-        )
-    return F.array(*out)
-
-
-def _cell_scores(vec: Column, id_alias: str) -> Column:
-    """Array of (squared-L2, cell id) structs of `vec` (double array)
-    against the broadcast one-row centroid-array column `_cents` — THE
-    assignment expression, shared by ivf_topk (corpus + probe sides)
-    and train_centroids so quantizer semantics can never diverge.
-    Struct field order (_d2, id) makes array_min/array_sort the
-    distance argmin with smaller-cell-id tie-break."""
-    return F.transform(
-        "_cents",
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(vec, c["cvec"], lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("_d2"),
-            c["cid"].alias(id_alias),
-        ),
-    )
+    return rank_topk(c.join(p, "_code"), k, id_col, vec_col, probe_id)
 
 
 def cosine_near_dups_banded(
@@ -166,8 +144,8 @@ def cosine_near_dups_banded(
     Near-identical vectors disagree only on dimensions near zero, so a
     stray flipped sign kills at most the bands containing it — recall
     stays high — while bucket sizes stay O(n / 2^bits_per_band) per
-    band (vs O(n / 2^bits) for a single short code, whose buckets grow
-    linearly with n and make the within-bucket self-join quadratic).
+    band. One short band (bands=1) is the single-code blocking, whose
+    buckets grow linearly with n and make the self-join quadratic.
 
     Shape: explode to (id, band_idx, code) — 3 small columns, `bands`
     rows per vector; self-join on (band_idx, code); distinct pairs;
@@ -207,6 +185,89 @@ def cosine_near_dups_banded(
     )
 
 
+# ---------------------------------------------------------------------------
+# IVF: coarse-quantizer cells
+# ---------------------------------------------------------------------------
+
+def _cent_arr(centroids: DataFrame) -> DataFrame:
+    """One-row broadcast `_cents` array of (cid, cvec) structs from a
+    (cell_id, centroid) table: the quantizer rides along every row, so
+    assignment is a projection and the corpus never shuffles for it."""
+    return F.broadcast(
+        centroids.agg(
+            F.sort_array(
+                F.collect_list(
+                    F.struct(
+                        F.col("cell_id").alias("cid"),
+                        _to_double(F.col("centroid")).alias("cvec"),
+                    )
+                )
+            ).alias("_cents")
+        )
+    )
+
+
+def _cell_scores(vec: Column) -> Column:
+    """Array of (_d2, cell_id) structs: squared L2 of `vec` (double
+    array) to every centroid in `_cents`. Field order makes array_min /
+    array_sort the distance argmin with smaller-cell-id tie-break (the
+    oracle's ROW_NUMBER order)."""
+    return F.transform(
+        "_cents",
+        lambda c: F.struct(
+            F.aggregate(
+                F.zip_with(vec, c["cvec"], lambda x, y: (x - y) * (x - y)),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ).alias("_d2"),
+            c["cid"].alias("cell_id"),
+        ),
+    )
+
+
+def assign_cells(
+    vecs: DataFrame,
+    centroids: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(id, vec, cell_id, d2): argmin squared-L2 cell of every vector
+    against the (cell_id, centroid) table, ties to the smaller cell_id."""
+    best = F.array_min(_cell_scores(_to_double(F.col(vec_col))))
+    return (
+        vecs.select(id_col, vec_col)
+        .crossJoin(_cent_arr(centroids))
+        .select(
+            F.col(id_col),
+            F.col(vec_col),
+            best["cell_id"].alias("cell_id"),
+            best["_d2"].alias("d2"),
+        )
+    )
+
+
+def probe_cells(
+    probes: DataFrame,
+    centroids: DataFrame,
+    nprobe: int,
+    probe_id: str = "probe_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Broadcast (probe_id, _pv, cell_id): one row per probe and each of
+    its `nprobe` nearest cells (same distance and tie-break as
+    `assign_cells`)."""
+    if nprobe < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+    scores = _cell_scores(_to_double(F.col("_pv")))
+    nearest = F.slice(F.array_sort(scores), 1, nprobe)
+    return F.broadcast(
+        probes.select(probe_id, F.col(vec_col).alias("_pv"))
+        .crossJoin(_cent_arr(centroids))
+        .select(F.col(probe_id), F.col("_pv"), F.explode(nearest).alias("_pc"))
+        .select(probe_id, "_pv", F.col("_pc")["cell_id"].alias("cell_id"))
+    )
+
+
 def ivf_topk(
     corpus: DataFrame,
     probes: DataFrame,
@@ -215,89 +276,32 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     probe_id: str = "probe_id",
-    centroid_id: str = "cell_id",
-    centroid_vec: str = "centroid",
     nprobe: int = 1,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: corpus vectors are assigned to the
     nearest coarse-quantizer centroid (their *cell*); a probe searches
     its `nprobe` nearest cells, exact cosine re-ranks the candidates.
 
-    The centroid table is the trained coarse quantizer — tiny by
-    construction (k-means cells; here any (cell_id, centroid) frame,
-    e.g. per-label means, keeps it deterministic and oracle-checkable).
-    It broadcasts to BOTH assignment joins, so the corpus never
-    shuffles for assignment; the probe-to-cell join is a hash join on
-    the cell id — the same plan shape as `lsh_topk` with the sign code
-    swapped for a trained cell. Assignment = argmin squared L2 distance
-    (ties broken by smaller cell_id).
+    `centroids` is the trained (cell_id, centroid) quantizer — tiny by
+    construction (k-means cells, or per-label means for an
+    oracle-checkable gate). It broadcasts as a one-row array to both
+    assignment sides, so the corpus is never shuffled or joined per
+    centroid (the window-per-id argmin this replaced cost 14 exchanges
+    + 12 sorts); the probe-to-cell join is a hash join on cell_id — the
+    plan shape of `lsh_topk` with the sign code swapped for a cell.
 
-    `nprobe` is the standard IVF recall knob: with nprobe=1 a probe
-    near a cell boundary misses true neighbors quantized into the
-    adjacent cell; probing the P nearest cells recovers them at P× the
-    candidate volume (each corpus vector lives in exactly ONE cell, so
-    multi-probe never duplicates a candidate pair). Recall vs
-    `brute_force_topk` is measured in tests/test_similarity.py.
-
-    Assignment is a pure PROJECTION: the whole centroid table rides
-    along as a one-row broadcast array and the argmin runs per row in
-    array HOFs (struct array_min/array_sort compares (d2, cell_id)
-    field-wise — same tie-break as the oracle's ROW_NUMBER). The
-    corpus is NEVER shuffled and never joined per-centroid — the
-    round-3 plan audit showed the previous window-per-id argmin cost
-    14 exchanges + 12 sorts; this shape costs 1 shuffle total (the
-    per-probe top-k), which is the plan that survives 100 TB."""
-    cent_arr = F.broadcast(
-        centroids.agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col(centroid_id).alias("cid"),
-                        _to_double(F.col(centroid_vec)).alias("cvec"),
-                    )
-                )
-            ).alias("_cents")
-        )
+    `nprobe` is the IVF recall knob: a probe near a cell boundary
+    misses neighbors quantized into the adjacent cell at nprobe=1;
+    probing the P nearest cells recovers them at P× the candidates
+    (each corpus vector lives in ONE cell, so multi-probe never
+    duplicates a pair). Recall vs `brute_force_topk` is measured in
+    tests/test_similarity.py."""
+    cells = assign_cells(corpus, centroids, id_col, vec_col).select(
+        id_col, vec_col, "cell_id"
     )
-    c_cells = (
-        corpus.select(id_col, vec_col)
-        .crossJoin(cent_arr)
-        .select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.array_min(_cell_scores(_to_double(F.col(vec_col)), centroid_id))[
-                centroid_id
-            ].alias(centroid_id),
-        )
-    )
-    p_cells = F.broadcast(
-        probes.select(probe_id, F.col(vec_col).alias("_pv"))
-        .crossJoin(cent_arr)
-        .select(
-            F.col(probe_id),
-            F.col("_pv"),
-            F.explode(
-                F.slice(
-                    F.array_sort(
-                        _cell_scores(_to_double(F.col("_pv")), centroid_id)
-                    ),
-                    1,
-                    nprobe,
-                )
-            ).alias("_pc"),
-        )
-        .select(probe_id, "_pv", F.col("_pc")[centroid_id].alias(centroid_id))
-    )
-    pairs = c_cells.join(p_cells, centroid_id).filter(
-        F.col(id_col) != F.col(probe_id)
-    )
-    pairs = pairs.withColumn("cos", cosine(F.col(vec_col), F.col("_pv")))
-    w = Window.partitionBy(probe_id).orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(probe_id, id_col, F.round("cos", 6).alias("cos"), "rank")
-    )
+    p_cells = probe_cells(probes, centroids, nprobe, probe_id, vec_col)
+    pairs = cells.join(p_cells, "cell_id")
+    return rank_topk(pairs, k, id_col, vec_col, probe_id)
 
 
 def train_centroids(
@@ -309,19 +313,14 @@ def train_centroids(
     tol: float = 1e-6,
 ) -> list[tuple[int, list[float]]]:
     """Train the IVF coarse quantizer: Lloyd's k-means in pure
-    DataFrame ops (the trained-centroid path `ivf_topk`'s docstring
-    promises; per-label means remain the oracle-checkable stand-in for
-    the driver gate).
+    DataFrame ops.
 
     Deterministic: init = the k corpus vectors with the smallest ids
     (no rand(); on a real corpus feed ids through a hash first for a
     spread sample — same code path). Per iteration:
 
-    - centroids broadcast as a one-row array (k x dim doubles — tiny
-      by construction);
-    - assignment = per-row argmin squared-L2 in array HOFs (struct
-      array_min, field-wise (d2, cell_id) comparison) — a pure
-      PROJECTION, the same zero-corpus-shuffle shape as `ivf_topk`;
+    - assignment = `assign_cells` against the current centroids (the
+      same zero-corpus-shuffle projection `ivf_topk` uses);
     - update = per-cell mean as `dim` element_at-sums in one hash agg
       keyed on cell_id (no explode, map-side combined to k rows per
       partition), collected to the driver (bounded by k x dim, like
@@ -347,30 +346,12 @@ def train_centroids(
 
     vecs = corpus.select(F.col(id_col), _to_double(F.col(vec_col)).alias("_v"))
     for _ in range(max_iter):
-        cent_arr = F.broadcast(
-            vecs.sparkSession.createDataFrame(
-                [(i, c) for i, c in enumerate(cents)],
-                "cell_id int, centroid array<double>",
-            ).agg(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            F.col("cell_id").alias("cid"),
-                            F.col("centroid").alias("cvec"),
-                        )
-                    )
-                ).alias("_cents")
-            )
-        )
-        assigned = vecs.crossJoin(cent_arr).select(
-            F.col(id_col),
-            F.col("_v"),
-            F.array_min(_cell_scores(F.col("_v"), "cell_id"))["cell_id"].alias(
-                "cell_id"
-            ),
+        cent_df = vecs.sparkSession.createDataFrame(
+            list(enumerate(cents)), "cell_id int, centroid array<double>"
         )
         stats = (
-            assigned.groupBy("cell_id")
+            assign_cells(vecs, cent_df, id_col, "_v")
+            .groupBy("cell_id")
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 *[
@@ -391,37 +372,3 @@ def train_centroids(
         if shift < tol:
             break
     return [(i, c) for i, c in enumerate(cents)]
-
-
-def cosine_near_dups(
-    corpus: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = 8,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs blocked by a SINGLE short
-    sign code. Kept as the oracle-simple small-scale variant and the
-    differential baseline for `cosine_near_dups_banded` — at 100 TB use
-    the banded version: a single `bits`-wide code gives buckets of
-    ~n/2^bits, so this self-join is O(n²/2^bits) — quadratic in n."""
-    c = corpus.select(
-        F.col(id_col), F.col(vec_col), sign_code(F.col(vec_col), bits).alias("_code")
-    )
-    a, b = c.alias("a"), c.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a._code") == F.col("b._code"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    )
-    return (
-        pairs.withColumn(
-            "cos", cosine(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
-        )
-        .filter(F.col("cos") >= threshold)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.round("cos", 6).alias("cos"),
-        )
-    )

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from engine.operators.ann_incremental import (
     ann_query,
-    assign_cells,
     ingest_ann_increment,
     latest_assignment,
     latest_centroids,
@@ -133,10 +132,24 @@ def test_query_uses_stored_index_and_matches_fresh_ivf(spark, warehouse):
     cents = latest_centroids(spark, warehouse).withColumnRenamed(
         "centroid", "centroid"
     )
-    fresh = ivf_topk(
-        e1, probes, cents, k=3, nprobe=2,
-        centroid_id="cell_id", centroid_vec="centroid",
-    )
+    fresh = ivf_topk(e1, probes, cents, k=3, nprobe=2)
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, fresh.collect())
     )
+
+
+def test_query_rejects_bad_k_and_nprobe_at_plan_build(spark, warehouse):
+    """ann_query shares ivf_topk's probe-cells and re-rank steps, so a
+    k or nprobe below 1 fails when the plan is built instead of
+    returning 0 rows or failing inside a task."""
+    rng = np.random.default_rng(9)
+    e1 = _mk_vecs(spark, range(0, 10), rng)
+    ingest_ann_increment(spark, warehouse, e1, "e1", k=2)
+    probes = e1.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("probe_id"), "embedding"
+    )
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="k must be >= 1"):
+            ann_query(spark, warehouse, probes, k=bad, nprobe=1)
+        with pytest.raises(ValueError, match="nprobe must be >= 1"):
+            ann_query(spark, warehouse, probes, k=3, nprobe=bad)

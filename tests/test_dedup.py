@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from engine.operators.dedup import (
     exact_dedup_groups,
     minhash_signature,
-    simhash16,
+    simhash64,
     verified_near_dups,
     with_shingles,
 )
@@ -96,8 +96,31 @@ def test_lsh_near_dups_find_planted_pair(docs):
     assert not any(5 in p for p in pairs)
 
 
+def test_verify_jaccard_drops_pairs_without_shingles(docs, spark):
+    """The shared verification step: a candidate whose doc has no
+    shingles (doc 6) or is missing (doc 99) is dropped, not divided by
+    an empty union; a real pair keeps its exact Jaccard."""
+    from engine.operators.dedup import verify_jaccard
+
+    pairs = spark.createDataFrame(
+        [(1, 4), (1, 6), (4, 99)], "id_a long, id_b long"
+    )
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in verify_jaccard(docs, pairs, threshold=0.0).collect()
+    }
+    assert set(got) == {(1, 4)}
+    toks_a, toks_b = BASE.split(), NEAR.split()
+    sh_a = {" ".join(toks_a[i : i + 3]) for i in range(len(toks_a) - 2)}
+    sh_b = {" ".join(toks_b[i : i + 3]) for i in range(len(toks_b) - 2)}
+    assert got[(1, 4)] == round(len(sh_a & sh_b) / len(sh_a | sh_b), 6)
+
+
 def test_simhash_identical_and_bounded(docs):
-    out = {r["doc_id"]: r["simhash"] for r in simhash16(docs).collect()}
+    out = {
+        r["doc_id"]: r["sim_0"]
+        for r in simhash64(docs, num_chunks=1, chunk_bits=16).collect()
+    }
     assert out[1] == out[2] == out[3]   # same token set → same simhash
     assert out[1] != out[5]
     assert all(v is None or 0 <= v < (1 << 16) for v in out.values())

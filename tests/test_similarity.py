@@ -137,7 +137,7 @@ def test_banded_near_dups_recall_and_bucket_bound(spark):
 
 def test_cosine_near_dups_planted(spark):
     import numpy as np
-    from engine.operators.similarity import cosine_near_dups
+    from engine.operators.similarity import cosine_near_dups_banded
 
     rng = np.random.default_rng(11)
     base = rng.normal(size=16).astype(np.float32)
@@ -147,7 +147,9 @@ def test_cosine_near_dups_planted(spark):
             (2, [float(x) for x in rng.normal(size=16)])]
     df = spark.createDataFrame(rows, SCHEMA)
     got = {(r["id_a"], r["id_b"]): r["cos"]
-           for r in cosine_near_dups(df, threshold=0.95, bits=8).collect()}
+           for r in cosine_near_dups_banded(
+               df, threshold=0.95, bands=1, bits_per_band=8
+           ).collect()}
     assert (0, 1) in got and got[(0, 1)] > 0.99
     assert not any(2 in p for p in got)
 
@@ -302,3 +304,74 @@ def test_ivf_topk_searches_own_cell_only(spark):
     for p in (0, 10):
         ranks = sorted(r["rank"] for r in got if r["probe_id"] == p)
         assert ranks == [1, 2, 3]
+
+
+def test_band_sign_codes_equal_sign_code_over_slices(spark):
+    """One sign-bit rule: band b's code is `sign_code` of the b-th
+    slice, and both equal a numpy bit-pack (zeros count as negative)."""
+    from engine.operators.similarity import band_sign_codes
+
+    rng = np.random.default_rng(3)
+    mat = rng.normal(size=(30, 64)).astype(np.float32)
+    mat[0, :] = 0.0
+    mat[1, 5] = 0.0
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in mat[i]]) for i in range(len(mat))], SCHEMA
+    )
+    v = F.col("embedding")
+    got = df.select(
+        "vec_id",
+        band_sign_codes(v, 4, 16).alias("bands"),
+        F.array(
+            *[sign_code(F.slice(v, 16 * b + 1, 16), 16) for b in range(4)]
+        ).alias("sliced"),
+    ).collect()
+    assert len(got) == len(mat)
+    for r in got:
+        expect = [
+            int(sum(1 << i for i in range(16) if mat[r["vec_id"], 16 * b + i] > 0))
+            for b in range(4)
+        ]
+        assert [bc["band_idx"] for bc in r["bands"]] == [0, 1, 2, 3]
+        assert [bc["code"] for bc in r["bands"]] == r["sliced"] == expect
+
+
+@pytest.mark.parametrize("k", [0, -1])
+def test_topk_rejects_k_below_one_at_plan_build(vectors, k):
+    """k < 1 used to return 0 rows silently; it now fails when the plan
+    is built, on every top-k search path."""
+    from engine.operators.similarity import ivf_topk
+
+    df, _ = vectors
+    probes = df.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("probe_id"), "embedding"
+    )
+    cents = df.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").cast("int").alias("cell_id"),
+        F.col("embedding").alias("centroid"),
+    )
+    for search in (
+        lambda: brute_force_topk(df, probes, k=k),
+        lambda: lsh_topk(df, probes, k=k),
+        lambda: ivf_topk(df, probes, cents, k=k, nprobe=1),
+    ):
+        with pytest.raises(ValueError, match="k must be >= 1"):
+            search()
+
+
+@pytest.mark.parametrize("nprobe", [0, -1])
+def test_ivf_topk_rejects_nprobe_below_one_at_plan_build(vectors, nprobe):
+    """nprobe=0 used to return 0 rows and nprobe=-1 to fail only at
+    execution (slice length); both now fail when the plan is built."""
+    from engine.operators.similarity import ivf_topk
+
+    df, _ = vectors
+    probes = df.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("probe_id"), "embedding"
+    )
+    cents = df.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").cast("int").alias("cell_id"),
+        F.col("embedding").alias("centroid"),
+    )
+    with pytest.raises(ValueError, match="nprobe must be >= 1"):
+        ivf_topk(df, probes, cents, k=3, nprobe=nprobe)
