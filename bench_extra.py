@@ -4,7 +4,9 @@
 NOT the driver's bench (bench.py is frozen): this harness times a
 subset of __spark_entry__.queries() with the noop sink, labels each
 job, and optionally captures .explain("formatted") output so plan
-claims in OPTIMIZATION_r06.md are reproducible.
+claims in OPTIMIZATION_r06.md are reproducible. Each rep reports the
+builder call (`build_s`: incremental queries ingest their epochs
+there) and the noop action (`exec_s`) apart.
 
 Usage:
   python bench_extra.py --queries doc_contamination13 --reps 3 \
@@ -45,7 +47,7 @@ def main() -> None:
 
     only = args.queries.split(",")
     qs = entrymod.queries()
-    out: dict[str, list[float]] = {}
+    out: dict[str, dict[str, list[float]]] = {}
     for name in only:
         fn = qs[name]
         if args.explain_dir:
@@ -59,13 +61,15 @@ def main() -> None:
                 os.path.join(args.explain_dir, f"{name}_{args.suffix}.txt"), "w"
             ) as f:
                 f.write(plan)
-        times = []
+        times = {"build_s": [], "exec_s": []}
         for _ in range(args.reps):
-            df = fn(spark, args.sf_dir)
             spark.sparkContext.setJobDescription(f"{name} [{args.suffix}]")
-            t0 = time.time()
+            t0 = time.perf_counter()
+            df = fn(spark, args.sf_dir)
+            t1 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
-            times.append(round(time.time() - t0, 3))
+            times["build_s"].append(round(t1 - t0, 3))
+            times["exec_s"].append(round(time.perf_counter() - t1, 3))
             spark.sparkContext.setJobDescription(None)
         out[name] = times
     print(json.dumps({"sf_dir": args.sf_dir, "cpus": args.cpus, "times": out}))

@@ -37,10 +37,10 @@ def run_incremental(
     errors_table: str = "errors",
     **pipeline_kwargs,
 ) -> dict:
-    """Incremental feature extraction over NEW source snapshots only
-    (round-3 verdict item #8): read the rows of `source_table`
-    snapshots committed since the last processed watermark
-    (TableIO.read_since — the Iceberg incremental-append-scan analog),
+    """Incremental feature extraction over NEW source snapshots only:
+    read the rows of `source_table` snapshots committed since the last
+    processed watermark (TableIO.read_since — the Iceberg
+    incremental-append-scan analog),
     run the pipeline on just those rows, and append one features +
     errors snapshot for the increment. Each features manifest records
     the (lo, hi] commit_seq range it covered in `source_seq_lo/hi`, so
@@ -64,7 +64,7 @@ def run_incremental(
         r: io.read_manifest(features_table, r)
         for r in io.committed_runs(features_table)
     }
-    # Mode guard (round-4 advice #1): the watermark is recovered ONLY
+    # Mode guard: the watermark is recovered ONLY
     # from manifests tagged incremental_of==source_table. A features
     # table already populated by batch run_resumable (or increments of
     # a DIFFERENT source) would yield watermark 0 and silently re-read
@@ -101,8 +101,7 @@ def run_incremental(
     # job at the same watermark would build a different run_id, so its
     # errors append would NOT no-op and the range's error rows would
     # double-commit — that is a single-writer-contract violation, and
-    # the run refuses loudly instead of corrupting the errors table
-    # (round-4 review finding #5).
+    # the run refuses loudly instead of corrupting the errors table.
     pin_hi = None
     for r in io.committed_runs(errors_table):
         m = io.read_manifest(errors_table, r)
@@ -226,8 +225,8 @@ def run_resumable(
     if hot_keys:
         # NULL-safe: plain ~isin(...) is NULL for a null entity key, so
         # filter would drop malformed rows from EVERY batch — bypassing
-        # the MISSING_KEY quarantine those rows exist to exercise
-        # (round-3 review finding). Nulls stay in their hash batch.
+        # the MISSING_KEY quarantine those rows exist to exercise.
+        # Nulls stay in their hash batch.
         not_hot = ~F.col(entity_col).isin(hot_keys) | F.col(entity_col).isNull()
         batches = [(b, pred & not_hot) for b, pred in batches]
         batches.append(("hot", F.col(entity_col).isin(hot_keys)))

@@ -20,7 +20,11 @@ extractors finish" boundary, utils.py:155-214, as a storage contract):
    crashed run leaves orphan files that are invisible to readers and
    overwritten on retry)
 2. lineage     →  one record per data FILE (the unit of parallel
-   recovery): rows, bytes, ts-watermark lo/hi
+   recovery): rows, bytes, ts-watermark lo/hi, read on the driver from
+   the Parquet footers of the files just written (Iceberg takes its
+   file stats from the writer the same way), so no Spark job re-scans
+   the snapshot. A footer without `ts` min/max (INT96, all-null)
+   records None, which `read(ts_range=...)` never prunes.
 3. manifest    →  <root>/<table>/_manifests/<run_id>.json written via
    tmp + atomic rename. The manifest IS the commit: `read` only scans
    files listed in committed manifests.
@@ -34,12 +38,71 @@ engine/runner.py.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+
+def _ts_string(v: dt.datetime) -> str:
+    """Spark's `cast(ts as string)` in the UTC session zone: seconds,
+    then the fraction only when non-zero, trailing zeros trimmed."""
+    if v.tzinfo is not None:
+        v = v.astimezone(dt.timezone.utc).replace(tzinfo=None)
+    out = v.isoformat(" ", "seconds")
+    return out + f".{v.microsecond:06d}".rstrip("0") if v.microsecond else out
+
+
+def _footer_watermarks(md, ts_col: str) -> tuple[str | None, str | None]:
+    """(lo, hi) of `ts_col` from the row-group statistics of one
+    footer; (None, None) when any non-null row group lacks them (INT96
+    carries none)."""
+    idx = next(
+        (i for i in range(md.num_columns) if md.schema.column(i).path == ts_col),
+        None,
+    )
+    if idx is None:
+        return None, None
+    los, his = [], []
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        st = rg.column(idx).statistics
+        if st is not None and st.has_min_max:
+            los.append(st.min)
+            his.append(st.max)
+        elif st is None or not st.has_null_count or st.null_count != rg.num_rows:
+            return None, None  # values present but unbounded
+    if not los or not isinstance(los[0], dt.datetime):
+        return None, None
+    return _ts_string(min(los)), _ts_string(max(his))
+
+
+def _footer_lineage(data_dir: str, ts_col: str | None) -> list[dict]:
+    """One lineage record per non-empty data file under `data_dir`
+    (partition directories included), read from the Parquet footers
+    the write just produced, so committing costs no Spark job."""
+    files = []
+    for dirpath, dirnames, names in os.walk(os.path.abspath(data_dir)):
+        dirnames[:] = [d for d in dirnames if d[0] not in "_."]
+        for name in names:
+            if name[0] in "_.":
+                continue
+            local = os.path.join(dirpath, name)
+            md = pq.read_metadata(local)
+            if md.num_rows == 0:
+                continue
+            entry = {"file": "file://" + local, "rows": md.num_rows,
+                     "bytes": os.path.getsize(local)}
+            if ts_col:
+                entry["watermark_lo"], entry["watermark_hi"] = (
+                    _footer_watermarks(md, ts_col)
+                )
+            files.append(entry)
+    return sorted(files, key=lambda e: e["file"])
 
 
 class TableIO:
@@ -107,18 +170,17 @@ class TableIO:
         incremental consumers (read_since) depend on: without it, a
         writer that allocated seq N then stalled could commit AFTER a
         seq-N+1 commit was already consumed, and its rows would be
-        skipped forever (the round-4 review's finding #2; Iceberg
-        orders incremental scans by snapshot commit order for the same
-        reason). Concurrent writers — a streaming sink plus a CLI
-        --compact run — therefore can neither duplicate seqs nor
-        reorder them.
+        skipped forever (Iceberg orders incremental scans by snapshot
+        commit order for the same reason). Concurrent writers — a
+        streaming sink plus a CLI --compact run — therefore can neither
+        duplicate seqs nor reorder them.
 
         The lock file is NEVER replaced (replacing the locked inode
         would silently hand the lock's mutual exclusion to a second
         opener); the counter value lives in a separate `_seq` file
         updated via tmp + os.replace, so no crash point leaves it
-        empty (review finding #6 — the old truncate-then-write window
-        could reseed a seq already reserved by an in-flight append).
+        empty (a truncate-then-write window could reseed a seq already
+        reserved by an in-flight append).
         Counter update precedes the manifest commit: a crash between
         the two burns a seq (harmless gap) instead of reusing one.
         First writer seeds from the max committed seq (legacy tables);
@@ -203,38 +265,9 @@ class TableIO:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_dir)
 
-        # Per-FILE lineage from the staged snapshot: one footer-cheap
-        # aggregation pass grouped by input_file_name. Files are the
-        # parallel-recovery unit (≈ Iceberg's manifest entries).
-        staged = spark.read.parquet(data_dir)
-        aggs = [
-            F.count(F.lit(1)).alias("rows"),
-        ]
-        if ts_col and ts_col in staged.columns:
-            aggs += [
-                F.min(ts_col).cast("string").alias("watermark_lo"),
-                F.max(ts_col).cast("string").alias("watermark_hi"),
-            ]
-        per_file = (
-            staged.groupBy(F.input_file_name().alias("file"))
-            .agg(*aggs)
-            .collect()
-        )
-        files = []
-        total_rows = 0
-        total_bytes = 0
-        for r in per_file:
-            path = r["file"]
-            local = path.removeprefix("file://").removeprefix("file:")
-            nbytes = os.path.getsize(local) if os.path.exists(local) else None
-            total_rows += r["rows"]
-            total_bytes += nbytes or 0
-            entry = {"file": path, "rows": r["rows"], "bytes": nbytes}
-            if ts_col and ts_col in staged.columns:
-                entry["watermark_lo"] = r["watermark_lo"]
-                entry["watermark_hi"] = r["watermark_hi"]
-            files.append(entry)
-        files.sort(key=lambda e: e["file"])
+        files = _footer_lineage(data_dir, ts_col if ts_col in df.columns else None)
+        total_rows = sum(e["rows"] for e in files)
+        total_bytes = sum(e["bytes"] for e in files)
 
         manifest = {
             "table": table,
@@ -279,37 +312,30 @@ class TableIO:
         prunes the WHOLE table's history at file granularity, which
         per-batch appends (each spanning the full time range of its
         batch) cannot offer."""
-        replaced = self._replaced(table)
-        compactions = [
-            r for r in self.committed_runs(table)
-            if self.read_manifest(table, r).get("replaces") and r not in replaced
-        ]
-        runs = [
-            r for r in self.committed_runs(table)
-            if not self.read_manifest(table, r).get("replaces")
-            and r not in replaced
-        ]
+        manifests = self._load_manifests(table)
+        replaced = self._replaced(manifests)
+        live = [r for r in manifests if r not in replaced]
+        compactions = [r for r in live if manifests[r].get("replaces")]
+        runs = [r for r in live if not manifests[r].get("replaces")]
         if not runs:
             if compactions:  # idempotent: nothing new since last compaction
                 latest = next(
-                    r for _, r in reversed(self._commit_order(table))
-                    if r in set(compactions)
+                    r for _, r in reversed(self._commit_order(table, manifests))
+                    if r in compactions
                 )
-                return self.read_manifest(table, latest)
+                return manifests[latest]
             raise FileNotFoundError(f"nothing to compact for table {table!r}")
-        df = self.read(spark, table)
-        if not range_layout:
-            df = df.coalesce(target_files)
         run_id = f"compact-{max(runs)}-{len(runs)}"
-        if self.is_committed(table, run_id):
-            return self.read_manifest(table, run_id)
+        if run_id in manifests:
+            return manifests[run_id]
+        df = self.read(spark, table)
         if range_layout:
             return self.append(
                 spark, df, table, run_id, ts_col=ts_col,
                 extra_meta={"replaces": runs}, range_layout=target_files,
             )
         return self.append(
-            spark, df, table, run_id, ts_col=ts_col,
+            spark, df.coalesce(target_files), table, run_id, ts_col=ts_col,
             extra_meta={"replaces": runs},
         )
 
@@ -330,7 +356,8 @@ class TableIO:
         (expired snapshots are by definition replaced)."""
         import shutil
 
-        replaced = self._replaced(table)
+        manifests = self._load_manifests(table)
+        replaced = self._replaced(manifests)
         expired, n_deleted, bytes_reclaimed = [], 0, 0
 
         def _delete(paths: list[str]) -> None:
@@ -343,7 +370,7 @@ class TableIO:
                     os.remove(local)
 
         for run_id in sorted(replaced):
-            m = self.read_manifest(table, run_id)
+            m = manifests[run_id]
             if m.get("expired"):
                 # idempotent re-run: sweep orphans a crash between
                 # tombstone and delete may have left behind
@@ -383,10 +410,10 @@ class TableIO:
         replaced) — the audit surface for 'metrics committed with the
         snapshot': answerable with plain SQL, e.g. rows per day, bytes
         per snapshot, watermark gaps."""
-        replaced = self._replaced(table)
+        manifests = self._load_manifests(table)
+        replaced = self._replaced(manifests)
         rows = []
-        for run_id in self.committed_runs(table):
-            m = self.read_manifest(table, run_id)
+        for run_id, m in manifests.items():
             for e in m["files"]:
                 rows.append(
                     (
@@ -405,11 +432,9 @@ class TableIO:
             "watermark_lo string, watermark_hi string, replaced boolean",
         )
 
-    def _replaced(self, table: str) -> set[str]:
-        out: set[str] = set()
-        for r in self.committed_runs(table):
-            out.update(self.read_manifest(table, r).get("replaces") or [])
-        return out
+    @staticmethod
+    def _replaced(manifests: dict[str, dict]) -> set[str]:
+        return {r for m in manifests.values() for r in m.get("replaces") or []}
 
     # -- reads -------------------------------------------------------------
     def committed_runs(self, table: str) -> list[str]:
@@ -580,12 +605,9 @@ class TableIO:
         This is the Iceberg incremental-append-scan analog
         (snapshot-id-range read of append snapshots only)."""
         manifests = self._load_manifests(table)
-        # Round-4 advice #2: legacy (pre-stamping) manifests have no
-        # commit_seq, so their rows could NEVER satisfy
-        # commit_seq > since_seq — silently invisible to incremental
-        # consumers even from watermark 0, inconsistent with
-        # _commit_order, which deliberately orders them FIRST so full
-        # reads include them. Refuse instead of silently skipping rows.
+        # Legacy (pre-stamping) manifests have no commit_seq, so no
+        # increment would ever include their rows: refuse instead of
+        # silently skipping them (full reads order them first).
         legacy = sorted(
             r for r, m in manifests.items() if "commit_seq" not in m
         )

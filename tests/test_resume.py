@@ -172,7 +172,12 @@ def test_partitioned_snapshot_prunes(spark, transcripts_df, io):
     io.append(spark, df, "part_feats", "run-p1", partition_by=["dt"])
     m = io.read_manifest("part_feats", "run-p1")
     assert m["partition_by"] == ["dt"]
-    assert all("/dt=" in e["file"] for e in m["files"])
+    assert sum(e["rows"] for e in m["files"]) == m["total_rows"] == df.count()
+    data_dir = io._data_dir("part_feats", "run-p1")
+    for e in m["files"]:
+        part = os.path.relpath(e["file"].removeprefix("file://"), data_dir)
+        assert part.startswith("dt=") and part.count("/") == 1, part
+        assert e["watermark_lo"][:10] == e["watermark_hi"][:10] == part[3:13]
 
     back = io.read(spark, "part_feats")
     assert back.count() == df.count()
@@ -562,3 +567,112 @@ def test_streaming_ingest_feeds_incremental_features(
                  key=repr)
     exp = sorted(map(tuple, batch_f.select(cols).collect()), key=repr)
     assert got == exp
+
+
+# --- lineage from the written files' footers --------------------------------
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_append_runs_no_job_after_the_write(spark, transcripts_df, io, tmp_path):
+    """Lineage comes from the footers, so an append runs exactly the
+    jobs of a plain parquet write of the same frame."""
+    df = transcripts_df.repartition(3).cache()
+    df.count()
+    try:
+        plain = _jobs_in_group(
+            spark, "plain-write",
+            lambda: df.write.mode("overwrite").parquet(str(tmp_path / "plain")),
+        )
+        appended = _jobs_in_group(
+            spark, "tableio-append",
+            lambda: io.append(spark, df, "jobs", "run-j", ts_col="ts"),
+        )
+    finally:
+        df.unpersist()
+    assert plain >= 1
+    assert appended == plain
+
+
+@pytest.mark.parametrize(
+    "case, step_us",
+    [("micros", 1_234_567), ("millis", 1_234_000), ("seconds", 7_000_000)],
+)
+def test_footer_watermarks_equal_spark_cast(spark, io, case, step_us):
+    """Per-file watermarks render exactly as Spark's cast(ts as string):
+    the fraction only when non-zero, trailing zeros trimmed (pre-epoch
+    values included)."""
+    df = spark.range(0, 60).selectExpr(
+        f"timestamp_micros(-5000000 + id * {step_us}) AS ts", "id"
+    ).repartition(3)
+    m = io.append(spark, df, f"wm_{case}", "run-w", ts_col="ts")
+    assert m["n_files"] >= 2 and m["total_rows"] == 60
+    for e in m["files"]:
+        row = spark.read.parquet(e["file"]).selectExpr(
+            "cast(min(ts) as string) lo", "cast(max(ts) as string) hi",
+            "count(1) n",
+        ).first()
+        assert (e["watermark_lo"], e["watermark_hi"], e["rows"]) == (
+            row["lo"], row["hi"], row["n"]
+        )
+    if case == "seconds":
+        assert all("." not in e["watermark_lo"] for e in m["files"])
+
+
+def test_empty_append_commits_no_files(spark, transcripts_df, io):
+    m = io.append(spark, transcripts_df.limit(0), "empty", "run-0", ts_col="ts")
+    assert m["files"] == [] and m["n_files"] == 0
+    assert m["total_rows"] == 0 and m["total_bytes"] == 0
+    assert io.is_committed("empty", "run-0")
+
+
+def test_int96_snapshot_has_no_watermarks_but_reads_and_compacts(
+    spark, transcripts_df, io
+):
+    """A snapshot written under Spark's legacy INT96 encoding has no
+    ts statistics: it records None watermarks, ts_range never prunes
+    it, and a table mixing it with int64 snapshots reads back and
+    compacts every row."""
+    from pyspark.sql import functions as F
+
+    key = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(key)
+    old = transcripts_df.limit(40)
+    new = transcripts_df.subtract(old)
+    spark.conf.set(key, "INT96")
+    try:
+        legacy = io.append(spark, old, "mixed", "run-1", ts_col="ts")
+    finally:
+        spark.conf.set(key, prev)
+    current = io.append(spark, new, "mixed", "run-2", ts_col="ts")
+    assert legacy["total_rows"] == 40 and legacy["n_files"] >= 1
+    assert all(
+        e["watermark_lo"] is None and e["watermark_hi"] is None
+        for e in legacy["files"]
+    )
+    assert all(e["watermark_lo"] is not None for e in current["files"])
+
+    bounds = old.selectExpr(
+        "cast(min(ts) as string) lo", "cast(max(ts) as string) hi"
+    ).first()
+    in_range = (F.col("ts").cast("string") >= bounds["lo"]) & (
+        F.col("ts").cast("string") <= bounds["hi"]
+    )
+    got = io.read(spark, "mixed", as_of="run-1", ts_range=(bounds["lo"], bounds["hi"]))
+    assert got.filter(in_range).count() == 40
+
+    total = transcripts_df.count()
+    assert io.read(spark, "mixed").count() == total
+    comp = io.compact(spark, "mixed", target_files=2)
+    assert comp["total_rows"] == total
+    assert all(e["watermark_lo"] is not None for e in comp["files"])
+    back = io.read(spark, "mixed")
+    assert back.count() == total
+    assert back.select("conv_id", "ts", "turn_idx").distinct().count() == total
