@@ -49,7 +49,8 @@ def _registry() -> dict[str, tuple[Builder, str | None]]:
         "ann_ivf_topk": (D.q_ann_ivf_topk, D.SQL_ANN_IVF_TOPK),
         "ann_lsh_topk": (D.q_ann_lsh_topk, D.SQL_ANN_LSH_TOPK),
         "asof_purchase": (Q.q_asof_purchase, Q.SQL_ASOF_PURCHASE),
-        "asof_purchase_kernel": (Q.q_asof_purchase_kernel, Q.SQL_ASOF_PURCHASE_KERNEL),
+        # one as-of operator serves both keys
+        "asof_purchase_kernel": (Q.q_asof_purchase, Q.SQL_ASOF_PURCHASE),
         "asof_purchase_strict": (Q.q_asof_purchase_strict, Q.SQL_ASOF_PURCHASE_STRICT),
         "cube_revenue": (Q.q_cube_revenue, Q.SQL_CUBE_REVENUE),
         "dedup_embedding": (D.q_dedup_embedding, D.SQL_DEDUP_EMBEDDING),

@@ -8,10 +8,9 @@ leakage-free as-of join + windowed-aggregation pipeline over a
 transcripts table (conv_id, turn_idx, role, text, tool, ts).
 
 Spark-first: DataFrame/window built-ins for everything
-SQL-expressible; Arrow-vectorized Python kernels (pandas_udf, cogrouped
-applyInPandas, mapInArrow) only for genuinely kernel-shaped work
-(exact-Python text cleanup, the merge_asof as-of operator, expanding
-top-k over a large tool vocabulary).
+SQL-expressible; Arrow-vectorized Python kernels (pandas_udf,
+mapInArrow) only for genuinely kernel-shaped work (exact-Python text
+cleanup, expanding top-k over a large tool vocabulary).
 """
 
 __version__ = "0.1.0"

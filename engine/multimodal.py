@@ -28,10 +28,7 @@ are real for ALL THREE modalities:
   metadata) remains a cluster-side cv2/PIL/soundfile/pyav swap-in.
 - Every successful row is SELF-DESCRIBING: the `decoder` column names
   the parser that produced it ('png'/'jpeg'/'wav'/'mp4'), so a
-  downstream consumer can never mistake one decode path for another
-  (round-3 verdict finding: stub rows used to report decode_ok=True
-  with nothing in-band marking them as fabricated — there are no
-  fabricated rows left, and the provenance is now in the data).
+  downstream consumer can never mistake one decode path for another.
 
 Scale shape: binary columns never shuffle — the extract is a narrow
 mapInPandas over the scan, emitting only small typed metadata rows.
@@ -137,9 +134,7 @@ def synthesize_media(docs: DataFrame) -> DataFrame:
     data; fully reproducible.)"""
     # BYTE length (octet_length), not character length: the DuckDB
     # oracle's strlen counts bytes, and char-length would silently
-    # diverge on any non-ASCII text (latent engine/oracle mismatch
-    # flagged by the round-3 review; masked so far only because the
-    # testdata documents tables happen to be ASCII)
+    # diverge on any non-ASCII text
     n = F.octet_length("text").cast("bigint")
     w = (n % 640 + 1).cast("bigint")
     h = (n % 480 + 1).cast("bigint")
@@ -270,37 +265,44 @@ def _decode_image(payload: bytes) -> tuple[int, int, str]:
     raise ValueError("UNSUPPORTED_IMAGE_FORMAT")
 
 
-def _decode_wav(payload: bytes) -> tuple[int, int, int]:
-    """Parse a WAV payload's headers → (n_frames, sample_rate,
-    channels). RIFF/WAVE magic gate, then a word-aligned chunk walk:
-    `fmt ` gives channels/sample_rate/block_align, `data` gives the
-    frame count (data_size // block_align). The data chunk's bytes
-    must actually be present — a header that CLAIMS more sample bytes
-    than the payload carries raises WAV_TRUNCATED (no fabricated
-    frame counts; round-3 verdict finding)."""
+def _wav_chunks(payload: bytes) -> tuple[int, int, int, int, memoryview]:
+    """Walk a WAV payload's chunks → (channels, sample_rate, block_align,
+    bits, data) from `fmt ` and the FIRST `data` chunk: the one source
+    for the header and the sample stats, so the two never describe
+    different chunks. RIFF/WAVE magic gate, word-aligned chunk walk.
+    The data chunk's bytes must actually be present — a header that
+    CLAIMS more sample bytes than the payload carries raises
+    WAV_TRUNCATED (no fabricated frame counts)."""
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("UNSUPPORTED_AUDIO_FORMAT")
-    i = 12
-    sample_rate = channels = block_align = None
+    i, fmt = 12, None
     while i + 8 <= len(payload):
         cid = payload[i : i + 4]
         (csz,) = struct.unpack("<I", payload[i + 4 : i + 8])
         if cid == b"fmt ":
             if i + 24 > len(payload) or csz < 16:
                 raise ValueError("WAV_TRUNCATED")
-            _fmt, channels, sample_rate, _brate, block_align, _bits = (
+            _tag, channels, rate, _brate, align, bits = (
                 struct.unpack("<HHIIHH", payload[i + 8 : i + 24])
             )
-            if block_align == 0:
+            if align == 0:
                 raise ValueError("WAV_BAD_FMT")
+            fmt = (channels, rate, align, bits)
         elif cid == b"data":
-            if channels is None:
+            if fmt is None:
                 raise ValueError("WAV_NO_FMT")
             if i + 8 + csz > len(payload):
                 raise ValueError("WAV_TRUNCATED")
-            return csz // block_align, sample_rate, channels
+            return (*fmt, memoryview(payload)[i + 8 : i + 8 + csz])
         i += 8 + csz + (csz & 1)  # RIFF chunks are word-aligned
     raise ValueError("WAV_NO_DATA")
+
+
+def _decode_wav(payload: bytes) -> tuple[int, int, int]:
+    """Parse a WAV payload's headers → (n_frames, sample_rate,
+    channels); n_frames = data bytes // block_align."""
+    channels, rate, align, _bits, data = _wav_chunks(payload)
+    return len(data) // align, rate, channels
 
 
 def _decode_mp4(payload: bytes) -> tuple[int, int, int]:
@@ -397,7 +399,7 @@ def extract_media_meta(media: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Full-payload content features (round-4 verdict item #5)
+# Full-payload content features
 # ---------------------------------------------------------------------------
 # The reference's extractors consume FULL pixel data (cv2.imdecode at
 # utils.py:107-109 feeding color_extractor.py:219-236 and
@@ -466,27 +468,11 @@ def _image_pixel_stats(payload: bytes) -> tuple[float, float, str]:
 def _wav_sample_stats(payload: bytes) -> tuple[float, int, str]:
     """(rms, peak_abs, decoder) over the PCM samples of the WAV data
     chunk — REAL full-payload decode with no external dependency:
-    the chunk walk locates `data`, numpy reinterprets the sample
-    bytes at the fmt-declared width (8/16/32-bit PCM)."""
+    numpy reinterprets the `_wav_chunks` sample bytes at the
+    fmt-declared width (8/16/32-bit PCM)."""
     import numpy as np
 
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("UNSUPPORTED_AUDIO_FORMAT")
-    i, bits, data = 12, None, None
-    while i + 8 <= len(payload):
-        cid = payload[i : i + 4]
-        (csz,) = struct.unpack("<I", payload[i + 4 : i + 8])
-        if cid == b"fmt ":
-            if i + 24 > len(payload) or csz < 16:
-                raise ValueError("WAV_TRUNCATED")
-            bits = struct.unpack("<H", payload[i + 22 : i + 24])[0]
-        elif cid == b"data":
-            if i + 8 + csz > len(payload):
-                raise ValueError("WAV_TRUNCATED")
-            data = payload[i + 8 : i + 8 + csz]
-        i += 8 + csz + (csz & 1)
-    if data is None or bits is None:
-        raise ValueError("WAV_NO_DATA")
+    _ch, _rate, _align, bits, data = _wav_chunks(payload)
     dtype = {8: np.uint8, 16: np.int16, 32: np.int32}.get(bits)
     if dtype is None:
         raise ValueError("WAV_BAD_BITDEPTH")

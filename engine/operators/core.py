@@ -249,9 +249,16 @@ def topk_by_count(
     df: DataFrame, entity: str, key: str, k: int, count_col: str = "cnt", rank_col: str = "rank"
 ) -> DataFrame:
     """Frequency top-k per entity (A2/A3 + W6): hash-agg count with
-    map-side partial combine, then windowed rank ≤ k; ties broken by
-    key ascending for determinism."""
+    map-side partial combine, then `topk_of_counts`."""
     counts = df.groupBy(entity, key).agg(F.count(F.lit(1)).alias(count_col))
+    return topk_of_counts(counts, entity, key, k, count_col, rank_col)
+
+
+def topk_of_counts(
+    counts: DataFrame, entity: str, key: str, k: int, count_col: str = "cnt", rank_col: str = "rank"
+) -> DataFrame:
+    """Rank (entity, key, count_col) rows per entity and keep rank ≤ k;
+    ties broken by key ascending for determinism."""
     w = Window.partitionBy(entity).orderBy(F.col(count_col).desc(), F.col(key).asc())
     return counts.withColumn(rank_col, F.row_number().over(w)).filter(
         F.col(rank_col) <= k

@@ -5,8 +5,8 @@ Transcript corpora are zipf-skewed: a single hot conversation can be
 Where that hurts and what this module does about it:
 
 - **Aggregations** (per-entity counts, top-k): a hot key funnels its
-  entire row set through one reducer. `salted_topk_by_count` splits
-  each (entity, key) into `salt_buckets` sub-keys for the first
+  entire row set through one reducer. `auto_topk_by_count` splits
+  each hot (entity, key) into `salt_buckets` sub-keys for the first
   aggregation, then merges the partial counts — the classic two-stage
   salted aggregate. (Spark's hash agg already does map-side partial
   combine, which covers *moderate* skew; explicit salting is for the
@@ -34,40 +34,9 @@ Where that hurts and what this module does about it:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-
-def salt_col(idx_col: str, buckets: int) -> Column:
-    """Deterministic salt in [0, buckets) from a row-identity column
-    (NOT rand() — results must be reproducible and resume-stable)."""
-    return F.pmod(F.xxhash64(F.col(idx_col)), F.lit(buckets)).cast("int")
-
-
-def salted_topk_by_count(
-    df: DataFrame,
-    entity: str,
-    key: str,
-    k: int,
-    idx_col: str,
-    salt_buckets: int = 16,
-    count_col: str = "cnt",
-    rank_col: str = "rank",
-) -> DataFrame:
-    """Two-stage salted frequency top-k per entity. Stage 1 aggregates
-    on (entity, key, salt) — hot keys fan out over `salt_buckets`
-    reducers; stage 2 merges the partials on (entity, key); then the
-    usual deterministic rank ≤ k. Output identical to
-    `core.topk_by_count`."""
-    partial = (
-        df.withColumn("_salt", salt_col(idx_col, salt_buckets))
-        .groupBy(entity, key, "_salt")
-        .agg(F.count(F.lit(1)).alias("_pcnt"))
-    )
-    counts = partial.groupBy(entity, key).agg(F.sum("_pcnt").alias(count_col))
-    w = Window.partitionBy(entity).orderBy(F.col(count_col).desc(), F.col(key).asc())
-    return counts.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= k
-    )
+from engine.operators.core import topk_by_count, topk_of_counts
 
 
 def auto_topk_by_count(
@@ -85,8 +54,7 @@ def auto_topk_by_count(
 ) -> DataFrame:
     """Skew-aware frequency top-k: consult the sampled `hot_entities`
     detector, then pick the physical strategy automatically — callers
-    no longer choose between `core.topk_by_count` and
-    `salted_topk_by_count` by hand (round-3 verdict gap #5).
+    never choose a plan by hand.
 
     Dispatch:
     - no hot entities detected → the plain hash-agg plan (no salt
@@ -96,8 +64,8 @@ def auto_topk_by_count(
       other rows salt 0. The stage-1 partial aggregate then fans out
       ONLY the hot keys over `salt_buckets` reducers while cold keys
       keep the single-group shape — cheaper than splitting the input
-      into hot/cold DataFrames (two scans) and strictly identical in
-      output to both manual operators.
+      into hot/cold DataFrames (two scans) and identical in output to
+      `core.topk_by_count`.
 
     The detector's hot list is collected to the driver, which is
     bounded by construction: at most floor(1/threshold_frac) entities
@@ -109,24 +77,18 @@ def auto_topk_by_count(
     hot = hot_entities(df, entity, threshold_frac, sample_frac, seed)
     hot_keys = [r[0] for r in hot.select(entity).collect()]
     if not hot_keys:
-        from engine.operators.core import topk_by_count
-
         return topk_by_count(df, entity, key, k, count_col, rank_col)
-    cond_salt = (
-        F.when(F.col(entity).isin(hot_keys), salt_col(idx_col, salt_buckets))
-        .otherwise(F.lit(0))
-        .cast("int")
-    )
+    # salt from a row-identity column, not rand(): results must be
+    # reproducible and resume-stable
+    salt = F.pmod(F.xxhash64(F.col(idx_col)), F.lit(salt_buckets))
+    cond_salt = F.when(F.col(entity).isin(hot_keys), salt).otherwise(F.lit(0)).cast("int")
     partial = (
         df.withColumn("_salt", cond_salt)
         .groupBy(entity, key, "_salt")
         .agg(F.count(F.lit(1)).alias("_pcnt"))
     )
     counts = partial.groupBy(entity, key).agg(F.sum("_pcnt").alias(count_col))
-    w = Window.partitionBy(entity).orderBy(F.col(count_col).desc(), F.col(key).asc())
-    return counts.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= k
-    )
+    return topk_of_counts(counts, entity, key, k, count_col, rank_col)
 
 
 def hot_entities(
@@ -146,8 +108,8 @@ def hot_entities(
     cut = int(total * threshold_frac)
     if cut < 2:
         # sample too small to tell hot from noise: with a floor of 1,
-        # EVERY sampled entity would be flagged hot (round-3 review) —
-        # at sizes this small skew cannot matter anyway
+        # EVERY sampled entity would be flagged hot — at sizes this
+        # small skew cannot matter anyway
         return s.select(F.col(entity)).limit(0).withColumn(
             "est_rows", F.lit(0).cast("long")
         )

@@ -809,10 +809,10 @@ def q_rolling_approx(spark, sf_dir):
     )
 
 
-def _asof_purchase(spark, sf_dir, **asof_kwargs):
-    """Shared body of the three as-of gate queries (jvm / kernel /
-    strict): view probes <- latest purchase context, differing only in
-    asof_join kwargs, so the variants can never drift apart."""
+def _asof_purchase(spark, sf_dir, strict=False):
+    """Shared body of the as-of gate queries: view probes <- latest
+    purchase context, differing only in the boundary, so the variants
+    can never drift apart."""
     ev = _t(spark, sf_dir, "events")
     probe = ev.filter(F.col("event_type") == "view").select(
         "user_id", "ts", "event_id"
@@ -825,9 +825,9 @@ def _asof_purchase(spark, sf_dir, **asof_kwargs):
     )
     out = asof_join(
         probe, ctx,
-        on="user_id", probe_ts="ts", probe_idx="event_id",
+        on="user_id", probe_ts="ts",
         ctx_ts="event_ts", ctx_idx="ctx_id",
-        payload=["purchase_value"], prefix="asof_", **asof_kwargs,
+        payload=["purchase_value"], prefix="asof_", strict=strict,
     )
     return out.select(
         "user_id", "event_id",
@@ -1135,22 +1135,12 @@ FROM events GROUP BY 1
 """
 
 
-def q_asof_purchase_kernel(spark, sf_dir):
-    """Same as-of semantics as q_asof_purchase via the cogrouped
-    pd.merge_asof Arrow-kernel strategy — the driver differential-tests
-    both physical formulations against ONE SQL oracle."""
-    return _asof_purchase(spark, sf_dir, strategy="kernel")
-
-
-SQL_ASOF_PURCHASE_KERNEL = SQL_ASOF_PURCHASE
-
-
 def q_asof_purchase_strict(spark, sf_dir):
     """Strict (<) as-of boundary: an exactly-coincident purchase is NOT
     visible to the view — the other half of the boundary contract the
     non-strict query pins (events at equal ts exist by construction in
     the fixtures)."""
-    return _asof_purchase(spark, sf_dir, strict=True, strategy="jvm")
+    return _asof_purchase(spark, sf_dir, strict=True)
 
 
 SQL_ASOF_PURCHASE_STRICT = """

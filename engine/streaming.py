@@ -216,7 +216,7 @@ ASOF_OUT_SCHEMA = T.StructType(
 
 
 def _asof_fold(conv_id, floor, rows, wm_us):
-    """The batch `_asof_union_tag` walk: in (ts, side, idx) order context
+    """The batch `asof_join` walk: in (ts, side, idx) order context
     (side 0) precedes probes at equal ts, so each probe reads the latest
     admissible context's payload, carried as the floor. Later folds only
     see rows at or above the watermark that finalised this one, so the

@@ -9,9 +9,10 @@ fallback (SURVEY.md §7.5): partitioned Parquet + atomic JSON snapshot
 manifests exposing the same API shape (`append` → snapshot commit,
 `read` → committed-snapshots-only scan). On a cluster with the
 iceberg-spark-runtime jar, `engine.tableio_iceberg.IcebergTableIO`
-(same methods over `df.writeTo(tbl).append()` + snapshot-summary
-run_id stamping + `.files` metadata lineage) slots in unchanged —
-callers never touch paths. Its test activates iff the jar is present.
+(the same commit methods over `df.writeTo(tbl).append()` +
+snapshot-summary run_id stamping + `.files` metadata lineage) slots
+into `run_resumable` unchanged — callers never touch paths. Its test
+activates iff the jar is present.
 
 Commit protocol (the reference's atomic "response only after all
 extractors finish" boundary, utils.py:155-214, as a storage contract):

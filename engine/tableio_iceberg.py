@@ -1,5 +1,5 @@
 """IcebergTableIO — the north-rule storage surface ("committed to
-Iceberg snapshots"), same three-method contract as engine.tableio.TableIO.
+Iceberg snapshots"), with TableIO's commit methods.
 
 The sandbox ships no iceberg-spark-runtime jar and has no network for
 `--packages`, so this class cannot run here (TableIO is the documented
@@ -11,8 +11,13 @@ public Iceberg-Spark API so that on a real cluster:
       --conf spark.sql.catalog.local.type=hadoop \
       --conf spark.sql.catalog.local.warehouse=<path> ...
 
-`IcebergTableIO("local", "engine")` slots in wherever TableIO is used
-(engine/runner.py) with no caller changes.
+`IcebergTableIO(spark, "local", "engine")` slots into
+`runner.run_resumable` with no caller changes: `is_committed`,
+`read_manifest` and `committed_runs` take TableIO's parameters, and
+`append` takes them less TableIO's Parquet layout options
+(`partition_by`, `range_layout`). `run_incremental` and the incremental
+dedup/ANN ingest need TableIO: they read by `commit_seq`
+(`read_since`, `max_commit_seq`), which this class does not have.
 
 Mapping of the commit protocol onto Iceberg primitives:
 
@@ -37,7 +42,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 class IcebergTableIO:
-    def __init__(self, catalog: str = "local", namespace: str = "engine"):
+    def __init__(self, spark: SparkSession, catalog: str = "local", namespace: str = "engine"):
+        self.spark = spark
         self.catalog = catalog
         self.namespace = namespace
 
@@ -57,20 +63,20 @@ class IcebergTableIO:
     def _tbl(self, table: str) -> str:
         return f"{self.catalog}.{self.namespace}.{table}"
 
-    def _ensure_namespace(self, spark: SparkSession) -> None:
-        spark.sql(
+    def _ensure_namespace(self) -> None:
+        self.spark.sql(
             f"CREATE NAMESPACE IF NOT EXISTS {self.catalog}.{self.namespace}"
         )
 
     # -- commit protocol -----------------------------------------------------
-    def is_committed(self, spark: SparkSession, table: str, run_id: str) -> bool:
-        if not spark.catalog.tableExists(self._tbl(table)):
+    def is_committed(self, table: str, run_id: str) -> bool:
+        if not self.spark.catalog.tableExists(self._tbl(table)):
             return False
         # Column-expression filter, not SQL-string interpolation: a
         # run_id containing a quote must not break (or inject into)
         # the predicate.
         n = (
-            spark.sql(f"SELECT summary FROM {self._tbl(table)}.snapshots")
+            self.spark.sql(f"SELECT summary FROM {self._tbl(table)}.snapshots")
             .where(F.col("summary")["run_id"] == F.lit(run_id))
             .count()
         )
@@ -89,25 +95,26 @@ class IcebergTableIO:
         Idempotent: a committed run_id is a no-op returning the
         existing manifest. The snapshot commit itself is atomic
         (Iceberg metadata-pointer swap), so there is no staging/rename
-        protocol to manage here."""
+        protocol to manage here. `spark` is kept for TableIO's call
+        shape; the constructor's session does the work."""
         tbl = self._tbl(table)
-        if self.is_committed(spark, table, run_id):
-            return self.read_manifest(spark, table, run_id)
+        if self.is_committed(table, run_id):
+            return self.read_manifest(table, run_id)
 
-        self._ensure_namespace(spark)
-        writer = df.writeTo(tbl).option(f"snapshot-property.run_id", run_id)
+        self._ensure_namespace()
+        writer = df.writeTo(tbl).option("snapshot-property.run_id", run_id)
         for k, v in (extra_meta or {}).items():
             writer = writer.option(f"snapshot-property.{k}", str(v))
-        if spark.catalog.tableExists(tbl):
+        if self.spark.catalog.tableExists(tbl):
             writer.append()
         else:
             writer.using("iceberg").create()
-        return self.read_manifest(spark, table, run_id)
+        return self.read_manifest(table, run_id)
 
     # -- reads ----------------------------------------------------------------
-    def _snapshot_row(self, spark: SparkSession, table: str, run_id: str):
+    def _snapshot_row(self, table: str, run_id: str):
         rows = (
-            spark.sql(
+            self.spark.sql(
                 f"SELECT snapshot_id, committed_at, summary "
                 f"FROM {self._tbl(table)}.snapshots"
             )
@@ -118,20 +125,20 @@ class IcebergTableIO:
             raise FileNotFoundError(f"no snapshot for run_id {run_id!r}")
         return rows[0]
 
-    def committed_runs(self, spark: SparkSession, table: str) -> list[str]:
-        if not spark.catalog.tableExists(self._tbl(table)):
+    def committed_runs(self, table: str) -> list[str]:
+        if not self.spark.catalog.tableExists(self._tbl(table)):
             return []
-        rows = spark.sql(
+        rows = self.spark.sql(
             f"SELECT summary['run_id'] AS run_id "
             f"FROM {self._tbl(table)}.snapshots ORDER BY committed_at"
         ).collect()
         return [r["run_id"] for r in rows if r["run_id"] is not None]
 
-    def read_manifest(self, spark: SparkSession, table: str, run_id: str) -> dict:
+    def read_manifest(self, table: str, run_id: str) -> dict:
         """Manifest with the same keys as TableIO.read_manifest: totals
         from the snapshot summary, per-FILE lineage from the `.files`
         metadata table at VERSION AS OF the snapshot."""
-        snap = self._snapshot_row(spark, table, run_id)
+        snap = self._snapshot_row(table, run_id)
         summary = dict(snap["summary"])
         files = [
             {
@@ -139,7 +146,7 @@ class IcebergTableIO:
                 "rows": r["record_count"],
                 "bytes": r["file_size_in_bytes"],
             }
-            for r in spark.sql(
+            for r in self.spark.sql(
                 f"SELECT file_path, record_count, file_size_in_bytes "
                 f"FROM {self._tbl(table)}.files "
                 f"VERSION AS OF {snap['snapshot_id']}"
@@ -170,7 +177,7 @@ class IcebergTableIO:
         tbl = self._tbl(table)
         if as_of is None:
             return spark.read.table(tbl)
-        snap = self._snapshot_row(spark, table, as_of)
+        snap = self._snapshot_row(table, as_of)
         return spark.sql(f"SELECT * FROM {tbl} VERSION AS OF {snap['snapshot_id']}")
 
     # -- maintenance ---------------------------------------------------------

@@ -52,15 +52,16 @@ def assert_frames_match(got: pd.DataFrame, exp: pd.DataFrame, keys=None) -> None
         else:
             # pd.isna covers None, float-NaN AND pd.NaT — NaT != NaT is
             # True, so unnormalized null timestamps would be reported
-            # as a (false) mismatch (round-3 review finding)
+            # as a (false) mismatch; lists, not Series.map, which turns
+            # None back into NaT on a datetime column
             def _norm_scalar(x):
                 try:
                     return None if pd.isna(x) else x
                 except (TypeError, ValueError):
                     return x  # non-scalar (shouldn't occur here)
 
-            gn = g.map(_norm_scalar)
-            en = e.map(_norm_scalar)
+            gn = [_norm_scalar(x) for x in g]
+            en = [_norm_scalar(x) for x in e]
             neq = [
                 i for i, (a, b) in enumerate(zip(gn, en)) if a != b and not (a is None and b is None)
             ]

@@ -1,7 +1,8 @@
 """Property-based as-of join tests (hypothesis): on random small
 probe/context tables — duplicate timestamps, empty sides, unmatched
-entities included by construction — both engine strategies agree with
-a naive O(n·m) Python reference, for strict and non-strict boundaries.
+entities included by construction — the engine operator agrees with a
+naive O(n·m) Python reference and with the pd.merge_asof oracle, for
+strict and non-strict boundaries.
 
 One Spark round-trip per example is slow, so hypothesis drives the
 TABLE GENERATOR and the examples are batched into a handful of Spark
@@ -10,9 +11,12 @@ ties, boundary-equal timestamps — does the heavy lifting)."""
 
 from __future__ import annotations
 
+import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from engine.operators.asof import asof_join
+from tests.asof_oracle import pandas_asof
+from tests.compare import assert_frames_match
 
 TS = [1000, 2000, 2000, 3000, 5000]  # duplicate ts by construction
 
@@ -58,8 +62,12 @@ def _reference(probe, ctx, strict):
 
 @settings(max_examples=12, deadline=None)
 @given(tables(), st.booleans())
-def test_asof_strategies_match_reference(spark_global, tb, strict):
+def test_asof_matches_reference_and_pandas_oracle(spark_global, tb, strict):
     probe_rows, ctx_rows = tb
+    probe_pdf = pd.DataFrame(probe_rows, columns=["conv", "pts", "pidx"]).astype({"pts": float})
+    ctx_pdf = pd.DataFrame(ctx_rows, columns=["conv", "cts", "cidx", "val"]).astype(
+        {"conv": object, "cts": float, "cidx": "int64", "val": float}
+    )
     probe = spark_global.createDataFrame(
         [(a, float(b), c) for a, b, c in probe_rows],
         "conv string, pts double, pidx long",
@@ -68,18 +76,16 @@ def test_asof_strategies_match_reference(spark_global, tb, strict):
         [(a, float(b), c, d) for a, b, c, d in ctx_rows],
         "conv string, cts double, cidx long, val double",
     )
+    args = dict(on="conv", probe_ts="pts", ctx_ts="cts", ctx_idx="cidx",
+                payload=["val"], strict=strict)
+    got = asof_join(probe, ctx, **args).toPandas()
     expect = _reference(probe_rows, ctx_rows, strict)
-    for strategy in ("jvm", "kernel"):
-        got = asof_join(
-            probe, ctx,
-            on="conv", probe_ts="pts", probe_idx="pidx",
-            ctx_ts="cts", ctx_idx="cidx", payload=["val"],
-            strict=strict, strategy=strategy, kernel_buckets=4, kernel_chunks=2,
-        ).collect()
-        assert len(got) == len(probe_rows), strategy
-        for r in got:
-            key = (r["conv"], r["pts"], r["pidx"])
-            assert r["asof_val"] == expect[key], (strategy, key, dict(expect))
+    assert len(got) == len(probe_rows)
+    for r in got.itertuples(index=False):
+        want = expect[(r.conv, r.pts, r.pidx)]
+        assert (pd.isna(r.asof_val) and want is None) or r.asof_val == want, (r, expect)
+    assert_frames_match(got, pandas_asof(probe_pdf, ctx_pdf, **args),
+                        keys=["conv", "pts", "pidx"])
 
 
 # module-scoped spark fixture alias: hypothesis re-runs the test body
@@ -93,15 +99,11 @@ def spark_global(spark):
 
 
 def test_asof_null_timestamps_parity(spark):
-    """Null-timestamp semantics (round-3 review): a NULL-ctx_ts context
-    row is never admissible (the jvm null-first sort used to serve its
-    payload to every early probe), and a NULL-ts probe emits null
-    payloads in BOTH strategies (merge_asof used to crash)."""
+    """Null timestamps: a NULL-ctx_ts context row is never admissible
+    (a null-first sort would serve its payload to every early probe),
+    and a NULL-ts probe emits null payloads — in the operator and in
+    the pandas oracle alike."""
     from datetime import datetime
-
-    from engine.operators.asof import asof_join
-
-    T0 = datetime(2024, 1, 1)
 
     def ts(s):
         return datetime(2024, 1, 1, 0, 0, s)
@@ -118,16 +120,16 @@ def test_asof_null_timestamps_parity(spark):
         "conv_id string, event_ts timestamp, event_idx int, "
         "ctx_value double, ctx_label string",
     )
-    for strategy in ("jvm", "kernel"):
-        rows = {
-            r["turn_idx"]: (r["asof_ctx_value"], r["asof_ctx_label"])
-            for r in asof_join(
-                probe, context, strategy=strategy, kernel_chunks=1
-            ).collect()
-        }
-        # probe at t=10: only the null-ts row precedes it → NO match
-        assert rows[0] == (None, None), strategy
-        # probe at t=20: the real t=15 event
-        assert rows[1] == (1.0, "ok"), strategy
-        # null-ts probe: no admissible event, nulls — not a crash
-        assert rows[2] == (None, None), strategy
+    got = asof_join(probe, context)
+    rows = {
+        r["turn_idx"]: (r["asof_ctx_value"], r["asof_ctx_label"])
+        for r in got.collect()
+    }
+    # probe at t=10: only the null-ts row precedes it → NO match
+    assert rows[0] == (None, None)
+    # probe at t=20: the real t=15 event
+    assert rows[1] == (1.0, "ok")
+    # null-ts probe: no admissible event, nulls — not a crash
+    assert rows[2] == (None, None)
+    assert_frames_match(got.toPandas(), pandas_asof(probe.toPandas(), context.toPandas()),
+                        keys=["turn_idx"])

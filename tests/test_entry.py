@@ -49,6 +49,16 @@ def test_every_builder_and_oracle_is_registered():
                 assert val in oracles, f"{mod.__name__}.{attr}"
 
 
+def test_asof_kernel_key_is_the_one_asof():
+    """`asof_purchase_kernel` keeps its driver row and priority, and
+    runs the same builder against the same oracle as `asof_purchase`."""
+    m = _entry()
+    q, o = m.queries(), m.oracle_sql()
+    assert list(q)[2:5] == ["asof_purchase", "asof_purchase_kernel", "asof_purchase_strict"]
+    assert q["asof_purchase_kernel"] is q["asof_purchase"]
+    assert o["asof_purchase_kernel"] == o["asof_purchase"]
+
+
 def test_check_queries_rejects_unknown_names():
     """A typo must not check nothing and report FAILURES: 0."""
     proc = subprocess.run(

@@ -50,25 +50,24 @@ def test_strict_excludes_boundary(spark, small):
     tdf = spark.createDataFrame(tp, schema=TRANSCRIPT_SCHEMA)
     cdf = spark.createDataFrame(cp, schema=CONTEXT_SCHEMA)
     keys = ["conv_id", "ts", "turn_idx"]
-    for strategy in ("jvm", "kernel"):
-        le = asof_join(tdf, cdf, strict=False, strategy=strategy).toPandas().sort_values(keys).reset_index(drop=True)
-        lt = asof_join(tdf, cdf, strict=True, strategy=strategy).toPandas().sort_values(keys).reset_index(drop=True)
-        # boundary rows: a context event exactly at the probe ts
-        exact_keys = set(map(tuple, cp[["conv_id"]].assign(ts=cp["event_ts"]).itertuples(index=False)))
-        on_boundary = le.apply(lambda r: (r["conv_id"], r["ts"]) in exact_keys, axis=1)
-        assert on_boundary.any(), "fixture must contain boundary-coincident events"
-        # strict result at boundary differs from <= result somewhere
-        diff = (le.loc[on_boundary, "asof_ctx_value"].fillna(-1).to_numpy()
-                != lt.loc[on_boundary, "asof_ctx_value"].fillna(-1).to_numpy())
-        assert diff.any(), f"{strategy}: strict made no difference at boundaries"
-        # and strict never selects a boundary event: verify per row
-        cmax = cp.groupby("conv_id")["event_ts"].min().to_dict()
-        for _, r in lt.iterrows():
-            first_ev = cmax.get(r["conv_id"])
-            if first_ev is not None and r["ts"] <= first_ev:
-                # probe at/before the first event: strict must be null at ==
-                if r["ts"] == first_ev:
-                    assert pd.isna(r["asof_ctx_value"])
+    le = asof_join(tdf, cdf, strict=False).toPandas().sort_values(keys).reset_index(drop=True)
+    lt = asof_join(tdf, cdf, strict=True).toPandas().sort_values(keys).reset_index(drop=True)
+    # boundary rows: a context event exactly at the probe ts
+    exact_keys = set(map(tuple, cp[["conv_id"]].assign(ts=cp["event_ts"]).itertuples(index=False)))
+    on_boundary = le.apply(lambda r: (r["conv_id"], r["ts"]) in exact_keys, axis=1)
+    assert on_boundary.any(), "fixture must contain boundary-coincident events"
+    # strict result at boundary differs from <= result somewhere
+    diff = (le.loc[on_boundary, "asof_ctx_value"].fillna(-1).to_numpy()
+            != lt.loc[on_boundary, "asof_ctx_value"].fillna(-1).to_numpy())
+    assert diff.any(), "strict made no difference at boundaries"
+    # and strict never selects a boundary event: verify per row
+    cmax = cp.groupby("conv_id")["event_ts"].min().to_dict()
+    for _, r in lt.iterrows():
+        first_ev = cmax.get(r["conv_id"])
+        if first_ev is not None and r["ts"] <= first_ev:
+            # probe at/before the first event: strict must be null at ==
+            if r["ts"] == first_ev:
+                assert pd.isna(r["asof_ctx_value"])
 
 
 def test_truncated_prefix_equals_full_run(spark, small):

@@ -270,6 +270,19 @@ def test_wav_sample_stats_numpy_differential():
     assert abs(rms - float(np.sqrt(np.mean(a * a)))) < 1e-12
 
 
+def test_wav_header_and_stats_read_the_same_data_chunk():
+    """A payload with two `data` chunks: the frame count and the sample
+    stats both describe the first one."""
+    from engine.multimodal import _wav_sample_stats
+
+    first = _wav_payload([1000, -1000, 1000, -1000])
+    second = struct.pack("<4h", 3000, 3000, 3000, 3000)
+    body = first[8:] + b"data" + struct.pack("<I", len(second)) + second
+    payload = b"RIFF" + struct.pack("<I", len(body)) + body
+    assert _decode_wav(payload) == (4, 8000, 1)
+    assert _wav_sample_stats(payload) == (1000.0, 1000, "pcm")
+
+
 def test_media_content_audio_real_others_typed(spark):
     from engine.multimodal import (
         MEDIA_CONTENT_SCHEMA,

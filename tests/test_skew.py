@@ -1,33 +1,15 @@
 """Salted-key skew mitigation: salted results identical to unsalted
 (invariance under salting, SURVEY §5.4); hot-entity detector finds the
-planted zipf head."""
+planted zipf head; the as-of join is exact on a hot conversation."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from engine.operators.core import topk_by_count
-from engine.operators.skew import hot_entities, salted_topk_by_count
-
-
-def test_salted_topk_identical_to_unsalted(spark, transcripts_df):
-    base = topk_by_count(
-        transcripts_df.filter(F.col("tool").isNotNull() & (F.col("tool") != "")),
-        "conv_id",
-        "tool",
-        3,
-    )
-    salted = salted_topk_by_count(
-        transcripts_df.filter(F.col("tool").isNotNull() & (F.col("tool") != "")),
-        "conv_id",
-        "tool",
-        3,
-        idx_col="turn_idx",
-        salt_buckets=16,
-    )
-    a = sorted(map(tuple, base.collect()))
-    b = sorted(map(tuple, salted.collect()))
-    assert a == b and len(a) > 0
+from engine.operators.skew import hot_entities
+from tests.asof_oracle import pandas_asof
+from tests.compare import assert_frames_match
 
 
 def test_hot_entity_detector_finds_zipf_head(spark, transcripts_df):
@@ -51,38 +33,18 @@ def test_hot_entity_detector_finds_zipf_head(spark, transcripts_df):
     assert all(exact[c] >= 0.003 for c in got)
 
 
-def test_kernel_asof_hot_entity_chunked(spark, transcripts_df, context_df):
-    """The bucketed+salted kernel as-of handles a planted hot
-    conversation: (a) results bit-identical to the jvm strategy, (b)
-    with chunks=c the hot entity's probe rows really are split across
-    c cogroups (no single pandas frame holds the whole entity)."""
+def test_asof_hot_entity_matches_pandas_oracle(spark, transcripts_df, context_df):
+    """On the zipf fixture, planted hot conversation included, the
+    as-of operator equals the pd.merge_asof oracle row for row."""
     from engine.operators.asof import asof_join
 
     hot = transcripts_df.groupBy("conv_id").count().orderBy(
-        F.col("count").desc()).first()
-    args = dict(
-        on="conv_id", probe_ts="ts", probe_idx="turn_idx",
-        ctx_ts="event_ts", ctx_idx="event_idx",
-        payload=["ctx_value"], prefix="asof_",
-    )
-    jvm = asof_join(transcripts_df, context_df, strategy="jvm", **args)
-    ker = asof_join(
-        transcripts_df, context_df, strategy="kernel",
-        kernel_buckets=8, kernel_chunks=4, **args,
-    )
-    cols = ["conv_id", "ts", "turn_idx", "asof_ctx_value"]
-    a = sorted(map(tuple, jvm.select(cols).collect()))
-    b = sorted(map(tuple, ker.select(cols).collect()))
-    assert a == b and len(a) > 0
-
-    # chunk-split property: the hot conversation's rows spread over >1
-    # chunk id (hash of turn_idx), so no cogroup sees the whole entity
-    n_chunks = (
-        transcripts_df.filter(F.col("conv_id") == hot["conv_id"])
-        .select(F.pmod(F.xxhash64("turn_idx"), F.lit(4)).alias("c"))
-        .distinct().count()
-    )
-    assert n_chunks > 1
+        F.col("count").desc()).first()["conv_id"]
+    got = asof_join(transcripts_df, context_df).toPandas()
+    exp = pandas_asof(transcripts_df.toPandas(), context_df.toPandas())
+    assert_frames_match(got, exp)
+    hot_rows = got[got["conv_id"] == hot]
+    assert hot_rows["asof_ctx_value"].notna().any(), "hot conversation never matched"
 
 
 def test_auto_topk_dispatch_differential(spark, transcripts_df):

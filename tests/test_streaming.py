@@ -123,7 +123,7 @@ def test_stream_asof_matches_batch(spark, transcripts_df, context_df, tmp_path_f
 
     exp = (
         asof_join(
-            transcripts_df, context_df, strict=False, strategy="jvm",
+            transcripts_df, context_df, strict=False,
             payload=["ctx_value", "ctx_label"],
         )
         .select("conv_id", "turn_idx", "ts", "asof_ctx_value", "asof_ctx_label")
@@ -512,7 +512,7 @@ def test_stream_folds_multi_epoch_match_batch(
                 read(tpath, TRANSCRIPT_SCHEMA), read(cpath, CONTEXT_SCHEMA),
                 watermark="0 seconds",
             ),
-            asof_join(transcripts_df, context_df, strict=False, strategy="jvm",
+            asof_join(transcripts_df, context_df, strict=False,
                       payload=["ctx_value", "ctx_label"]),
             ["asof_ctx_value", "asof_ctx_label"],
             0.7,
