@@ -1,22 +1,37 @@
 #!/usr/bin/env python
-"""Benchmark harness — the driver's per-round feedback loop.
+"""Benchmark CLI: the gate queries, the flagship pipeline and its
+N vs 4N scaling, on this host.
 
-Times every `__spark_entry__.queries()` entry at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS], plus the flagship transcript
-feature-vector pipeline (headline metric: turns/sec).
+Runs at local[N], N = $SPARK_GRAFT_CPUS or the CPU affinity count and
+never more than the affinity count, with the driver heap sized from
+the host's RAM (perfbench/harness.py `host_config`). Three legs:
+
+- queries: each `__spark_entry__.queries()` entry at --sf-dir, --reps
+  times, the builder call and the noop action timed apart
+  (incremental queries ingest their epochs in the builder);
+  --explain-dir writes each query's formatted plan.
+- flagship: `extract_features` over ~--turns generated turns read from
+  parquet, --reps times with the plan rebuilt each rep (a reused plan
+  reuses its shuffle files), each rep in a Tracer span for its
+  shuffle, spill and failed tasks.
+- scaling: the same flagship on the same parquet input in fresh
+  sessions at local[max(1, N//4)] and local[N]; the paper's criterion
+  is efficiency = (tp_N / tp_lo) / (N / lo) >= 0.8.
+
+Each leg is bracketed by a single-core spin rate and the host's CPU
+steal fraction over the leg: a slow record taken while co-tenants held
+the CPUs says so itself.
 
 Prints ONE JSON line:
-  {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ..., "flagship": {...}}
-
-Each query is materialized with a noop-format write (full compute,
-no driver collect); per-query time is wall-clock around the action.
+  {"metric": "total_bench_seconds", "value": <sum of "queries">,
+   "unit": "sec", "queries": {name: median action s, ...,
+   "flagship_pipeline": s}, "sf": ..., "flagship": {...},
+   "scaling": {...}, "host": {...}, ...}
 
 Usage:
-  python bench.py                 # full run, one JSON line on stdout
-  python bench.py --queries q1,q2 # subset
-  python bench.py --turns 500000  # flagship scale override
+  python bench.py                              # every query, defaults
+  python bench.py --queries lag_lead,rolling --reps 3 --explain-dir plans/x
+  python bench.py --sf-dir <sf dir> --turns 4000 --reps 1
 """
 
 from __future__ import annotations
@@ -24,303 +39,194 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
+import statistics
 import sys
-
-# Executor-memory sizing (the brief's "size partitions to fit in
-# executor memory"): the library default driver heap (8g) SPILLS on
-# the bench inputs — measured 1.6 GiB disk + 7.7 GiB memory spill at
-# 4.56M turns, growing ~10x at 45.5M and dominating the per-turn cost
-# there; 24g eliminates spill entirely (0 bytes, Spark REST stage
-# metrics). On a real cluster this is ordinary executor sizing; in the
-# single-JVM sandbox it must be set before the session builds.
-os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
+import tempfile
 import time
+from concurrent.futures import ProcessPoolExecutor
+from contextlib import contextmanager
+from multiprocessing import get_context
+
+from perfbench.harness import Tracer, host_config, host_ticks, spin_rate, stop_jvm
+from perfbench.run import git_sha
 
 
-def _cpu_probe(cpus: int) -> dict:
-    """Raw-CPU throughput probe (multiprocessing busy loops, no Spark):
-    the host-weather marker published NEXT TO the flagship number. This
-    VM shows hypervisor-steal windows where identical Spark runs slow
-    1.5-3x (BENCH.md, round-2 'regression' chase); a contended driver
-    record is self-evident when the attached probe reads low. The
-    8p→{cpus}p ceiling_eff is the max scaling ANY job could show right
-    now; Miter_s absolute values compare across rounds (quiet-window
-    reference for THIS loop: ~300-330 M iter/s at 32p, ~100-116 at 8p;
-    contended windows read 2x lower — see BENCH.md round 3). Note the
-    8→32p ceiling is <1 even when quiet (~0.65-0.83): the host has ~16
-    physical cores behind 32 hyperthreads, so the absolute 32p number,
-    not the ratio, is the weather marker."""
-    import multiprocessing as mp
-
-    def burn(q):
-        x = 0
-        for i in range(12_000_000):
-            x += i * i
-        q.put(x)
-
-    def rate(nproc: int) -> float:
-        q = mp.Queue()
-        ps = [mp.Process(target=burn, args=(q,)) for _ in range(nproc)]
-        t0 = time.time()
-        for p in ps:
-            p.start()
-        for p in ps:
-            p.join()
-        return nproc * 12.0 / (time.time() - t0)  # M iter/s
-
-    lo, hi = rate(8), rate(cpus)
-    return {
-        "Miter_s_8p": round(lo, 1),
-        f"Miter_s_{cpus}p": round(hi, 1),
-        "ceiling_eff_8_to_n": round((hi / lo) / (cpus / 8), 3),
-        # memory-BANDWIDTH leg: the spin loop is cache-resident ALU and
-        # stays fast under co-tenant bandwidth pressure, which is
-        # exactly what throttles Spark's scan/shuffle-heavy phases
-        # (observed: flagship 11-12 s with BOTH spin probes quiet).
-        # Quiet reference ~? GB/s — recorded per run; compare rounds.
-        "membw_GBps": _membw_probe(),
-        # disk-WRITE leg: shuffle files land on /tmp; a throttled virtio
-        # write path (observed: 105 MB/s write+fsync vs 2.5 GB/s reads,
-        # flagship 2x slow with quiet CPU probes) stalls shuffle
-        # writeback invisibly to every CPU-side probe
-        "disk_w_MBps": _disk_write_probe(),
-    }
+def parse_sf(sf_dir: str) -> float | None:
+    """Scale factor from a directory named `...sf<number>`, else None."""
+    m = re.search(r"sf(\d+(\.\d+)?)$", sf_dir.rstrip("/"))
+    return float(m.group(1)) if m else None
 
 
-def _disk_write_probe(n_mb: int = 128) -> float:
-    import uuid
-
-    buf = os.urandom(1 << 22)
-    path = f"/tmp/.bench_wprobe_{uuid.uuid4().hex}"
-    t0 = time.time()
-    with open(path, "wb") as f:
-        for _ in range(n_mb // 4):
-            f.write(buf)
-        f.flush()
-        os.fsync(f.fileno())
-    dt = time.time() - t0
-    os.remove(path)
-    return round(n_mb / dt, 1)
+@contextmanager
+def bracket(rec: dict):
+    """Spin rate before and after, and the host's steal fraction over
+    the body, into `rec`."""
+    rec["spin_before"] = spin_rate()
+    steal0, total0 = host_ticks()
+    yield rec
+    steal1, total1 = host_ticks()
+    rec["steal_frac"] = round((steal1 - steal0) / max(1, total1 - total0), 4)
+    rec["spin_after"] = spin_rate()
 
 
-def _membw_probe(n_mb: int = 512) -> float:
-    import numpy as np
-
-    a = np.ones(n_mb * 1024 * 1024 // 8, dtype=np.float64)
-    t0 = time.time()
-    s = 0.0
-    for _ in range(4):
-        s += float(a.sum())
-    dt = time.time() - t0
-    del s
-    return round(4 * n_mb / 1024 / dt, 2)
-
-
-def _materialize(df) -> int:
-    """Force full computation of the plan; return row count.
-
-    noop write executes every partition without collecting rows to the
-    driver; the separate count() is avoided by using observe-free
-    write + a cheap cached count only when needed. For bench purposes
-    the noop write IS the measured action.
-    """
+def noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
-    return 0
 
 
-def _flagship_input(spark, n_turns_target: int, tmpdir: str):
-    """Deterministic transcript + context tables at bench scale,
-    written once to parquet so generation cost is outside the timer."""
+def session(cores: int):
+    from engine.session import build_session
+
+    spark = build_session(app_name=f"bench-local[{cores}]", master=f"local[{cores}]")
+    spark.sparkContext.setLogLevel("ERROR")
+    # start the Python workers, which the first timed Arrow stage would
+    # otherwise be charged (~2-3 s)
+    noop(spark.range(64).repartition(cores).mapInPandas(lambda it: it, "id long"))
+    return spark
+
+
+def queries_leg(spark, sf_dir: str, builders: dict, reps: int, explain_dir: str | None) -> dict:
+    out = {}
+    for name, builder in builders.items():
+        build_s, exec_s = [], []
+        for rep in range(reps):
+            t0 = time.perf_counter()
+            df = builder(spark, sf_dir)
+            t1 = time.perf_counter()
+            noop(df)
+            build_s.append(round(t1 - t0, 3))
+            exec_s.append(round(time.perf_counter() - t1, 3))
+            if explain_dir and rep == 0:
+                plan = df._jdf.queryExecution().explainString(
+                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+                with open(os.path.join(explain_dir, f"{name}.txt"), "w") as f:
+                    f.write(plan)
+        out[name] = {"build_s": build_s, "exec_s": exec_s}
+    return out
+
+
+def flagship_input(spark, n_turns: int, cpus: int, tmpdir: str) -> tuple[str, str, int]:
+    """Transcript and context parquet (seeded), written once so that
+    generation stays outside every timer. The text kernel runs at scan
+    parallelism, so the transcripts are written as 4 files per CPU."""
     from engine.generate import generate_context_events, generate_transcripts
     from engine.schema import CONTEXT_SCHEMA, TRANSCRIPT_SCHEMA
 
-    # zipf sizing: mean conversation length ≈ 40 turns at default params
-    n_convs = max(200, n_turns_target // 40)
-    tpath = os.path.join(tmpdir, f"transcripts_{n_convs}.parquet")
-    cpath = os.path.join(tmpdir, f"context_{n_convs}.parquet")
-    if not os.path.exists(tpath):
-        tp = generate_transcripts(n_convs=n_convs, seed=42)
-        cp = generate_context_events(tp, seed=43)
-        spark.createDataFrame(tp, schema=TRANSCRIPT_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(tpath)
-        spark.createDataFrame(cp, schema=CONTEXT_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(cpath)
-    t = spark.read.parquet(tpath)
-    c = spark.read.parquet(cpath)
-    # paths returned too so other sessions (the 8-core leg) read the
-    # SAME dataset instead of re-deriving the naming formula — a sizing
-    # or naming change here can then never silently desynchronize them
-    return t, c, tpath, cpath
+    tp = generate_transcripts(n_convs=max(200, n_turns // 40), seed=42)
+    cp = generate_context_events(tp, seed=43)
+    tpath, cpath = os.path.join(tmpdir, "transcripts"), os.path.join(tmpdir, "context")
+    spark.createDataFrame(tp, schema=TRANSCRIPT_SCHEMA).repartition(4 * cpus).write.parquet(tpath)
+    spark.createDataFrame(cp, schema=CONTEXT_SCHEMA).write.parquet(cpath)
+    return tpath, cpath, len(tp)
 
 
-def run_bench(sf_dir: str, cpus: int, only: set[str] | None, n_turns: int) -> dict:
-    from engine.session import build_session
-
-    spark = build_session(
-        app_name=f"bench-local[{cpus}]", master=f"local[{cpus}]"
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    import __spark_entry__ as entrymod
-
-    # one-time Python-worker spawn: the first Arrow-stage query in the
-    # loop would otherwise be charged ~2-3 s of process startup
-    # (measured: multimodal_meta 5.5 s cold vs 0.7 s warm)
-    spark.range(64).repartition(cpus).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    qtimes: dict[str, float] = {}
-    for name, fn in entrymod.queries().items():
-        if only and name not in only:
-            continue
-        df = fn(spark, sf_dir)
-        t0 = time.time()
-        _materialize(df)
-        qtimes[name] = round(time.time() - t0, 3)
-
-    # Flagship: full transcript feature pipeline, turns/sec.
+def flagship_leg(spark, cores: int, tpath: str, cpath: str, n_turns: int, reps: int) -> dict:
+    """`reps` runs, each in a Tracer span, after an untimed warm-up on
+    a slice (worker spawn and codegen). The span's wall time excludes
+    the tracer's status-store reads."""
+    from engine.generate import TOOLS
     from engine.pipeline import extract_features
 
-    tmpdir = os.environ.get("SPARK_GRAFT_BENCH_TMP", "/tmp/spark_graft_bench")
-    os.makedirs(tmpdir, exist_ok=True)
-    t, c, tpath, cpath = _flagship_input(spark, n_turns, tmpdir)
-    n_rows = t.count()
-    # production configuration: the tool vocabulary is a platform
-    # catalog stat, passed explicitly — the feature plan then contains
-    # zero pre-pass jobs (no discovery scan)
-    from engine.generate import TOOLS
-
+    # the tool vocabulary is a catalog stat in production: passing it
+    # keeps the discovery scan out of the plan
     vocab = list(TOOLS)
-    # untimed warmup on a small slice: spawns the Python UDF workers and
-    # JIT-compiles the codegen stages once, so the measured run reflects
-    # steady-state throughput (what a long cluster job amortizes to)
-    warm_f, _we, _wm = extract_features(
-        spark, t.limit(20000), c.limit(5000), vocab=vocab
-    )
-    _materialize(warm_f)
-    # The sandbox host shows fluctuating CPU steal from co-tenants, so a
-    # single-shot timing is noise: take the best of `reps` runs, with
-    # the plan REBUILT each rep (fresh RDD ids — Spark would otherwise
-    # reuse the previous rep's shuffle files and flatter the number).
-    # 5 reps (was 3): the round-3 interference proved bursty at
-    # second granularity — snapshot probes read healthy around slow
-    # runs — so best-of needs more draws to catch a calm burst
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5"))
-    # Probe-gated launch (round-4 lesson, automated): 7 of 8 round-4
-    # scaling invocations failed under co-tenant bandwidth steal; the
-    # one launched right after a healthy probe passed. Before the timed
-    # reps, wait (bounded) for a healthy window instead of timing into
-    # a known-bad one: membw >= 8.5 GB/s and >= ~280 M iter/s at 32p
-    # (slightly relaxed vs the manual 9/300 gate so a near-healthy
-    # window is not burned waiting). SPARK_GRAFT_BENCH_GATE_S=0
-    # disables the wait; the last probe is published either way, so a
-    # record that timed out into a bad window stays self-diagnosing.
-    gate_s = float(os.environ.get("SPARK_GRAFT_BENCH_GATE_S", "360"))
+    t, c = spark.read.parquet(tpath), spark.read.parquet(cpath)
+    noop(extract_features(spark, t.limit(20000), c.limit(5000), vocab=vocab)[0])
+    tracer, spans, rec = Tracer(spark), [], {}
+    with bracket(rec):
+        for _ in range(reps):
+            features = extract_features(spark, t, c, vocab=vocab)[0]
+            with tracer.span("flagship") as s:
+                noop(features)
+            spans.append(s)
+    rep_s = [round(s["wall_s"], 3) for s in spans]
+    med = statistics.median(rep_s)
+    return {"cores": cores, "turns": n_turns, "rep_s": rep_s, "seconds": round(med, 3),
+            "turns_per_sec": round(n_turns / med, 1),
+            "shuffle_bytes": [s["shuffle_bytes"] for s in spans],
+            "spill_bytes": [s["spill_bytes"] for s in spans],
+            "failed_tasks": tracer.failed_tasks, **rec}
 
-    # The iter/s bar scales with the probe's thread count: quiet is
-    # ~300-330 M at 32p but only ~95-105 M at 8p, so a fixed 280 would
-    # deadlock sub-32-cpu runs at "never healthy".
-    need_miter = 280.0 * min(cpus, 32) / 32.0
 
-    def _healthy(p: dict) -> bool:
-        return (
-            p.get("membw_GBps", 0.0) >= 8.5
-            and p.get(f"Miter_s_{cpus}p", p.get("Miter_s_8p", 0.0)) >= need_miter
-        )
+def scaling_leg(cores: int, tpath: str, cpath: str, n_turns: int, reps: int) -> dict:
+    """One leg in its own process and JVM: a second SparkContext in one
+    Python process reuses UDFs bound to the first one's stopped
+    accumulator server, and every task then logs a failed update."""
+    spark = session(cores)
+    try:
+        return flagship_leg(spark, cores, tpath, cpath, n_turns, reps)
+    finally:
+        spark.stop()
+        stop_jvm()
 
-    probe_before = _cpu_probe(cpus)
-    gate_t0 = time.time()  # waiting time only — excludes the 1st probe
-    deadline = gate_t0 + gate_s
-    while not _healthy(probe_before) and time.time() < deadline:
-        time.sleep(8)
-        probe_before = _cpu_probe(cpus)
-    gate_waited = round(time.time() - gate_t0, 1)
-    flag_s = float("inf")
-    for _ in range(reps):
-        features, errors, _meta = extract_features(spark, t, c, vocab=vocab)
-        t0 = time.time()
-        _materialize(features)
-        flag_s = min(flag_s, time.time() - t0)
-    probe_after = _cpu_probe(cpus)
-    turns_per_sec = n_rows / flag_s if flag_s > 0 else float("nan")
-    qtimes["flagship_pipeline"] = round(flag_s, 3)
 
-    # 8-core corroboration leg (fresh session): under contention mode B
-    # (BENCH.md — 32-thread-hostile windows invisible to spin probes)
-    # local[8] RUNS FASTER than local[32]; recording both makes a slow
-    # official record self-diagnosing. One rep — it is evidence, not
-    # the headline.
-    spark.stop()
-    spark8 = build_session(app_name="bench-local[8]", master="local[8]")
-    spark8.sparkContext.setLogLevel("ERROR")
-    t8 = spark8.read.parquet(tpath)
-    c8 = spark8.read.parquet(cpath)
-    wf8, _, _ = extract_features(spark8, t8.limit(20000), c8.limit(5000), vocab=vocab)
-    wf8.write.format("noop").mode("overwrite").save()
-    f8, _, _ = extract_features(spark8, t8, c8, vocab=vocab)
-    t0 = time.time()
-    f8.write.format("noop").mode("overwrite").save()
-    flag8_s = time.time() - t0
-    spark8.stop()
+def run_bench(sf_dir: str, builders: dict, n_turns: int, reps: int,
+              explain_dir: str | None) -> dict:
+    host = host_config()
+    cpus = min(int(os.environ.get("SPARK_GRAFT_CPUS", host["cpus"])), host["cpus"])
+    host["affinity_cpus"], host["cpus"] = host["cpus"], cpus
+    os.environ["SPARK_DRIVER_MEM"] = host["driver_mem"]
+    if explain_dir:
+        os.makedirs(explain_dir, exist_ok=True)
 
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else None
-    total = round(sum(qtimes.values()), 3)
-    result = {
+    spark = session(cpus)
+    qrec: dict = {}
+    with bracket(qrec):
+        query_reps = queries_leg(spark, sf_dir, builders, reps, explain_dir)
+    qtimes = {n: round(statistics.median(r["exec_s"]), 3) for n, r in query_reps.items()}
+
+    with tempfile.TemporaryDirectory(prefix="bench-flagship-") as tmpdir:
+        tpath, cpath, n_rows = flagship_input(spark, n_turns, cpus, tmpdir)
+        flagship = flagship_leg(spark, cpus, tpath, cpath, n_rows, reps)
+        qtimes["flagship_pipeline"] = flagship["seconds"]
+        spark.stop()
+        stop_jvm()
+
+        lo = max(1, cpus // 4)
+        with ProcessPoolExecutor(1, mp_context=get_context("spawn"), max_tasks_per_child=1) as ex:
+            legs = {k: ex.submit(scaling_leg, c, tpath, cpath, n_rows, reps).result()
+                    for k, c in (("lo", lo), ("hi", cpus))}
+    eff = (legs["hi"]["turns_per_sec"] / legs["lo"]["turns_per_sec"]) / (cpus / lo)
+
+    return {
         "metric": "total_bench_seconds",
-        "value": total,
+        "value": round(sum(qtimes.values()), 3),
         "unit": "sec",
         "queries": qtimes,
-        "sf": sf,
-        "flagship": {
-            "turns": n_rows,
-            "seconds": round(flag_s, 3),
-            "turns_per_sec": round(turns_per_sec, 1),
-            "cores": cpus,
-            "reps": reps,
-        },
-        # mode-B fingerprint: 8-core >= 32-core seconds on a healthy
-        # host; 8-core FASTER means the 32-thread record above is
-        # contention, not code (see BENCH.md)
-        "flagship_8core": {
-            "seconds": round(flag8_s, 3),
-            "turns_per_sec": round(n_rows / flag8_s, 1),
-        },
-        # host-weather marker bracketing the flagship reps — a low probe
-        # next to a slow flagship says "contended host", not "slower
-        # code" (the round-2 false-regression lesson, BENCH.md)
-        "cpu_probe_before": probe_before,
-        "cpu_probe_after": probe_after,
-        # seconds spent in the probe gate before the flagship reps
-        # (0 = first probe was already healthy or gating disabled)
-        "gate_waited_s": gate_waited,
-        # the wait bound in effect (SPARK_GRAFT_BENCH_GATE_S)
-        "gate_s": gate_s,
+        "sf": parse_sf(sf_dir),
+        "sf_dir": sf_dir,
+        "reps": reps,
+        "git_sha": git_sha(),
+        "queries_leg": {**qrec, "runs": query_reps},
+        "flagship": flagship,
+        "scaling": {**legs, "efficiency": round(eff, 3)},
+        "host": host,
     }
-    spark.stop()
-    return result
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument(
-        "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    )
-    ap.add_argument(
-        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
-    ap.add_argument("--queries", default=None, help="comma-separated subset")
-    ap.add_argument(
-        "--turns",
-        type=int,
-        default=int(os.environ.get("SPARK_GRAFT_BENCH_TURNS", "1000000")),
-        help="flagship transcript-table size (rows)",
-    )
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    ap.add_argument("--queries", default=None, help="comma-separated subset (default: all)")
+    ap.add_argument("--turns", type=int,
+                    default=int(os.environ.get("SPARK_GRAFT_BENCH_TURNS", "1000000")),
+                    help="flagship transcript-table size target (rows)")
+    ap.add_argument("--reps", type=int, default=3, help="timed reps of every query and leg")
+    ap.add_argument("--explain-dir", default=None, help="write <query>.txt formatted plans here")
     args = ap.parse_args()
-    only = set(args.queries.split(",")) if args.queries else None
-    result = run_bench(args.sf_dir, args.cpus, only, args.turns)
+    if args.reps < 1:
+        ap.error("--reps must be >= 1")
+
+    import __spark_entry__ as entrymod
+
+    builders = entrymod.queries()
+    if args.queries:
+        names = args.queries.split(",")
+        unknown = sorted(set(names) - set(builders))
+        if unknown:
+            ap.error(f"unknown queries: {', '.join(unknown)}")
+        builders = {n: builders[n] for n in names}
+    result = run_bench(args.sf_dir, builders, args.turns, args.reps, args.explain_dir)
     print(json.dumps(result))
     sys.stdout.flush()
 

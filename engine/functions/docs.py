@@ -122,7 +122,7 @@ def quality_score(text: Column) -> Column:
     NULL text counts as zero-length (score 0.3, same as empty string):
     without the coalesce, ANSI size(NULL)=NULL made F.least skip the
     null and give a contentless document FULL length credit — 0.7,
-    binned 'high' (round-3 review finding)."""
+    binned 'high'."""
     len_c = F.least(
         F.coalesce(n_tokens_ws(text), F.lit(0)) / F.lit(100.0), F.lit(1.0)
     )

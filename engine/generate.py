@@ -119,8 +119,8 @@ def generate_transcripts(
     # ~1% duplicate-ts ties (tie-break is turn_idx). Sequential loop,
     # NOT vectorized ts_s[idx] = ts_s[idx-1]: with two adjacent flagged
     # rows the vectorized form reads the stale pre-update value and the
-    # second row silently fails to tie (round-3 review finding); the
-    # loop chains adjacent flags into an intended triple tie. idx is
+    # second row fails to tie; the loop chains adjacent flags into an
+    # intended triple tie. idx is
     # ~1% of n — trivial even at bench scale.
     dup = (rng.random(n) < 0.01) & ~first_of_conv
     for i in np.nonzero(dup)[0]:

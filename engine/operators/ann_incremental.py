@@ -1,9 +1,7 @@
 """Incremental IVF index maintenance for streaming ingest.
 
-Round-4 verdict item #7: dedup is incremental
-(engine/operators/dedup_incremental.py) but IVF was batch-only. This
-module mirrors the same pattern for the ANN index: vectors arrive in
-batches/epochs; each epoch is ASSIGNED against the COMMITTED coarse-
+The ANN counterpart of engine/operators/dedup_incremental.py:
+vectors arrive in batches/epochs; each epoch is ASSIGNED against the COMMITTED coarse-
 quantizer snapshot (`similarity.assign_cells`, the per-row
 broadcast-argmin projection `ivf_topk` assigns with — the corpus
 never shuffles), so index

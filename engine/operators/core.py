@@ -178,9 +178,8 @@ def _range_frame(ts: str, window_s: float, order_col: str | None) -> tuple[str, 
     """(order key SQL, integral bound) of the RANGE frame [ts - window_s, ts].
 
     Fractional `window_s` is honored at millisecond precision by
-    ordering over a ms-scaled long key (rangeBetween bounds are
-    integral) — it used to truncate to whole seconds silently
-    (round-3 review finding)."""
+    ordering over a ms-scaled long key: rangeBetween bounds are
+    integral, so a seconds key would truncate the window."""
     order = q(order_col) if order_col else ts_seconds_sql(ts)
     if float(window_s) == int(window_s):
         return order, int(window_s)

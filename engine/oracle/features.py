@@ -57,8 +57,8 @@ def oracle_features(
     # epoch seconds as double via exact µs (int64 ns > 2^53 would lose
     # precision on float conversion; µs matches Spark's cast-to-double).
     # Normalize to ns FIRST: astype('int64') is unit-dependent, and a
-    # datetime64[us] frame (normal from pyarrow reads) would silently
-    # scale all time math 1000x (round-3 review finding).
+    # datetime64[us] frame (normal from pyarrow reads) would scale all
+    # time math 1000x.
     ts_sec = (df["ts"].astype("datetime64[ns]").astype("int64") // 1000) / 1e6
     df["_ts_sec"] = ts_sec
     df["lag_text_len"] = g["txt_len"].shift(1)

@@ -244,9 +244,8 @@ GROUP BY event_type, CAST(FLOOR(value / 25.0) AS BIGINT)
 """
 
 
-# Shared oracle CTEs — ONE definition of gap sessionization per form
-# (round-3 review: six copy-pasted variants risked silent divergence
-# from core.sessionize on any future semantics change). sec-form keeps
+# Shared oracle CTEs — ONE definition of gap sessionization per form,
+# so the oracles cannot drift from core.sessionize apart. sec-form keeps
 # a float `sec` per row for step/interval math; g-form keeps raw
 # epoch_us arithmetic and carries event_type.
 _SESSIONIZED_SEC_CTE = """WITH o AS (

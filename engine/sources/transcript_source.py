@@ -92,7 +92,7 @@ class TranscriptStreamReader(SimpleDataSourceStreamReader):
     partition-planning variant's `latestOffset(self)` gets no start
     offset, so a restarted query (fresh reader instance, counter back
     at 0) would plan batches BEHIND the checkpointed offset and
-    re-emit already-delivered conversations (round-3 review finding).
+    re-emit already-delivered conversations.
     `read(start)` receives the recovered offset on every call, making
     restart resume exactly where the checkpoint says — at the
     documented cost that micro-batch rows are produced driver-side

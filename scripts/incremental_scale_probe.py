@@ -1,6 +1,5 @@
-"""Scale probe for the incremental dedup and incremental IVF paths
-(round-5 verdict item #8): one measured datapoint each at >= 10^6 rows
-across >= 5 epochs, backing the "committed band/centroid state stays
+"""Scale probe for the incremental dedup and incremental IVF paths:
+one measured datapoint each at >= 10^6 rows across >= 5 epochs, backing the "committed band/centroid state stays
 bounded" claim with per-epoch wall clock and state growth.
 
 Data is generated DISTRIBUTED (spark.range — no driver lists):
@@ -153,23 +152,25 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows-per-epoch", type=int, default=200_000)
     ap.add_argument("--epochs", type=int, default=5)
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=len(os.sched_getaffinity(0)))
     ap.add_argument("--leg", choices=["dedup", "ann", "both"], default="both")
     args = ap.parse_args()
 
-    from bench import _cpu_probe
+    from bench import bracket
     from engine.session import build_session
 
     spark = build_session(
         app_name="incremental-scale-probe", master=f"local[{args.cpus}]"
     )
     spark.sparkContext.setLogLevel("ERROR")
-    result = {"rows_per_epoch": args.rows_per_epoch, "epochs": args.epochs}
-    if args.leg in ("dedup", "both"):
-        result["dedup"] = dedup_leg(spark, args.epochs, args.rows_per_epoch)
-    if args.leg in ("ann", "both"):
-        result["ann"] = ann_leg(spark, args.epochs, args.rows_per_epoch)
-    result["cpu_probe"] = _cpu_probe(args.cpus)
+    result = {"rows_per_epoch": args.rows_per_epoch, "epochs": args.epochs,
+              "cpus": args.cpus}
+    # spin rate and host steal fraction around the legs (host weather)
+    with bracket(result):
+        if args.leg in ("dedup", "both"):
+            result["dedup"] = dedup_leg(spark, args.epochs, args.rows_per_epoch)
+        if args.leg in ("ann", "both"):
+            result["ann"] = ann_leg(spark, args.epochs, args.rows_per_epoch)
     print(json.dumps(result))
     spark.stop()
 
