@@ -10,7 +10,8 @@ the host's RAM (perfbench/harness.py `host_config`). Three legs:
   times, the builder call and the noop action timed apart
   (incremental queries ingest their epochs in the builder);
   --explain-dir writes each query's formatted plan.
-- flagship: `extract_features` over ~--turns generated turns read from
+- flagship: `extract_features` over --turns generated turns (whole
+  conversations, so up to one conversation more) read from
   parquet, --reps times with the plan rebuilt each rep (a reused plan
   reuses its shuffle files), each rep in a Tracer span for its
   shuffle, spill and failed tasks.
@@ -107,12 +108,23 @@ def queries_leg(spark, sf_dir: str, builders: dict, reps: int, explain_dir: str 
 
 def flagship_input(spark, n_turns: int, cpus: int, tmpdir: str) -> tuple[str, str, int]:
     """Transcript and context parquet (seeded), written once so that
-    generation stays outside every timer. The text kernel runs at scan
-    parallelism, so the transcripts are written as 4 files per CPU."""
+    generation stays outside every timer. Whole conversations are kept
+    until `n_turns` is reached, so the table overshoots it by less than
+    one conversation. The text kernel runs at scan parallelism, so the
+    transcripts are written as 4 files per CPU."""
+    import numpy as np
+
     from engine.generate import generate_context_events, generate_transcripts
     from engine.schema import CONTEXT_SCHEMA, TRANSCRIPT_SCHEMA
 
-    tp = generate_transcripts(n_convs=max(200, n_turns // 40), seed=42)
+    # the generator's conversations average ~30 turns with a heavy tail:
+    # ask for ~1.5x the target and double until it is covered
+    n_convs = n_turns // 20 + 8
+    while len(tp := generate_transcripts(n_convs=n_convs, seed=42)) < n_turns:
+        n_convs *= 2
+    sizes = tp.groupby("conv_id").size().sort_index()
+    keep = sizes.index[: int(np.searchsorted(sizes.cumsum().to_numpy(), n_turns)) + 1]
+    tp = tp[tp["conv_id"].isin(keep)].reset_index(drop=True)
     cp = generate_context_events(tp, seed=43)
     tpath, cpath = os.path.join(tmpdir, "transcripts"), os.path.join(tmpdir, "context")
     spark.createDataFrame(tp, schema=TRANSCRIPT_SCHEMA).repartition(4 * cpus).write.parquet(tpath)

@@ -174,50 +174,26 @@ def bfill(df: DataFrame, entity: str, ts: str, idx: str, src: str, out: str) -> 
     return with_layers(df, [{out: f"first({src}, true) {fut}"}])
 
 
-def _range_frame(ts: str, window_s: float, order_col: str | None) -> tuple[str, int]:
-    """(order key SQL, integral bound) of the RANGE frame [ts - window_s, ts].
-
-    Fractional `window_s` is honored at millisecond precision by
-    ordering over a ms-scaled long key: rangeBetween bounds are
-    integral, so a seconds key would truncate the window."""
-    order = q(order_col) if order_col else ts_seconds_sql(ts)
-    if float(window_s) == int(window_s):
-        return order, int(window_s)
-    # floor(x*1000 + 0.5): ONE explicit rounding rule shared with the
-    # oracle mirror (engine/oracle/features.py). HALF_UP round vs
-    # np.round (half-to-even) disagree on exact half-millisecond
-    # boundaries, which would flip window membership between engine
-    # and oracle. Epoch seconds are nonnegative, so floor(x+0.5)
-    # == HALF_UP here.
-    return f"CAST(floor({order} * 1000 + 0.5D) AS BIGINT)", int(round(float(window_s) * 1000))
-
-
-def rolling_range_layer(
-    entity: str, ts: str, window_s: float, aggs: dict[str, str], order_col: str | None = None
-) -> Layer:
+def rolling_range_layer(entity: str, ts: str, window_s: float, aggs: dict[str, str]) -> Layer:
     """Layer of `rolling_range`: every aggregate over ONE window spec,
-    so Catalyst evaluates them in one Window operator."""
-    okey, bound = _range_frame(ts, window_s, order_col)
+    so Catalyst evaluates them in one Window operator. The frame orders
+    by `ts` itself, a prefix of the shared (ts, idx) order, so it needs
+    no sort of its own; its bound is whole microseconds."""
+    us = round(float(window_s) * 1e6)
     w = (
-        f"OVER (PARTITION BY {q(entity)} ORDER BY {okey} "
-        f"RANGE BETWEEN {bound} PRECEDING AND CURRENT ROW)"
+        f"OVER (PARTITION BY {q(entity)} ORDER BY {q(ts)} "
+        f"RANGE BETWEEN INTERVAL '{us}' MICROSECOND PRECEDING AND CURRENT ROW)"
     )
     return {out: f"{agg} {w}" for out, agg in aggs.items()}
 
 
 def rolling_range(
-    df: DataFrame,
-    entity: str,
-    ts: str,
-    window_s: float,
-    aggs: dict[str, str],
-    order_col: str | None = None,
+    df: DataFrame, entity: str, ts: str, window_s: float, aggs: dict[str, str]
 ) -> DataFrame:
     """Event-time RANGE frame [ts - window_s, ts] (inclusive, with
     ts-peers — the `ts' <= ts` leakage rule). `aggs` maps output column
-    name → SQL aggregate text. Pass `order_col` when the epoch-seconds
-    column is already materialized upstream."""
-    return with_layers(df, [rolling_range_layer(entity, ts, window_s, aggs, order_col)])
+    name → SQL aggregate text."""
+    return with_layers(df, [rolling_range_layer(entity, ts, window_s, aggs)])
 
 
 def dedup_first(df: DataFrame, keys: list[str], ts: str, idx: str) -> DataFrame:

@@ -92,8 +92,8 @@ def rolling_layers(
 
     RANGE frame [ts - window_s, ts] — inclusive of both boundaries and
     of all peers of the current timestamp (rows with equal ts), which
-    is exactly the `ts' <= ts` leakage rule. Ordered by the
-    materialized TS_SEC column.
+    is exactly the `ts' <= ts` leakage rule. Ordered by `ts`, so it
+    shares the rows frames' sort.
 
     Distinct-tool count is exact (collect_list → array_distinct) for
     test parity; at benchmark scale `approx_distinct=True` switches the
@@ -106,7 +106,7 @@ def rolling_layers(
         # window aggregates only — size/array_distinct applied after
         "_roll_tools": "approx_count_distinct(tool)" if approx_distinct else "collect_list(tool)",
     }
-    first = core.rolling_range_layer(ENTITY, TS, window_s, aggs, order_col=TS_SEC)
+    first = core.rolling_range_layer(ENTITY, TS, window_s, aggs)
     distinct = "_roll_tools" if approx_distinct else "size(array_distinct(_roll_tools))"
     return [first, {
         # P8 neighborhood-relative value: txt_len vs the trailing-window

@@ -59,7 +59,8 @@ def oracle_features(
     # Normalize to ns FIRST: astype('int64') is unit-dependent, and a
     # datetime64[us] frame (normal from pyarrow reads) would scale all
     # time math 1000x.
-    ts_sec = (df["ts"].astype("datetime64[ns]").astype("int64") // 1000) / 1e6
+    ts_us = df["ts"].astype("datetime64[ns]").astype("int64") // 1000
+    ts_sec = ts_us / 1e6
     df["_ts_sec"] = ts_sec
     df["lag_text_len"] = g["txt_len"].shift(1)
     df["lead_text_len"] = g["txt_len"].shift(-1)
@@ -87,29 +88,19 @@ def oracle_features(
     roll_avg = np.full(len(df), np.nan)
     roll_dst = np.empty(len(df), dtype="int32")
     # hoisted out of the per-conversation loop: re-running these O(n)
-    # conversions per conversation made the oracle O(rows x convs)
-    ts_all = ts_sec.to_numpy()
+    # conversions per conversation made the oracle O(rows x convs).
+    # Frames in integer µs, like the engine's interval bound: exact for
+    # every window, fractional ones included.
+    ts_us_all = ts_us.to_numpy()
+    w_us = round(float(roll_window_s) * 1e6)
     lens_all = df["txt_len"].to_numpy(dtype="float64", na_value=np.nan)
     tools_all = df["tool"].to_numpy()
-    frac_window = float(roll_window_s) != int(roll_window_s)
     for _, idx in g.indices.items():
         idx = np.sort(idx)
-        if frac_window:
-            # mirror the engine's ms-rounded long ordering key for
-            # fractional windows (core.rolling_range) — comparing raw
-            # doubles can flip membership of a row exactly on the
-            # boundary by one float ulp. Same explicit rule on both
-            # sides: floor(x*1000 + 0.5) (np.round is half-to-even,
-            # Spark's F.round is HALF_UP — they disagree at exact half
-            # milliseconds, so neither is used directly)
-            v = np.floor(ts_all[idx] * 1000 + 0.5).astype("int64")
-            w = int(round(float(roll_window_s) * 1000))
-        else:
-            v = ts_all[idx]
-            w = roll_window_s
+        v = ts_us_all[idx]
         lens = lens_all[idx]
         tools = tools_all[idx]
-        lo = np.searchsorted(v, v - w, side="left")
+        lo = np.searchsorted(v, v - w_us, side="left")
         hi = np.searchsorted(v, v, side="right")
         for j in range(len(idx)):
             s, e = lo[j], hi[j]
@@ -145,13 +136,10 @@ def oracle_features(
             if sub is None:
                 continue
             idx = np.sort(idx)
-            ev = (
-                sub["event_ts"].astype("datetime64[ns]").astype("int64").to_numpy()
-                // 1000
-            ) / 1e6
+            ev = sub["event_ts"].astype("datetime64[ns]").astype("int64").to_numpy() // 1000
             cv = sub["ctx_value"].to_numpy()
             cl = sub["ctx_label"].to_numpy(dtype=object)
-            pos = np.searchsorted(ev, ts_all[idx], side="right") - 1
+            pos = np.searchsorted(ev, ts_us_all[idx], side="right") - 1
             ok = pos >= 0
             vals[idx[ok]] = cv[pos[ok]]
             labs[idx[ok]] = cl[pos[ok]]

@@ -6,9 +6,9 @@ preprocess → N independent extractor families → unified vector +
 error sidecar + metadata), re-planned for Spark:
 
   read → quarantine split → per-turn text kernel (Arrow scalar UDF) →
-  ONE hash repartition on conv_id → every window family over the same
-  (ts, turn_idx) total order → as-of join vs context → expanding
-  top-k → wide feature row per (conv_id, ts, turn_idx).
+  as-of join vs context (ONE hash repartition on conv_id) → every
+  window family over the same (ts, turn_idx) total order, expanding
+  top-k included → wide feature row per (conv_id, ts, turn_idx).
 
 All feature families are computed over one shuffled-once layout,
 mirroring the reference's "all three extractors consume the same
@@ -167,14 +167,25 @@ def extract_features(
 
     # The text kernel runs where the scan put the rows: the Python stage
     # does not pass on its input's partitioning, so a conv_id shuffle
-    # ahead of it would be repeated by the windows'.
+    # ahead of it would be repeated by the as-of's.
     good = add_text_features(good)
 
-    # Layers by dependency depth: TS_SEC; every window aggregate (two
-    # specs: the (ts, turn_idx) rows frames and the rolling RANGE
-    # frame); what is derived from them (session ids and lengths,
-    # rolling ratios, top-k); then the as-of. A vocabulary over
-    # MAX_VOCAB takes the streaming Arrow kernel after the as-of.
+    # The as-of goes first: its conv_id Exchange survives its Filter and
+    # Project, so every window family below reuses it.
+    if context is not None:
+        good = asof_join(good, context, strict=False)
+    else:
+        good = good.selectExpr(
+            "*",
+            "CAST(NULL AS DOUBLE) AS asof_ctx_value",
+            "CAST(NULL AS STRING) AS asof_ctx_label",
+        )
+
+    # Layers by dependency depth: TS_SEC; every window aggregate (the
+    # (ts, turn_idx) rows frames and the rolling RANGE frame on `ts`,
+    # one sort); what is derived from them (session ids and lengths,
+    # rolling ratios, top-k). A vocabulary over MAX_VOCAB takes the
+    # streaming Arrow kernel after the layers.
     if vocab is None:
         vocab = discover_tool_vocab(transcripts)
     families = [
@@ -188,26 +199,12 @@ def extract_features(
         families.append(top_tools_vocab_layers(n_vocab))
     layers = W.ts_sec_layers() + core.merge_layers(*families)
     good = core.with_layers(good, layers, drop=[W.TS_SEC, VOCAB])
-
-    if context is not None:
-        good = asof_join(good, context, strict=False)
-    else:
-        good = good.selectExpr(
-            "*",
-            "CAST(NULL AS DOUBLE) AS asof_ctx_value",
-            "CAST(NULL AS STRING) AS asof_ctx_label",
-        )
     if len(vocab) > MAX_VOCAB:
-        # the windows and the as-of already partition by conv_id, so
-        # Spark drops the kernel's own repartition
+        # the windows already partition by conv_id, so Spark drops the
+        # kernel's own repartition
         good = add_top_tools_expanding(good)
 
-    out = {f.name: core.q(f.name) for f in FEATURE_SCHEMA.fields}
-    if len(vocab) <= MAX_VOCAB:
-        # the as-of's union types its probe columns nullable; a turn's
-        # top_tools is never null, and the schema keeps saying so
-        out["top_tools"] = "coalesce(top_tools, CAST(array() AS ARRAY<STRING>)) AS top_tools"
-    features = good.selectExpr(*out.values())
+    features = good.selectExpr(*[core.q(f.name) for f in FEATURE_SCHEMA.fields])
     meta = {
         "engine_version": "0.1.0",
         "session_gap_s": session_gap_s,

@@ -49,6 +49,17 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
+def _write_atomic(path: str, text: str) -> None:
+    """Replace `path` with `text` durably: the temp file is fsynced
+    before the rename, so a crash never commits an empty or torn file."""
+    tmp = path + f".tmp.{uuid.uuid4().hex}"
+    with open(tmp, "w") as fh:
+        fh.write(text)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+
+
 def _ts_string(v: dt.datetime) -> str:
     """Spark's `cast(ts as string)` in the UTC session zone: seconds,
     then the fraction only when non-zero, trailing zeros trimmed."""
@@ -205,17 +216,9 @@ class TableIO:
                 ]
                 cur = max(seqs) if seqs else 0
             nxt = cur + 1
-            ctmp = seq_path + f".tmp.{uuid.uuid4().hex}"
-            with open(ctmp, "w") as cfh:
-                cfh.write(str(nxt))
-                cfh.flush()
-                os.fsync(cfh.fileno())
-            os.replace(ctmp, seq_path)  # reservation, atomic
+            _write_atomic(seq_path, str(nxt))  # reservation
             manifest = {**manifest, "commit_seq": nxt}
-            tmp = self._manifest_path(table, run_id) + f".tmp.{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump(manifest, fh, indent=1)
-            os.replace(tmp, self._manifest_path(table, run_id))  # THE commit
+            _write_atomic(self._manifest_path(table, run_id), json.dumps(manifest, indent=1))  # THE commit
         return manifest
 
     def append(
@@ -392,10 +395,7 @@ class TableIO:
                 "expired_files": paths,
                 "expired_at_epoch_s": time.time(),
             }
-            tmp = self._manifest_path(table, run_id) + f".tmp.{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump(tomb, fh, indent=1)
-            os.replace(tmp, self._manifest_path(table, run_id))
+            _write_atomic(self._manifest_path(table, run_id), json.dumps(tomb, indent=1))
             _delete(paths)
             shutil.rmtree(self._data_dir(table, run_id), ignore_errors=True)
             expired.append(run_id)

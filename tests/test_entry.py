@@ -59,6 +59,20 @@ def test_asof_kernel_key_is_the_one_asof():
     assert o["asof_purchase_kernel"] == o["asof_purchase"]
 
 
+def test_gate_contract_digest():
+    """The gate contract is the ordered query keys and every oracle
+    string. Renaming, reordering or editing any of them changes this
+    digest; update it only with a deliberate contract change."""
+    import hashlib
+    import json
+
+    m = _entry()
+    contract = json.dumps({"q": list(m.queries()), "o": m.oracle_sql()})
+    assert hashlib.sha256(contract.encode()).hexdigest() == (
+        "c6f3eadd1989c3461d0d9e8afa018c69553c0a249fa1843ed167a60b96984369"
+    )
+
+
 def test_check_queries_rejects_unknown_names():
     """A typo must not check nothing and report FAILURES: 0."""
     proc = subprocess.run(

@@ -12,10 +12,28 @@ def test_full_parity_jvm_asof(spark, transcripts_df, context_df, transcripts_pdf
     assert_frames_match(features.toPandas(), exp)
 
 
-def test_parity_without_context(spark, transcripts_df, transcripts_pdf):
-    features, _, _ = extract_features(spark, transcripts_df, None)
-    exp = oracle_features(transcripts_pdf, None)
-    assert_frames_match(features.toPandas(), exp)
+def test_parity_without_context(spark, transcripts_pdf):
+    """Plus one conversation on the rolling frame's boundary: a turn
+    exactly ROLL_WINDOW_S (300 s) after another keeps it in its frame,
+    one microsecond more drops it."""
+    from datetime import timedelta
+
+    import pandas as pd
+
+    from engine.schema import TRANSCRIPT_SCHEMA
+
+    t0 = transcripts_pdf["ts"].min()
+    offsets = [timedelta(0), timedelta(seconds=300), timedelta(seconds=600, microseconds=1)]
+    edge = pd.DataFrame(
+        [("conv-edge", i, "user", "hi there", "search", t0 + off) for i, off in enumerate(offsets)],
+        columns=TRANSCRIPT_SCHEMA.names,
+    )
+    pdf = pd.concat([transcripts_pdf[TRANSCRIPT_SCHEMA.names], edge], ignore_index=True)
+    features, _, _ = extract_features(spark, spark.createDataFrame(pdf, TRANSCRIPT_SCHEMA), None)
+    got = features.toPandas()
+    assert_frames_match(got, oracle_features(pdf, None))
+    edge_cnt = got[got["conv_id"] == "conv-edge"].sort_values("turn_idx")["roll_cnt_5m"]
+    assert edge_cnt.tolist() == [1, 2, 1]
 
 
 def test_summarize_conversations_pandas_parity(spark, transcripts_df, context_df):

@@ -48,34 +48,36 @@ def test_broadcast_join_for_small_dims(spark):
 
 def test_flagship_plan_shape(spark, transcripts_df, context_df, tmp_path_factory):
     """One plan on every input layout: a 1-file and a 32-split parquet
-    input plan the same shuffles (the text kernel runs where the scan
-    put the rows; the windows' shuffle is the first)."""
+    input plan the same single shuffle (the text kernel runs where the
+    scan put the rows; the as-of's conv_id Exchange is the only one and
+    every window family reuses it)."""
     from engine.pipeline import extract_features
 
     base = tmp_path_factory.mktemp("flagship_layouts")
     for n_files in (1, 32):
         path = str(base / f"t{n_files}")
         transcripts_df.repartition(n_files).write.parquet(path)
-        f, _e, _m = extract_features(spark, spark.read.parquet(path), context_df)
-        plan = _formatted(spark, f)
-        nodes = re.findall(
-            r"\(\d+\) (Exchange|Sort|Window|ArrowEvalPython|MapInPandas)\b", plan
-        )
-        counts = {k: nodes.count(k) for k in set(nodes)}
-        # window exchange + as-of union exchange only
-        assert counts.get("Exchange", 0) <= 2, (n_files, counts)
-        assert "REPARTITION_BY_COL" not in plan, n_files
-        # one sort per distinct ordering: window chain, rolling (ts_sec),
-        # session layer, and the as-of union tag
-        assert counts.get("Sort", 0) <= 4, counts
-        # the window families share Window operators by spec: the (ts,
-        # turn_idx) rows frames, the rolling RANGE frame, the layer
-        # derived from them, and the as-of
-        assert counts.get("Window", 0) <= 4, counts
-        # exactly ONE Python stage (the text kernel): the expanding top-k
-        # runs as the pure-codegen vocab formulation, no kernel at all
-        assert counts.get("ArrowEvalPython", 0) == 1
-        assert counts.get("MapInPandas", 0) == 0
+        for ctx in (context_df, None):
+            f, _e, _m = extract_features(spark, spark.read.parquet(path), ctx)
+            plan = _formatted(spark, f)
+            nodes = re.findall(
+                r"\(\d+\) (Exchange|Sort|Window|ArrowEvalPython|MapInPandas)\b", plan
+            )
+            counts = {k: nodes.count(k) for k in set(nodes)}
+            key = (n_files, ctx is not None, counts)
+            assert counts.get("Exchange", 0) == 1, key
+            assert "REPARTITION_BY_COL" not in plan, key
+            # the rows frames, the RANGE frame on `ts` (a prefix of (ts,
+            # turn_idx)) and the session layer share one sort; the as-of
+            # adds its (ts, _side, _ev_idx) sort
+            assert counts.get("Sort", 0) == (1 if ctx is None else 2), key
+            # the rows frames, the RANGE frame, the layer derived from
+            # them, and the as-of
+            assert counts.get("Window", 0) <= 4, key
+            # exactly ONE Python stage (the text kernel): the expanding
+            # top-k runs as the pure-codegen vocab formulation
+            assert counts.get("ArrowEvalPython", 0) == 1, key
+            assert counts.get("MapInPandas", 0) == 0, key
 
 
 def test_flagship_plan_build_py4j_commands(spark, transcripts_df, context_df):
@@ -106,7 +108,7 @@ def test_flagship_plan_build_py4j_commands(spark, transcripts_df, context_df):
 
 def test_flagship_large_vocab_topk_adds_no_exchange(spark, transcripts_df, context_df):
     """Over MAX_VOCAB tools the top-k runs as the mapInArrow kernel. The
-    windows and the as-of already partition by conv_id, so Spark drops
+    windows already partition by conv_id, so Spark drops
     the kernel's conv_id repartition: the physical plan has the vocab
     plan's Exchange count and at most one more Sort (the kernel's local
     sort, elided when the last window already orders by (conv_id, ts,

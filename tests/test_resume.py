@@ -500,6 +500,39 @@ def test_commit_manifest_concurrent_writers(io):
     assert on_disk == seqs
 
 
+def test_every_replaced_file_is_fsynced_first(spark, transcripts_df, io, monkeypatch):
+    """A rename commits only what reached the disk: across append,
+    compact and expire_replaced, every temp file moved into place by
+    os.replace (the _seq counter, each manifest, each tombstone) was
+    fsynced before the rename. Files are matched by inode, consumed at
+    the rename so that a reused inode cannot stand in for a later file."""
+    synced, replaced = set(), []
+    fsync, replace = os.fsync, os.replace
+
+    def rec_fsync(fd):
+        st = os.fstat(fd)
+        synced.add((st.st_dev, st.st_ino))
+        return fsync(fd)
+
+    def rec_replace(src, dst, *args, **kwargs):
+        st = os.stat(src)
+        replaced.append((str(dst), (st.st_dev, st.st_ino) in synced))
+        synced.discard((st.st_dev, st.st_ino))
+        return replace(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "fsync", rec_fsync)
+    monkeypatch.setattr(os, "replace", rec_replace)
+    t = transcripts_df.limit(50)
+    io.append(spark, t, "dur", "r1", ts_col="ts")
+    io.append(spark, t, "dur", "r2", ts_col="ts")
+    io.compact(spark, "dur", target_files=1)
+    assert io.expire_replaced("dur")["expired_run_ids"] == ["r1", "r2"]
+    ours = [(dst, ok) for dst, ok in replaced if dst.startswith(io.root)]
+    # 3 commits x (_seq + manifest) + 2 tombstones
+    assert len(ours) == 8, ours
+    assert all(ok for _dst, ok in ours), ours
+
+
 def test_incremental_foreign_orphan_raises(spark, transcripts_df, context_df, io):
     """An orphaned incremental errors snapshot from a DIFFERENT job_id
     at the current watermark must abort the run loudly (re-running it

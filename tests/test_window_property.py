@@ -94,24 +94,37 @@ def spark_global(spark):
 
 
 def test_fractional_rolling_window(spark):
-    """Sub-second rolling windows are honored at ms precision — they
-    used to truncate int(0.5)=0 silently (round-3 review)."""
+    """Sub-second rolling windows are exact to the microsecond: the
+    frame is [ts - 0.5 s, ts] in whole µs, so a row 0.500001 s earlier
+    falls outside it and one exactly 0.5 s earlier inside. The pandas
+    oracle agrees on the same rows."""
     from datetime import datetime, timedelta
 
+    import pandas as pd
+
     from engine.operators.core import rolling_range
+    from engine.oracle.features import oracle_features
 
     t0 = datetime(2024, 1, 1)
-    rows = [
-        ("a", 0, t0),
-        ("a", 1, t0 + timedelta(milliseconds=300)),   # within 0.5s of #0
-        ("a", 2, t0 + timedelta(milliseconds=1200)),  # not within 0.5s of #1
+    offsets_us = [
+        0,
+        300_000,    # within 0.5 s of #0
+        1_200_000,  # not within 0.5 s of #1
+        1_700_001,  # 0.500001 s after #2: outside
+        2_200_001,  # exactly 0.5 s after #3: inside
     ]
+    rows = [("a", i, t0 + timedelta(microseconds=us)) for i, us in enumerate(offsets_us)]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts timestamp")
     out = rolling_range(
         df, "conv_id", "ts", 0.5, {"n": "count(1)"}
     )
     got = {r["turn_idx"]: r["n"] for r in out.collect()}
-    assert got == {0: 1, 1: 2, 2: 1}
-    # integral windows keep the original exact-seconds path
+    assert got == {0: 1, 1: 2, 2: 1, 3: 1, 4: 2}
+    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "ts"]).assign(
+        role="user", text="x", tool=None
+    )
+    exp = oracle_features(pdf, roll_window_s=0.5)
+    assert dict(zip(exp["turn_idx"], exp["roll_cnt_5m"])) == got
+    # integral windows: the same frame in whole seconds
     out2 = rolling_range(df, "conv_id", "ts", 2, {"n": "count(1)"})
-    assert {r["turn_idx"]: r["n"] for r in out2.collect()} == {0: 1, 1: 2, 2: 3}
+    assert {r["turn_idx"]: r["n"] for r in out2.collect()} == {0: 1, 1: 2, 2: 3, 3: 4, 4: 4}
